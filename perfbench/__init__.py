@@ -1,0 +1,1 @@
+"""sparksearch benchmark package: ``python3 perfbench/run.py --help``."""
