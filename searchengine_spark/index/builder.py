@@ -82,6 +82,14 @@ def shuffle_partitions(spark: SparkSession) -> int:
         return int(spark.sparkContext.defaultParallelism)
 
 
+def stats_slices(n_shuffle: int, n_buckets: int) -> int:
+    """Term-hash slices per bucket for the stats-relation writes
+    (term_stats, term_repo_stats): ceil(shuffle partitions / buckets),
+    so the write runs ~n_shuffle tasks.  Shared by the builder and
+    maintenance, which rewrites the same relations."""
+    return max(1, -(-n_shuffle // max(n_buckets, 1)))
+
+
 ANALYZED_SCHEMA = "doc_id long, term string, tf int, dl int, repo string"
 
 #: hive partition that holds the per-doc sentinel rows (term="", tf=0,
@@ -449,9 +457,8 @@ def _build_index_staged(
         # partitions), NOT n_partitions x n_buckets, because every
         # (bucket, slice) key lands wholly in one task.  The explicit
         # (bucket, term, doc_id) sort satisfies the dynamic-partition
-        # writer's required ordering AND leaves every file term-sorted,
-        # so the flat-postings count path (_match_stats) prunes row
-        # groups on term instead of scanning whole buckets.
+        # writer's required ordering AND leaves every file term-sorted
+        # (tight term row-group statistics for pruned reads).
         n_flat = shuffle_partitions(spark)
         slices = max(1, -(-4 * n_flat // max(cfg.n_buckets, 1)))  # ceil
         flat_split = F.when(
@@ -608,7 +615,7 @@ def _build_index_staged(
         # one; task count stays ~n_enc (the measured per-task fixed
         # cost on small corpora makes task-count inflation expensive).
         runs_back = spark.read.parquet(runs_path)
-        stat_slices = max(1, -(-n_enc // max(cfg.n_buckets, 1)))  # ceil
+        stat_slices = stats_slices(n_enc, cfg.n_buckets)
         term_stats = runs_back.groupBy("term").agg(
             F.sum("df_run").alias("df"),
             F.sum("cf_run").alias("cf"),

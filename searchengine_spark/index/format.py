@@ -5,11 +5,13 @@ Replaces the reference's four PostgreSQL tables (site/page/lemma/index,
 parquet:
 
 - ``stage1_postings/bucket=<b>/`` — flat postings ``(term, doc_id, tf,
-  dl)``; intermediate + checkpoint unit + oracle-comparable relation
-  (role of the ``index`` table rows, ``model/Index.java:12-23``).
+  dl, repo)`` plus the ``bucket=-1`` doclen sentinels: the stage-1 build
+  checkpoint and the maintenance input (role of the ``index`` table
+  rows, ``model/Index.java:12-23``).  No reader on the query path.
 - ``postings/bucket=<b>/``        — encoded posting *runs*: one row per
   (term, salt) holding delta+varint doc-id blocks with skip/block-max
-  metadata.
+  metadata.  The only postings the query engine reads, for top-k and
+  count alike.
 - ``term_stats/``  — (term, df, cf)           (role of ``lemma`` table)
 - ``term_repo_stats/`` — (term, repo, df)     (per-site df semantics,
   ``Repositories/LemmaRepository.java:25-30``)

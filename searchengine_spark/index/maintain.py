@@ -30,9 +30,11 @@ Scale shape (the 100x contract — VERDICT r4 #3/#4):
   builder's rank order gave the repo one, exact id list otherwise),
   removes the repo's doc_stats and term_repo_stats rows, and leaves
   the postings untouched.  Every query path filters decoded postings
-  through the tombstone set (``operators/wand.ExcludeSet``; the flat
-  paths push an equivalent ``NOT (repo = R AND doc_id <= hi)``
-  predicate) — exactly Lucene's deleted-docs semantics, including the
+  through the tombstone set (``operators/wand.ExcludeSet``; the
+  term_repo_stats recompute over the flat postings pushes the
+  equivalent ``NOT (repo = R AND doc_id <= hi)`` predicate,
+  :func:`tombstone_flat_cond`) — exactly Lucene's deleted-docs
+  semantics, including the
   documented staleness: global df/cf/n_docs/avgdl reflect the
   pre-delete corpus until ``compact()``.  The purge cost is O(stats
   metadata) — the doc_stats/term_repo_stats filter-rewrites touch the
@@ -84,6 +86,7 @@ from searchengine_spark.index.builder import (
     DOC_ROW_BUCKET,
     _footer_rowcounts,
     shuffle_partitions,
+    stats_slices,
 )
 from searchengine_spark.index.format import (
     POSTING_RUN_SCHEMA,
@@ -232,18 +235,6 @@ def tombstone_flat_cond(meta: dict):
     return cond
 
 
-def tombstone_pads_filter(meta: dict):
-    """pyarrow.dataset form of :func:`tombstone_flat_cond` for the
-    driver-side pruned flat reads.  None when no tombstones."""
-    import pyarrow.dataset as pads
-
-    cond = None
-    for t in tombstones(meta):
-        c = ~((pads.field("repo") == t["repo"]) & (pads.field("doc_id") <= t["hi"]))
-        cond = c if cond is None else cond & c
-    return cond
-
-
 # ---------------------------------------------------------------------------
 # stats rewrite (bucket-partitioned, partition-scoped)
 # ---------------------------------------------------------------------------
@@ -269,7 +260,7 @@ def _write_stats_rel(
     mass) and the explicit sort both satisfies the dynamic-partition
     writer's required ordering and pins term-sorted files (tight term
     row-group statistics for the driver-side point lookups)."""
-    slices = max(1, -(-4 * _n_shuffle(spark) // max(cfg.n_buckets, 1)))
+    slices = stats_slices(_n_shuffle(spark), cfg.n_buckets)
     n_parts = max(1, (len(buckets) if buckets is not None else cfg.n_buckets)) * slices
     tmp = path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -751,18 +742,18 @@ def _upsert_sentinel(index_dir: str, doc_id: int, dl: int, repo: str) -> None:
         if not pc.any(mask).as_py():
             continue
         keep = tbl.filter(pc.invert(mask))
-        tmp = frag.path + ".tmp"
+        # both names are dot-prefixed, hidden from Spark and pyarrow
+        # dataset discovery: a crash before the swap leaves the old rows
+        # the only visible ones.  Hadoop's checksum sidecar goes first —
+        # it came from Spark's LocalFS writer and would no longer match
+        # the rewritten bytes, failing every later Spark read
+        d, name = os.path.split(frag.path)
+        tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(keep, tmp)
-        os.replace(tmp, frag.path)
-        # drop Hadoop's checksum sidecar: the original file came from
-        # Spark's LocalFS writer, whose .crc no longer matches the
-        # rewritten bytes and would fail every subsequent Spark read
-        crc = os.path.join(
-            os.path.dirname(frag.path),
-            "." + os.path.basename(frag.path) + ".crc",
-        )
+        crc = os.path.join(d, f".{name}.crc")
         if os.path.exists(crc):
             os.remove(crc)
+        os.replace(tmp, frag.path)
         break
     new_tbl = pa.Table.from_pylist(
         [{"doc_id": doc_id, "term": "", "tf": 0, "dl": dl, "repo": repo}],
@@ -809,8 +800,10 @@ def reindex_doc(
         is_new = False
     else:
         hwm = meta.get("max_doc_id")
-        if hwm is None:  # pre-hwm index: parquet footer statistics only
-            hwm = _max_doc_id_from_footers(index_dir)
+        if hwm is None:  # pre-hwm index: parquet footer statistics,
+            # plus the tombstones (purged from doc_stats, never reused)
+            hwm = max([_max_doc_id_from_footers(index_dir)]
+                      + [t["hi"] for t in tombstones(meta)])
         doc_id = int(hwm) + 1
         commit = commit or ""
         lang = lang or ""
@@ -830,9 +823,8 @@ def reindex_doc(
     #    builder's write shape (ADVICE r4): (bucket, doc-slice)
     #    repartition so no single bucket funnels through one task, and
     #    the explicit (bucket, term, doc_id) sort keeps every file
-    #    term-sorted (the invariant _match_stats/J2 row-group pruning
-    #    relies on).  The doclen sentinel is NOT part of this job — it
-    #    is upserted file-scoped in step 1b.
+    #    term-sorted, like the builder's.  The doclen sentinel is NOT
+    #    part of this job — it is upserted file-scoped in step 1b.
     flat_path = os.path.join(index_dir, "stage1_postings")
     if affected:
         new_df = spark.createDataFrame(

@@ -2,22 +2,26 @@
 ``controllers/ApiController.java:51-54`` ->
 ``services/SearchServiceImpl.java``).
 
-Three scoring paths over the same index, all returning identical
-results (tests assert this):
+Every query reads one representation, the encoded posting runs under
+``postings/`` (partition pruning on bucket + parquet pushdown on term),
+and runs one of two per-salt kernels over them: :func:`_score_salt`
+(block-max top-k) and :func:`_count_salt` (pre-pagination total and
+max Σtf).  A salt group covers the doc subspace ``doc_id ≡ salt (mod
+S)`` for every term, so groups are processed independently and merged
+at the end.  Doc visibility is one rule for both kernels: the repo
+scope (doc-id range or id array) and the tombstone ``ExcludeSet`` are
+applied by ``TermRuns`` as runs are decoded.
 
-- ``engine="flat"`` — the M1 DataFrame spine: Catalyst-only plan over
-  the flat postings parquet (bucket partition pruning + term pushdown,
-  broadcast term stats, groupBy/sum, orderBy/limit).  The
-  oracle-comparable path.
-- ``engine="wand"`` — the M3 path: encoded posting runs, per-salt
-  ``applyInPandas`` vectorized scorer with block-max pruning, per-salt
-  top-k merged by a final tiny sort.  The scale path: work is
-  distributed over doc-salt subspaces, only the query terms' runs are
-  read (partition pruning on bucket + parquet pushdown on term).
-- ``engine="local"`` — same WAND kernel, but reading the pruned
-  parquet row groups driver-side via pyarrow.dataset.  Skips Spark job
-  scheduling entirely: the p50-latency path for interactive queries
-  (SURVEY.md §7.2 "Latency"); identical code path for scoring.
+Two executors run the kernels, with identical results (tests assert
+this):
+
+- ``engine="local"`` — a driver loop over a pruned pyarrow read.  No
+  Spark job: the p50-latency path for interactive queries (SURVEY.md
+  §7.2 "Latency").  Counts use it while the query terms' summed df stays
+  within ``LOCAL_COUNT_MAX_DF``.
+- ``engine="wand"`` — ``groupBy("salt").applyInPandas`` over the same
+  pruned scan, per-salt top-k merged by a final tiny sort.  The scale
+  path; counts above the cap run here too.
 
 Semantics (``mode``):
 
@@ -31,30 +35,81 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.functions.xxhash import bucket_of
-from searchengine_spark.index.maintain import (
-    tombstone_exclude,
-    tombstone_flat_cond,
-    tombstone_pads_filter,
-)
-from searchengine_spark.operators.wand import ExcludeSet, score_salt_group
+from searchengine_spark.index.maintain import tombstone_exclude
+from searchengine_spark.operators.wand import ExcludeSet, TermRuns, score_salt_group
 from searchengine_spark.plans.planner import PlannedQuery, bm25_idf, plan_query
 from searchengine_spark.query.snippets import build_snippet
 from searchengine_spark.sources.corpus import load_corpus
 
 RESULT_SCHEMA = "doc_id long, bm25 double, tf_sum long"
+COUNT_SCHEMA = "total long, max_tf long"
 
-#: count_matches(engine="local") materializes the query terms' flat
-#: postings driver-side; above this many rows it falls back to the
-#: distributed count (a head term at 10^12-doc scale must never be
-#: pulled onto the driver)
+#: the executors :meth:`SearchEngine.search_df` accepts
+ENGINES = ("local", "wand")
+
+#: count_matches(engine="local") decodes the query terms' runs
+#: driver-side; above this summed df it falls back to the distributed
+#: count (a head term at 10^12-doc scale must never be pulled onto the
+#: driver)
 LOCAL_COUNT_MAX_DF = 5_000_000
+
+
+def _runs_by_salt(columns: dict) -> dict[int, dict[str, list[dict]]]:
+    """Run rows grouped by salt, then term.  ``columns``: column name ->
+    array (a pandas or Arrow batch); rows are zipped straight from the
+    arrays — ``DataFrame.to_dict`` costs more than the decode."""
+    names = list(columns)
+    groups: dict[int, dict[str, list[dict]]] = {}
+    for values in zip(*columns.values()):
+        row = dict(zip(names, values))
+        groups.setdefault(row["salt"], {}).setdefault(row["term"], []).append(row)
+    return groups
+
+
+def _score_salt(
+    term_rows, doc_range, exclude, *, idfs, k, mode_and, k1, b, avgdl
+) -> dict:
+    """Top-k ``RESULT_SCHEMA`` columns of one salt group.  An AND query
+    lacking a term in this salt matches nothing here."""
+    if mode_and and len(term_rows) < len(idfs):
+        term_rows = {}
+    docs, bm, tf = score_salt_group(
+        term_rows, idfs, k, mode_and, k1, b, avgdl,
+        doc_range=doc_range, exclude=exclude,
+    )
+    return {"doc_id": docs.astype(np.int64), "bm25": bm, "tf_sum": tf}
+
+
+def _count_salt(term_rows, doc_range, exclude, *, n_terms, mode_and) -> dict:
+    """One ``COUNT_SCHEMA`` row of one salt group: every term's runs
+    decoded through TermRuns, then one ``np.unique`` over the doc ids —
+    AND keeps the docs seen once per query term."""
+    total = max_tf = 0
+    if term_rows and not (mode_and and len(term_rows) < n_terms):
+        decoded = [
+            TermRuns(rows, 0.0, 0.0, 0.0, 1.0, doc_range, exclude).decode_all()
+            for rows in term_rows.values()
+        ]
+        _, inv, hits = np.unique(
+            np.concatenate([d for d, _, _ in decoded]),
+            return_inverse=True,
+            return_counts=True,
+        )
+        tf_sum = np.bincount(inv, weights=np.concatenate([t for _, t, _ in decoded]))
+        if mode_and:
+            tf_sum = tf_sum[hits == n_terms]
+        if tf_sum.size:
+            total, max_tf = int(tf_sum.size), int(tf_sum.max())
+    return {"total": [total], "max_tf": [max_tf]}
 
 
 class SearchEngine:
@@ -67,7 +122,6 @@ class SearchEngine:
         self.n_docs = int(self.meta["n_docs"])
         self.avgdl = float(self.meta["avgdl"]) or 1.0
         self._runs_path = os.path.join(index_dir, "postings")
-        self._flat_path = os.path.join(index_dir, "stage1_postings")
         #: deletion vector from meta.json tombstones (delete_repo in
         #: tombstone mode) — every scoring path filters through it
         #: until compact() clears it; None on a tombstone-free index
@@ -93,6 +147,11 @@ class SearchEngine:
         #: dir swap additionally self-heal: _read_table retries once on
         #: FileNotFoundError).
         self._pads_cache: dict[str, "object"] = {}
+        #: the last driver-side runs read as (term set, rows by salt and
+        #: term): search() runs the top-k and then the count over the
+        #: same terms, so the count reuses the top-k's read — the runs
+        #: read costs several times the decode
+        self._last_runs: tuple = (None, {})
 
     def _dataset(self, rel: str, hive: bool = False):
         """Memoized pyarrow dataset over an index relation dir."""
@@ -122,12 +181,13 @@ class SearchEngine:
             return self._dataset(rel, hive=hive).to_table(**kw)
 
     def refresh(self) -> None:
-        """Drop every memoized view of the index (pyarrow datasets,
-        repo scopes, meta scalars, tombstone vector) and re-read
+        """Drop every memoized view of the index (pyarrow datasets, the
+        last runs read, repo scopes, meta scalars, tombstone vector) and re-read
         meta.json — call on a live engine after a maintenance mutation
         (delete_repo / reindex_doc) instead of constructing a new
         SearchEngine."""
         self._pads_cache.clear()
+        self._last_runs = (None, {})
         self._repo_scope_cache.clear()
         self._repo_ids_cache.clear()
         for bc in self._repo_ids_bc_cache.values():
@@ -276,7 +336,7 @@ class SearchEngine:
         return plan, info3, (n_repo, avgdl_repo or 1.0)
 
     # ------------------------------------------------------------------
-    # scoring paths
+    # executors of the per-salt kernels
     # ------------------------------------------------------------------
     def search_df(
         self,
@@ -288,85 +348,52 @@ class SearchEngine:
         planned: tuple | None = None,
     ) -> DataFrame:
         """Top-k as a DataFrame (doc_id, bm25, tf_sum), deterministic
-        order (bm25 desc, doc_id asc).  ``planned`` lets callers reuse
-        an already-computed ``plan()`` result (one term-dictionary read
-        per request, not one per phase — the p50 path)."""
-        plan, info3, scope = planned if planned is not None else self.plan(query, repo)
-        if plan.empty and mode == "and":
+        order (bm25 desc, doc_id asc).  ``engine`` picks the executor
+        (``"local"`` or ``"wand"``, module docstring).  ``planned`` lets
+        callers reuse an already-computed ``plan()`` result (one
+        term-dictionary read per request, not one per phase — the p50
+        path)."""
+        if engine not in ENGINES:
+            raise ValueError(f"engine must be one of {ENGINES}, got {engine!r}")
+        plan, _, (n_docs, avgdl) = (
+            planned if planned is not None else self.plan(query, repo)
+        )
+        if not plan.ordered or (mode == "and" and plan.empty):
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        if not plan.ordered:
+        kernel = partial(
+            _score_salt,
+            idfs=self._idf_map(plan, n_docs),
+            k=k,
+            mode_and=mode == "and",
+            k1=self.cfg.bm25_k1,
+            b=self.cfg.bm25_b,
+            avgdl=avgdl,
+        )
+        if engine == "wand":
+            per_salt = self._spark_salts(plan, repo, kernel, RESULT_SCHEMA)
+            return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+        outs = self._local_salts(plan, repo, kernel)
+        if not outs:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        if engine == "flat":
-            return self._search_flat(plan, k, mode, repo, scope)
-        if engine == "local":
-            pdf = self._search_local(plan, info3, k, mode, repo, scope)
-            return self.spark.createDataFrame(pdf, RESULT_SCHEMA)
-        return self._search_wand(plan, info3, k, mode, repo, scope)
+        top = pd.DataFrame(
+            {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
+        ).sort_values(["bm25", "doc_id"], ascending=[False, True], kind="mergesort")
+        return self.spark.createDataFrame(top.head(k), RESULT_SCHEMA)
 
     def _idf_map(self, plan: PlannedQuery, n_docs: int) -> dict[str, float]:
         return {t: bm25_idf(df, n_docs) for t, df, _ in plan.ordered}
 
-    def _search_flat(
-        self,
-        plan: PlannedQuery,
-        k: int,
-        mode: str,
-        repo: str | None,
-        scope: tuple[int, float],
-    ) -> DataFrame:
-        """Catalyst-only scoring over flat postings (M1 spine).
-
-        Plan shape: pruned parquet scan (bucket dirs + term pushdown)
-        -> broadcast join with the Q-row idf relation -> hash aggregate
-        per doc -> top-k sort.  No Python in the loop.
-        """
-        spark = self.spark
-        n_docs, avgdl = scope
-        terms = [t for t, _, _ in plan.ordered]
-        idfs = self._idf_map(plan, n_docs)
-        buckets = sorted({self._bucket_of(t) for t in terms})
-        flat = spark.read.parquet(self._flat_path).where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        if repo is not None:
-            flat = flat.where(F.col("repo") == repo)
-        tcond = tombstone_flat_cond(self.meta)
-        if tcond is not None:
-            flat = flat.where(tcond)
-        idf_df = spark.createDataFrame(
-            [(t, float(idfs[t])) for t in terms], "term string, idf double"
-        )
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        scored = flat.join(F.broadcast(idf_df), "term").withColumn(
-            "contrib",
-            F.col("idf")
-            * F.col("tf")
-            * (k1 + 1.0)
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
-        )
-        agg = scored.groupBy("doc_id").agg(
-            F.sum("contrib").alias("bm25"),
-            F.sum("tf").cast("long").alias("tf_sum"),
-            F.count("*").alias("n_terms"),
-        )
-        if mode == "and":
-            agg = agg.where(F.col("n_terms") == len(terms))
-        return (
-            agg.select("doc_id", "bm25", "tf_sum")
-            .orderBy(F.desc("bm25"), F.asc("doc_id"))
-            .limit(k)
-        )
-
     def _bucket_of(self, term: str) -> int:
         return bucket_of(term, self.cfg.n_buckets)
 
-    def _runs_df(self, plan: PlannedQuery, repo: str | None) -> DataFrame:
+    def _runs_df(self, plan: PlannedQuery) -> DataFrame:
+        """The query terms' runs: bucket partition pruning + term
+        pushdown on the postings store."""
         terms = [t for t, _, _ in plan.ordered]
         buckets = sorted({self._bucket_of(t) for t in terms})
-        runs = self.spark.read.parquet(self._runs_path).where(
+        return self.spark.read.parquet(self._runs_path).where(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
-        return runs
 
     def _doc_range(self, repo: str | None):
         """Scoring scope for one repo: a contiguous (lo, hi) range, or
@@ -378,39 +405,52 @@ class SearchEngine:
         ids = self._repo_ids_cache.get(repo)
         return ids if ids is not None else (lo, hi)
 
-    def _search_wand(
-        self,
-        plan: PlannedQuery,
-        info3: dict,
-        k: int,
-        mode: str,
-        repo: str | None,
-        scope: tuple[int, float],
-    ) -> DataFrame:
-        """Distributed per-salt scoring (see module docstring).  Repo
-        scoping stays on the compressed-index path: the scorer restricts
-        itself to the repo's contiguous doc-id range via block metadata
-        (TermRuns.doc_range) — no flat fallback."""
-        n_docs, avgdl = scope
-        idfs = self._idf_map(plan, n_docs)
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        mode_and = mode == "and"
-        n_query_terms = len(plan.ordered)
+    def _local_salts(self, plan: PlannedQuery, repo: str | None, kernel) -> list:
+        """Driver executor: one pruned pyarrow read of the query terms'
+        runs (reused while the term set repeats), then ``kernel`` per
+        salt group — no Spark job."""
+        import pyarrow.dataset as pads
+
+        terms = frozenset(t for t, _, _ in plan.ordered)
+        if self._last_runs[0] != terms:
+            buckets = sorted({self._bucket_of(t) for t in terms})
+            filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
+            tbl = self._read_table("postings", hive=True, filter=filt)
+            self._last_runs = (terms, _runs_by_salt(
+                {c: tbl[c].to_numpy(zero_copy_only=False) for c in tbl.column_names}
+            ))
+        groups = self._last_runs[1]
         doc_range = self._doc_range(repo)
-        # a non-contiguous repo's id array goes to executors as a Spark
-        # broadcast (once per repo per engine), NOT inside every task
-        # closure — a 10^9-doc repo would otherwise serialize a
-        # multi-GB array per task (VERDICT r3 #6)
+        return [kernel(rows, doc_range, self._exclude) for rows in groups.values()]
+
+    def _spark_salts(
+        self, plan: PlannedQuery, repo: str | None, kernel, schema: str
+    ) -> DataFrame:
+        """Distributed executor: ``kernel`` per salt group via
+        ``groupBy("salt").applyInPandas`` over the pruned runs scan."""
+        visibility = self._shipped_visibility(repo)
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            [rows] = _runs_by_salt({c: pdf[c].to_numpy() for c in pdf.columns}).values()
+            return pd.DataFrame(kernel(rows, *visibility()))
+
+        return self._runs_df(plan).groupBy("salt").applyInPandas(run, schema=schema)
+
+    def _shipped_visibility(self, repo: str | None):
+        """Executor-side ``(doc_range, exclude)`` as a zero-arg function
+        for the task closure.  Ranges are tiny and ride the closure; a
+        non-contiguous repo's id array and the tombstone id array go out
+        as Spark broadcasts (one per engine instance), so tasks ship the
+        handle, never the array — a 10^9-doc repo would otherwise
+        serialize a multi-GB array per task (VERDICT r3 #6)."""
+        doc_range = self._doc_range(repo)
         ids_bc = None
         if doc_range is not None and not isinstance(doc_range, tuple):
             if repo not in self._repo_ids_bc_cache:
                 self._repo_ids_bc_cache[repo] = (
                     self.spark.sparkContext.broadcast(doc_range)
                 )
-            ids_bc = self._repo_ids_bc_cache[repo]
-            doc_range = None  # keep the array itself out of the closure
-        # tombstone deletion vector: ranges are tiny (ride the closure);
-        # a non-contiguous id array goes out as a broadcast handle
+            ids_bc, doc_range = self._repo_ids_bc_cache[repo], None
         ex_ranges, ex_ids_bc = (), None
         if self._exclude is not None:
             ex_ranges = tuple(self._exclude.ranges)
@@ -421,74 +461,15 @@ class SearchEngine:
                     )
                 ex_ids_bc = self._exclude_ids_bc
 
-        def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            term_rows: dict[str, list[dict]] = {}
-            for row in pdf.to_dict("records"):
-                term_rows.setdefault(row["term"], []).append(row)
-            if mode_and and len(term_rows) < n_query_terms:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "bm25": pd.Series(dtype="float64"),
-                     "tf_sum": pd.Series(dtype="int64")}
-                )
+        def resolve():
             exclude = None
             if ex_ranges or ex_ids_bc is not None:
                 exclude = ExcludeSet(
                     ex_ranges, ex_ids_bc.value if ex_ids_bc is not None else None
                 )
-            docs, bm, tf = score_salt_group(
-                term_rows, idfs, k, mode_and, k1, b, avgdl,
-                doc_range=ids_bc.value if ids_bc is not None else doc_range,
-                exclude=exclude,
-            )
-            return pd.DataFrame(
-                {"doc_id": docs.astype("int64"), "bm25": bm, "tf_sum": tf}
-            )
+            return (ids_bc.value if ids_bc is not None else doc_range), exclude
 
-        per_salt = self._runs_df(plan, repo).groupBy("salt").applyInPandas(
-            score_group, schema=RESULT_SCHEMA
-        )
-        return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
-
-    def _search_local(
-        self,
-        plan: PlannedQuery,
-        info3: dict,
-        k: int,
-        mode: str,
-        repo: str | None,
-        scope: tuple[int, float],
-    ) -> pd.DataFrame:
-        """Driver-local scoring via pyarrow.dataset pruned reads."""
-        import pyarrow.dataset as pads
-
-        terms = [t for t, _, _ in plan.ordered]
-        buckets = sorted({info3[t][2] for t in terms if t in info3})
-        filt = (pads.field("bucket").isin(buckets)) & (pads.field("term").isin(terms))
-        tbl = self._read_table("postings", hive=True, filter=filt)
-        pdf = tbl.to_pandas()
-        n_docs, avgdl = scope
-        idfs = self._idf_map(plan, n_docs)
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        mode_and = mode == "and"
-        doc_range = self._doc_range(repo)
-        outs = []
-        for _, grp in pdf.groupby("salt"):
-            term_rows: dict[str, list[dict]] = {}
-            for row in grp.to_dict("records"):
-                term_rows.setdefault(row["term"], []).append(row)
-            if mode_and and len(term_rows) < len(terms):
-                continue
-            docs, bm, tf = score_salt_group(
-                term_rows, idfs, k, mode_and, k1, b, avgdl,
-                doc_range=doc_range, exclude=self._exclude,
-            )
-            outs.append(pd.DataFrame({"doc_id": docs.astype("int64"), "bm25": bm, "tf_sum": tf}))
-        if not outs:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "bm25": pd.Series(dtype="float64"), "tf_sum": pd.Series(dtype="int64")})
-        allr = pd.concat(outs, ignore_index=True)
-        allr = allr.sort_values(["bm25", "doc_id"], ascending=[False, True], kind="mergesort")
-        return allr.head(k).reset_index(drop=True)
+        return resolve
 
     # ------------------------------------------------------------------
     # public API mirroring the reference REST surface
@@ -582,12 +563,12 @@ class SearchEngine:
         """Total hit count pre-pagination (reference ``count``,
         SearchServiceImpl.java:171,200).
 
-        ``engine="local"``: pyarrow pruned read of the flat postings
-        (bucket dirs + term pushdown), pandas distinct/AND count — no
+        ``engine="local"`` runs the count kernel on the driver — no
         Spark job.  Guard rail: when the query terms' summed global df
-        exceeds ``LOCAL_COUNT_MAX_DF`` the local path would materialize
-        that many rows on the driver, so it falls through to the
-        distributed plan regardless of what the caller asked for.
+        exceeds ``LOCAL_COUNT_MAX_DF`` the local path would decode that
+        many postings on the driver, so it falls through to the
+        distributed executor regardless of what the caller asked for;
+        any other ``engine`` value runs distributed.
         """
         plan, info3, _ = planned if planned is not None else self.plan(query, repo)
         return self._match_stats(plan, info3, mode, repo, engine)[0]
@@ -601,64 +582,30 @@ class SearchEngine:
         engine: str = "local",
     ) -> tuple[int, int]:
         """(total matches, max Σtf) over the FULL matched-doc set,
-        pre-pagination, from ONE pruned scan of the flat postings.
+        pre-pagination, from the query terms' encoded runs.
 
         The reference computes both on the same pass: ``count`` over
         all matched pages (SearchServiceImpl.java:171,200) and
         ``maxRank`` = max absolute relevance over ALL matched docs
         BEFORE pagination (:149-151) — so a doc's reported relevance is
-        page-invariant.  Engine/guard-rail semantics are
-        :meth:`count_matches`'s (local pyarrow path capped by
-        ``LOCAL_COUNT_MAX_DF``, distributed fallback above it).
+        page-invariant.  Executor choice is :meth:`count_matches`'s.
         """
         if not plan.ordered or (mode == "and" and plan.empty):
             return 0, 0
-        terms = [t for t, _, _ in plan.ordered]
-        buckets = sorted({self._bucket_of(t) for t in terms})
-        total_df = sum(info3[t][0] for t in terms if t in info3)
-        if engine == "local" and total_df > LOCAL_COUNT_MAX_DF:
-            engine = "spark"
-        if engine == "local":
-            import pyarrow.dataset as pads
-
-            filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
-            if repo is not None:
-                filt = filt & (pads.field("repo") == repo)
-            tfilt = tombstone_pads_filter(self.meta)
-            if tfilt is not None:
-                filt = filt & tfilt
-            pdf = self._read_table(
-                "stage1_postings", hive=True,
-                filter=filt, columns=["doc_id", "term", "tf"],
-            ).to_pandas()
-            if pdf.empty:
-                return 0, 0
-            per_doc = pdf.groupby("doc_id").agg(
-                n=("term", "nunique"), tf_sum=("tf", "sum")
+        kernel = partial(_count_salt, n_terms=len(plan.ordered), mode_and=mode == "and")
+        total_df = sum(info3[t][0] for t, _, _ in plan.ordered if t in info3)
+        if engine == "local" and total_df <= LOCAL_COUNT_MAX_DF:
+            outs = self._local_salts(plan, repo, kernel)
+            return (
+                sum(o["total"][0] for o in outs),
+                max((o["max_tf"][0] for o in outs), default=0),
             )
-            if mode == "and":
-                per_doc = per_doc[per_doc["n"] == len(terms)]
-            if per_doc.empty:
-                return 0, 0
-            return int(len(per_doc)), int(per_doc["tf_sum"].max())
-        flat = self.spark.read.parquet(self._flat_path).where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        row = (
+            self._spark_salts(plan, repo, kernel, COUNT_SCHEMA)
+            .agg(F.sum("total"), F.max("max_tf"))
+            .collect()[0]
         )
-        if repo is not None:
-            flat = flat.where(F.col("repo") == repo)
-        tcond = tombstone_flat_cond(self.meta)
-        if tcond is not None:
-            flat = flat.where(tcond)
-        per_doc = flat.groupBy("doc_id").agg(
-            F.countDistinct("term").alias("n"),
-            F.sum("tf").cast("long").alias("tf_sum"),
-        )
-        if mode == "and":
-            per_doc = per_doc.where(F.col("n") == len(terms))
-        row = per_doc.agg(
-            F.count("*").alias("total"), F.max("tf_sum").alias("mx")
-        ).collect()[0]
-        return int(row["total"]), int(row["mx"] or 0)
+        return int(row[0] or 0), int(row[1] or 0)
 
     @staticmethod
     def _doc_keys_condition(metas: list[dict]):

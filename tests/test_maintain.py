@@ -19,6 +19,7 @@ from searchengine_spark.index.builder import build_index, read_flat_postings
 from searchengine_spark.index.maintain import delete_repo, reindex_doc
 from searchengine_spark.query.engine import SearchEngine
 from tests.conftest import CFG
+from tests.oracle import build_oracle_index, oracle_search
 
 
 def _build(spark, rows, out):
@@ -229,11 +230,27 @@ def _multi_repo_subset(corpus_rows):
 
 
 def _scoped_results(eng, query, repo, engine):
-    df = eng.search_df(query, k=20, mode="and", engine=engine, repo=repo)
-    return [
-        (int(r["doc_id"]), round(float(r["bm25"]), 6), int(r["tf_sum"]))
-        for r in df.collect()
-    ]
+    """Every scoped AND match as {((repo, path), bm25, Σtf)} — keyed by
+    identity, since maintenance ids differ from a fresh ranking."""
+    df = eng.search_df(query, k=10**6, mode="and", engine=engine, repo=repo)
+    rows = df.collect()
+    metas = eng._doc_meta([int(r["doc_id"]) for r in rows], need_content=False)  # noqa: SLF001
+    return {
+        ((metas[r["doc_id"]]["repo"], metas[r["doc_id"]]["path"]),
+         round(float(r["bm25"]), 6), int(r["tf_sum"]))
+        for r in rows
+    }
+
+
+def _oracle_scoped(oracle, query, repo):
+    """:func:`_scoped_results` computed by the oracle."""
+    return {
+        (oracle.docs[d][:2], round(bm, 6), tf)
+        for d, bm, tf in oracle_search(
+            oracle, query, k=10**6, mode="and",
+            k1=CFG.bm25_k1, b=CFG.bm25_b, repo=repo,
+        )
+    }
 
 
 def test_new_doc_in_existing_repo_keeps_scoped_search_correct(
@@ -248,11 +265,11 @@ def test_new_doc_in_existing_repo_keeps_scoped_search_correct(
     assert len(repos) >= 2
     first_repo = repos[0]  # widened range would swallow later repos
     live = _build(spark, rows, tmp_path / "live")
-    rec = reindex_doc(
-        spark, live, repo=first_repo, path="src/added/new_doc.py",
-        content="def addedmarker(): return search index engine data text",
-    )
+    added = (first_repo, "src/added/new_doc.py", "", "",
+             "def addedmarker(): return search index engine data text")
+    rec = reindex_doc(spark, live, repo=added[0], path=added[1], content=added[4])
     assert rec["new_doc"]
+    oracle = build_oracle_index([tuple(r) for r in rows] + [added])
 
     eng = SearchEngine(spark, live)
     n, _, lo, hi = eng.repo_scope(first_repo)
@@ -263,15 +280,22 @@ def test_new_doc_in_existing_repo_keeps_scoped_search_correct(
         .where(F.col("repo") == first_repo).select("doc_id").collect()
     }
     for q in ("index search", "data text"):
-        truth = _scoped_results(eng, q, first_repo, "flat")  # repo-column filter
+        truth = _oracle_scoped(oracle, q, first_repo)
+        assert any(key == added[:2] for key, _, _ in truth), q
         for engine_kind in ("local", "wand"):
-            got = _scoped_results(eng, q, first_repo, engine_kind)
-            assert got == truth, (q, engine_kind)
-            assert all(d in repo_ids for d, _, _ in got)
+            assert _scoped_results(eng, q, first_repo, engine_kind) == truth, (
+                q, engine_kind,
+            )
+            ids = eng.search_df(q, k=50, engine=engine_kind, repo=first_repo).collect()
+            assert all(r["doc_id"] in repo_ids for r in ids)
+        for count_engine in ("local", "spark"):
+            assert eng.count_matches(
+                q, repo=first_repo, engine=count_engine
+            ) == len(truth), (q, count_engine)
     # other repos' scoped search is unaffected
     other = repos[1]
-    assert _scoped_results(eng, "index search", other, "local") == _scoped_results(
-        eng, "index search", other, "flat"
+    assert _scoped_results(eng, "index search", other, "local") == _oracle_scoped(
+        oracle, "index search", other
     )
 
 
@@ -514,7 +538,7 @@ def _file_snapshot(index_dir, rels):
     return out
 
 
-def _result_keys(eng, query, k=50, engine="flat"):
+def _result_keys(eng, query, k=50, engine="local"):
     """Matched-doc identity set (repo, path) — BM25-independent, so a
     tombstoned index (stale n_docs/avgdl by design) can be compared
     against a fresh build of the remainder."""
@@ -554,12 +578,15 @@ def test_delete_repo_tombstone_is_metadata_cheap_and_excludes(
     el, ef = SearchEngine(spark, live), SearchEngine(spark, fresh)
     for q in ("index search", "data", "engine text"):
         truth = _result_keys(ef, q)
-        for engine_kind in ("flat", "local", "wand"):
+        for engine_kind in ("local", "wand"):
             assert _result_keys(el, q, engine=engine_kind) == truth, (
                 q, engine_kind,
             )
         # pre-pagination count (the _match_stats scan) excludes too
-        assert el.count_matches(q) == ef.count_matches(q), q
+        for count_engine in ("local", "spark"):
+            assert el.count_matches(q, engine=count_engine) == len(truth), (
+                q, count_engine,
+            )
     # per-repo statistics no longer see the repo (rows purged at
     # tombstone time); totals' lemma count stays pre-delete by design
     s = el.statistics()["statistics"]
@@ -624,17 +651,23 @@ def test_tombstone_noncontiguous_repo_excluded_exactly(
     assert meta["tombstones"][0]["ids"], "exact id list expected"
 
     eng = SearchEngine(spark, live)
-    for engine_kind in ("flat", "local", "wand"):
+    for engine_kind in ("local", "wand"):
         assert not eng.search_df(
             "tombstonedsoon", k=5, engine=engine_kind
         ).collect(), engine_kind
     remaining = [r for r in rows if r[0] != victim]
     fresh = _build(spark, remaining, tmp_path / "fresh")
     ef = SearchEngine(spark, fresh)
-    for q in ("index search", "data text"):
+    for q in ("index search", "data text", "tombstonedsoon"):
         truth = _result_keys(ef, q)
-        for engine_kind in ("flat", "local", "wand"):
+        for engine_kind in ("local", "wand"):
             assert _result_keys(eng, q, engine=engine_kind) == truth
+        # the tombstone's explicit id list masks the count on both
+        # executors (the distributed one ships it as a broadcast)
+        for count_engine in ("local", "spark"):
+            assert eng.count_matches(q, engine=count_engine) == len(truth), (
+                q, count_engine,
+            )
 
 
 def test_tombstone_then_readd_same_repo_name(spark, corpus_rows, tmp_path):
@@ -656,7 +689,7 @@ def test_tombstone_then_readd_same_repo_name(spark, corpus_rows, tmp_path):
     hits = eng.search("resurrectmarker", limit=5)
     assert hits["count"] == 1 and hits["data"][0]["site"] == victim
     # repo-scoped search sees ONLY the new doc
-    for engine_kind in ("flat", "local", "wand"):
+    for engine_kind in ("local", "wand"):
         got = eng.search_df(
             "index search", k=50, engine=engine_kind, repo=victim
         ).collect()
@@ -749,3 +782,89 @@ def test_postings_stay_term_sorted_after_reindex(spark, corpus_rows, tmp_path):
     )
     _assert_term_sorted_files(live, "postings")
     _assert_term_sorted_files(live, "stage1_postings")
+
+
+# ---------------------------------------------------------------------------
+# maintenance hygiene: id high-water mark, crash-safe sentinel rewrite,
+# builder-shaped stats writes
+# ---------------------------------------------------------------------------
+
+def test_pre_hwm_fallback_never_reuses_tombstoned_ids(spark, corpus_rows, tmp_path):
+    """On an index whose meta.json lacks max_doc_id, a new doc's id must
+    clear every tombstone too: tombstone-mode delete_repo purges the
+    repo's doc_stats rows, so the footer statistics alone would hand
+    out an id inside the deleted range, and the new doc would be masked
+    on every query path."""
+    import json
+
+    rows = _multi_repo_subset(corpus_rows)
+    repos = sorted({r[0] for r in rows})
+    live = _build(spark, rows, tmp_path / "live")
+    delete_repo(spark, live, repos[-1])  # rank order: the top id block
+    mp = os.path.join(live, "meta.json")
+    with open(mp) as f:
+        meta = json.load(f)
+    hi = meta["tombstones"][0]["hi"]
+    assert hi == len(rows) - 1
+    meta.pop("max_doc_id")
+    with open(mp, "w") as f:
+        json.dump(meta, f)
+
+    rec = reindex_doc(
+        spark, live, repo=repos[0], path="src/after_tombstone.py",
+        content="posttombstonemarker alpha",
+    )
+    assert rec["new_doc"] and rec["doc_id"] > hi
+    eng = SearchEngine(spark, live)
+    assert eng.search("posttombstonemarker", limit=5)["count"] == 1
+
+
+def test_sentinel_upsert_crash_keeps_visible_rows(
+    spark, corpus_rows, tmp_path, monkeypatch
+):
+    """A crash between writing the rewritten sentinel holder and
+    swapping it in must leave readers the old rows only: the temp file
+    has a name both Spark and pyarrow dataset discovery skip."""
+    import pyarrow.dataset as pads
+
+    from searchengine_spark.index.builder import DOC_ROW_BUCKET
+    from searchengine_spark.index.maintain import _upsert_sentinel
+
+    live = _build(spark, corpus_rows[:15], tmp_path / "live")
+    sdir = os.path.join(live, "stage1_postings", f"bucket={DOC_ROW_BUCKET}")
+
+    def visible():
+        rows = pads.dataset(sdir, format="parquet").to_table().to_pylist()
+        return sorted(rows, key=lambda r: r["doc_id"])
+
+    before = visible()
+
+    def crash(*_a, **_kw):
+        raise OSError("crash before the swap")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError):
+        _upsert_sentinel(live, 3, 99, corpus_rows[0][0])
+    monkeypatch.undo()
+    assert visible() == before
+    assert spark.read.parquet(sdir).count() == len(before)
+
+
+def test_reindex_stats_writes_keep_builder_file_count(spark, corpus_rows, tmp_path):
+    """The stats relations a reindex_doc rewrites are sliced like the
+    builder's: no touched bucket dir ends up with more files than the
+    build wrote there."""
+    live = _build(spark, corpus_rows[:40], tmp_path / "live")
+
+    def n_files(rel, b):
+        d = os.path.join(live, rel, f"bucket={b}")
+        return sum(f.endswith(".parquet") for f in os.listdir(d))
+
+    rels = ("term_stats", "term_repo_stats")
+    built = {(r, b): n_files(r, b) for r in rels for b in range(CFG.n_buckets)}
+    target = corpus_rows[7]
+    rec = reindex_doc(spark, live, target[0], target[1], "slice count probe tokens")
+    assert rec["buckets_rewritten"]
+    for rel in rels:
+        for b in rec["buckets_rewritten"]:
+            assert n_files(rel, b) <= built[(rel, b)], (rel, b)

@@ -1,7 +1,8 @@
 """Search correctness vs the oracle: rank-identical top-k, BM25 score
 tolerance 1e-6 (order exact with doc_id tie-break), Σtf reference
-relevance, engine-path equivalence (flat == wand == local ==
-wand-unpruned), pagination, guards (SURVEY.md §5.4/5.6)."""
+relevance, executor equivalence (local == wand, pruned == unpruned),
+pre-pagination counts on both executors, pagination, guards
+(SURVEY.md §5.4/5.6)."""
 
 from __future__ import annotations
 
@@ -27,7 +28,17 @@ QUERIES = [
     "build merge split",
 ]
 
-ENGINES = ["flat", "wand", "local"]
+ENGINES = ["wand", "local"]
+
+#: the count executor that matches each search_df engine
+COUNT_ENGINE = {"local": "local", "wand": "spark"}
+
+
+def _oracle_count(oracle_index, query, mode, repo=None):
+    return len(oracle_search(
+        oracle_index, query, k=10**6, mode=mode, k1=CFG.bm25_k1, b=CFG.bm25_b,
+        search_filter_pct=CFG.search_filter_pct, repo=repo,
+    ))
 
 
 def _rows(df):
@@ -50,19 +61,30 @@ def test_rank_identical_to_oracle(engine, oracle_index, query, mode):
     for (gd, gb, gt), (wd, wb, wt) in zip(got, want):
         assert abs(gb - wb) < 1e-6, (query, gd)
         assert gt == wt, (query, gd)
+    count = _oracle_count(oracle_index, query, mode)
+    for executor in COUNT_ENGINE.values():
+        assert engine.count_matches(query, mode=mode, engine=executor) == count, executor
 
 
 @pytest.mark.parametrize("query", ["index search", "def return", "commonterm index", "42"])
 @pytest.mark.parametrize("mode", ["and", "or"])
 def test_engine_paths_agree(engine, query, mode):
-    results = {e: _rows(engine.search_df(query, k=10, mode=mode, engine=e)) for e in ENGINES}
-    base = results["flat"]
-    for other in ("wand", "local"):
-        rows = results[other]
-        assert [r[0] for r in rows] == [r[0] for r in base], other
-        assert [r[2] for r in rows] == [r[2] for r in base], other
-        for (_, gb, _), (_, wb, _) in zip(rows, base):
-            assert abs(gb - wb) < 1e-9, other
+    base = _rows(engine.search_df(query, k=10, mode=mode, engine="local"))
+    rows = _rows(engine.search_df(query, k=10, mode=mode, engine="wand"))
+    assert [r[0] for r in rows] == [r[0] for r in base]
+    assert [r[2] for r in rows] == [r[2] for r in base]
+    for (_, gb, _), (_, wb, _) in zip(rows, base):
+        assert abs(gb - wb) < 1e-9
+
+
+@pytest.mark.parametrize("bad", ["flat", "spark"])
+def test_unknown_engine_is_rejected(engine, bad):
+    """A caller still asking for a removed or misspelled executor fails
+    loudly instead of silently running another one."""
+    with pytest.raises(ValueError, match="engine"):
+        engine.search_df("index", engine=bad)
+    with pytest.raises(ValueError, match="engine"):
+        engine.search("index search", engine=bad)
 
 
 def test_blockmax_pruned_equals_exhaustive(engine, oracle_index):
@@ -75,7 +97,7 @@ def test_blockmax_pruned_equals_exhaustive(engine, oracle_index):
             continue
         import os
 
-        runs = engine._runs_df(plan, None).collect()
+        runs = engine._runs_df(plan).collect()
         by_salt: dict[int, dict[str, list]] = {}
         for r in runs:
             by_salt.setdefault(r["salt"], {}).setdefault(r["term"], []).append(r.asDict())
@@ -197,8 +219,7 @@ def test_high_df_pruning_via_config(spark, index_dir, oracle_index):
 def test_repo_scoped_search_rank_identical(engine, oracle_index, eng_path, query):
     """Scoped queries use per-repo planning + scoring (reference
     per-site loop) and stay rank-identical to the per-repo oracle on
-    every engine path — including the compressed-index WAND path (no
-    flat fallback)."""
+    both executors, and their pre-pagination counts match it too."""
     repos = sorted({d[0] for d in oracle_index.docs})
     for repo in repos[:2]:
         for mode in ("and", "or"):
@@ -210,6 +231,9 @@ def test_repo_scoped_search_rank_identical(engine, oracle_index, eng_path, query
             for (gd, gb, gt), (wd, wb, wt) in zip(got, want):
                 assert abs(gb - wb) < 1e-6, (repo, mode, gd)
                 assert gt == wt
+            assert engine.count_matches(
+                query, mode=mode, repo=repo, engine=COUNT_ENGINE[eng_path]
+            ) == _oracle_count(oracle_index, query, mode, repo), (repo, mode)
 
 
 def test_repo_scoped_guard_term_missing_in_repo(engine, oracle_index):
@@ -257,6 +281,27 @@ def test_repo_scoped_df_threshold_uses_repo_pages(engine, oracle_index):
 def test_search_without_count_skips_second_scan(engine):
     r = engine.search("index search", limit=3, with_count=False)
     assert r["result"] is True and r["count"] == -1 and r["data"]
+
+
+def test_search_reads_runs_once_for_topk_and_count(spark, index_dir, monkeypatch):
+    """search() runs the top-k and the count over the same runs: the
+    count reuses the top-k's driver-side read, and refresh() drops it."""
+    from searchengine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_dir)
+    reads = []
+    read_table = eng._read_table  # noqa: SLF001
+
+    def counting(rel, *a, **kw):
+        reads.append(rel)
+        return read_table(rel, *a, **kw)
+
+    monkeypatch.setattr(eng, "_read_table", counting)
+    first = eng.search("index search", limit=3, engine="local")
+    assert first["count"] > 0 and reads.count("postings") == 1
+    eng.refresh()
+    assert eng.search("index search", limit=3, engine="local") == first
+    assert reads.count("postings") == 2
 
 
 def test_count_local_falls_back_to_spark_above_df_cap(engine, monkeypatch):
@@ -363,24 +408,23 @@ def test_exclude_set_overlaps_block_metadata():
 
 
 def test_match_stats_scan_is_row_group_pruned(engine):
-    """VERDICT r4 #6: search(with_count=True) pays one _match_stats
-    pruned scan of the flat postings — assert (timing-free) that the
-    pruning is real: hive partition pruning keeps only the query
-    terms' bucket dirs, and parquet row-group statistics keep only row
-    groups whose term min/max straddles a query term."""
+    """VERDICT r4 #6: search(with_count=True) pays one pruned scan of
+    the encoded runs, shared by top-k and count — assert (timing-free)
+    that the pruning is real: hive partition pruning keeps only the
+    query terms' bucket dirs, and parquet row-group statistics keep
+    only row groups whose term min/max straddles a query term."""
     import pyarrow.dataset as pads
 
     terms = ["getmanager"]  # rare term: prunes hard
     info = engine.term_info(terms)
     assert terms[0] in info
     buckets = sorted({info[t][2] for t in terms})
-    ds = engine._dataset("stage1_postings", hive=True)  # noqa: SLF001
+    ds = engine._dataset("postings", hive=True)  # noqa: SLF001
 
     all_frags = list(ds.get_fragments())
     filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
     kept_frags = list(ds.get_fragments(filter=filt))
-    # partition pruning: only the term's bucket dir survives (the
-    # sentinel bucket=-1 dir and every other bucket dir are skipped)
+    # partition pruning: only the term's bucket dir survives
     assert 0 < len(kept_frags) < len(all_frags)
     for frag in kept_frags:
         assert f"bucket={buckets[0]}" in frag.path

@@ -19,6 +19,7 @@ import io
 import shutil
 import sys
 from contextlib import redirect_stdout
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -43,7 +44,7 @@ def main() -> None:
     from searchengine_spark import IndexConfig, get_spark
     from searchengine_spark.index.builder import DOC_ROW_BUCKET, build_index
     from searchengine_spark.operators.dedup import lsh_candidate_pairs
-    from searchengine_spark.query.engine import SearchEngine
+    from searchengine_spark.query.engine import COUNT_SCHEMA, SearchEngine, _count_salt
     from searchengine_spark.sources.corpus import generate_corpus
 
     spark = get_spark(cores=8)
@@ -58,25 +59,33 @@ def main() -> None:
 
     plans: list[tuple[str, str, str, list[str]]] = []
 
-    plan, info3, scope = eng.plan("index search")
-    flat = eng._search_flat(plan, 10, "and", None, scope)
-    plans.append((
-        "flat-path BM25 scoring (pruned scan + broadcast idf + topk)",
-        "PartitionFilters prune to the query terms' bucket dirs; "
-        "PushedFilters carry the term IN-list to the parquet reader; "
-        "the Q-row idf relation is a BroadcastHashJoin build side; "
-        "top-k is TakeOrderedAndProject, never a global sort.",
-        fmt(flat),
-        ["TakeOrderedAndProject", "BroadcastHashJoin", "PushedFilters"],
-    ))
-
-    runs = eng._runs_df(plan, None)
+    plan, _, _ = eng.plan("index search")
+    runs = eng._runs_df(plan)
     plans.append((
         "encoded-run fetch (J2: the WAND input scan)",
         "Reads ONLY the query terms' runs: bucket partition pruning + "
         "term pushdown on the postings store.",
         fmt(runs),
         ["PushedFilters"],
+    ))
+
+    count_kernel = partial(_count_salt, n_terms=len(plan.ordered), mode_and=True)
+    count = eng._spark_salts(plan, None, count_kernel, COUNT_SCHEMA).agg(
+        F.sum("total"), F.max("max_tf")
+    )
+    ctext = fmt(count)
+    assert "In(term" in ctext.split("PushedFilters", 1)[1].split("\n", 1)[0], (
+        "distributed count lost the term pushdown on its runs scan"
+    )
+    plans.append((
+        "distributed match count (count_matches above LOCAL_COUNT_MAX_DF)",
+        "The count decodes the same pruned runs scan as the top-k: "
+        "PartitionFilters keep the query terms' bucket dirs, "
+        "PushedFilters carry the term IN-list to the parquet reader, "
+        "and each salt group is counted by one FlatMapGroupsInPandas "
+        "call before a final one-row aggregate.",
+        ctext,
+        ["PushedFilters", "PartitionFilters", "FlatMapGroupsInPandas"],
     ))
 
     doclens = (
@@ -92,17 +101,6 @@ def main() -> None:
         "whole postings relation.",
         fmt(doclens),
         ["PartitionFilters"],
-    ))
-
-    p2, _, scope2 = eng.plan("index", "repo-001")
-    assert p2.ordered, "fixture term must exist in repo-001"
-    scoped = eng._search_flat(p2, 10, "and", "repo-001", scope2)
-    plans.append((
-        "repo-scoped flat scoring (repo pushdown on top of term pruning)",
-        "The repo equality predicate reaches the reader alongside the "
-        "term IN-list (row-group stats prune on both).",
-        fmt(scoped),
-        ["PushedFilters"],
     ))
 
     corpus_path = "/tmp/plans_corpus"
