@@ -5,14 +5,15 @@ Two shuffle stages (SURVEY.md §3.2 "Spark rebuild"):
 
 - **Stage 1 — scan/analyze**: corpus scan -> deterministic doc-id
   assignment -> vectorized tokenize+lemmatize+tf Arrow UDF
-  (``mapInPandas``; replaces the inline ``LemmaFinder.collectLemmas``
-  call at ``IndexingServiceImpl.java:337-338``) -> flat postings
-  ``(term, doc_id, tf, dl, repo)`` written partitioned by
-  ``bucket = pmod(xxhash64(term), P)``, plus ``doc_stats``.
-- **Stage 2 — shuffle/encode**: flat postings -> salt =
-  ``pmod(doc_id, S)`` -> (term, salt) sort-merge shuffle ->
-  ``mapInArrow`` block encoder (delta+varint+skip+block-max) ->
-  ``postings/`` runs + ``term_stats`` + ``term_repo_stats``.
+  (``mapInArrow``; replaces the inline ``LemmaFinder.collectLemmas``
+  call at ``IndexingServiceImpl.java:337-338``) -> ``doc_stats``: one
+  row per doc with its doclen and its forward index (``terms`` in
+  sorted order, their ``tfs``).  doc_stats is the stage-1 checkpoint.
+- **Stage 2 — shuffle/encode**: doc_stats exploded to postings
+  ``(term, doc_id, tf, dl, repo)`` -> salt = ``pmod(doc_id, S)`` ->
+  (term, salt) sort-merge shuffle -> ``mapInArrow`` block encoder
+  (delta+varint+skip+block-max) -> ``postings/`` runs + ``term_stats``
+  + ``term_repo_stats``.
 
 The reference buffers every posting of the whole crawl in one in-memory
 set and flushes once (``LemmaFinder.java:32,113-115``,
@@ -22,14 +23,13 @@ IS the stage-2 shuffle, with spill-to-disk for free.
 Fixed-overhead design (the part that must NOT grow with cluster size,
 for the N->4N scaling-efficiency bar):
 
-- doclen rides the analyze output as one sentinel row per doc
-  (``term=""`` routed to partition ``bucket=-1``), so ``doc_stats``
-  needs a partition-pruned read of n_docs tiny rows — NOT a groupBy
-  shuffle of the entire postings relation;
-- corpus n/avgdl are collected by an ``Observation`` attached to the
-  doc_stats write (zero extra jobs);
-- per-bucket posting counts and the term-dictionary cardinality come
-  from parquet footer metadata (driver-side, no job, no data read);
+- the analyze kernel sees each document whole, so doclen and the
+  forward index are computed in-batch and written on the doc's own
+  doc_stats row — no groupBy shuffle of the postings, no join;
+- corpus n/sum_dl and the posting count are collected by an
+  ``Observation`` attached to the doc_stats write (zero extra jobs);
+- the term-dictionary cardinality comes from parquet footer metadata
+  (driver-side, no job, no data read);
 - per-bucket lineage bytes aggregate the encoder-emitted ``n_bytes``
   column — the compressed blobs themselves are never re-read.
 
@@ -44,12 +44,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from searchengine_spark.analyzer import term_frequencies
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.index.format import (
+    DOC_STATS_SCHEMA,
+    INDEX_FORMAT,
     POSTING_RUN_SCHEMA,
     encode_partition_arrow,
 )
@@ -90,13 +92,6 @@ def stats_slices(n_shuffle: int, n_buckets: int) -> int:
     return max(1, -(-n_shuffle // max(n_buckets, 1)))
 
 
-ANALYZED_SCHEMA = "doc_id long, term string, tf int, dl int, repo string"
-
-#: hive partition that holds the per-doc sentinel rows (term="", tf=0,
-#: dl=doclen) emitted by the analyze kernel alongside real postings.
-#: Readers of real postings filter ``bucket >= 0`` (partition-pruned).
-DOC_ROW_BUCKET = -1
-
 #: Spark job group tag for build jobs — the handle :func:`cancel_build`
 #: cancels (the reference's ``GET /api/stopIndexing`` flag,
 #: ``IndexingServiceImpl.java:157-165``, re-expressed as job-group
@@ -116,12 +111,42 @@ def cancel_build(spark: SparkSession) -> None:
     spark.sparkContext.cancelJobGroup(BUILD_JOB_GROUP)
 
 
-def read_flat_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The flat postings relation ``(term, doc_id, tf, dl, repo, bucket)``
-    — real postings only (partition-prunes the ``bucket=-1`` doc-row
-    sentinels away).  Canonical read path for stage1_postings."""
-    return spark.read.parquet(os.path.join(index_dir, "stage1_postings")).where(
-        F.col("bucket") >= 0
+def doc_postings(spark: SparkSession, index_dir: str, n_buckets: int) -> DataFrame:
+    """The doc_stats forward index exploded to postings ``(term, doc_id,
+    tf, dl, repo, bucket)``, ``bucket = pmod(xxhash64(term), P)`` — the
+    stage-2 input.  Reads only the narrow columns (never content)."""
+    pair = F.explode(F.arrays_zip("terms", "tfs")).alias("p")
+    return (
+        spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        .select("doc_id", F.col("doclen").alias("dl"), "repo", pair)
+        .select(
+            F.col("p.terms").alias("term"), "doc_id",
+            F.col("p.tfs").alias("tf"), "dl", "repo",
+        )
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+    )
+
+
+def encoder_input(postings: DataFrame, n_salts: int, n_enc: int) -> DataFrame:
+    """Postings -> the block encoder's input: salted by ``pmod(doc_id,
+    S)``, shuffled on (term, salt) into ``n_enc`` partitions and sorted
+    so every (term, salt) run is contiguous and doc-ordered.
+
+    Partition key = (term, salt), NOT (bucket, salt): the encoder only
+    needs each run contiguous, and hashing the vocabulary-sized key
+    space balances the encode stage at any partition count, whereas
+    hash(bucket, salt) has only n_buckets x n_salts distinct values.
+    The explicit numPartitions (the user's shuffle-sizing knob)
+    decouples encode parallelism from the index layout and pins it
+    against AQE.  The leading ``bucket`` sort key (functionally
+    determined by term, so run contiguity is preserved) lets the
+    dynamic-partitionBy write reuse the sort instead of inserting its
+    own."""
+    return (
+        postings.select("term", "doc_id", "tf", "dl", "bucket")
+        .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int"))
+        .repartition(n_enc, "term", "salt")
+        .sortWithinPartitions("bucket", "term", "salt", "doc_id")
     )
 
 
@@ -162,7 +187,7 @@ def _assign_doc_ids(
 
     The second return value is the persisted range-partitioned parent;
     the caller MUST ``unpersist()`` it once the result has been
-    materialized (the builder does so after the flat-postings write).
+    materialized (the builder does so after the doc_stats write).
     """
     spark = docs.sparkSession
     if num_partitions is None:
@@ -198,108 +223,59 @@ def _assign_doc_ids(
     return out, arranged
 
 
-def _analyze_partitions(iterator):
-    """mapInPandas kernel: (doc_id, repo, content) -> postings rows.
+def analyze_doc_batch(batch, keep_content: bool):
+    """One batch of doc rows (``doc_id``, ``content`` and any metadata
+    columns) -> the same rows as doc_stats rows: ``content`` dropped
+    (kept last when ``keep_content``), and ``doclen``, ``terms`` and
+    ``tfs`` appended.  ``terms`` holds the doc's terms in sorted order,
+    ``tfs`` their counts, and ``doclen = Σ tfs``.
 
-    Vectorized end-to-end (searchengine_spark.analyzer); doclen = Σtf is
-    computed in-batch because each document is exactly one input row.
-    Besides real postings, emits ONE sentinel row per input doc
-    ``(doc_id, term="", tf=0, dl=doclen, repo)`` — the carrier that
-    gets doclen into doc_stats without a postings-wide shuffle (the
-    builder routes these to partition ``bucket=-1``).
-    """
-    import pandas as pd  # local import: runs on executors
-
-    for pdf in iterator:
-        tf = term_frequencies(pdf["doc_id"], pdf["content"])
-        frames = []
-        if not tf.empty:
-            tf["dl"] = (
-                tf.groupby("doc_id", sort=False)["tf"].transform("sum").astype("int32")
-            )
-            repo_map = pd.Series(pdf["repo"].values, index=pdf["doc_id"].values)
-            tf["repo"] = tf["doc_id"].map(repo_map)
-            frames.append(tf[["doc_id", "term", "tf", "dl", "repo"]])
-            dl_per_doc = tf.groupby("doc_id", sort=False)["dl"].first()
-        else:
-            dl_per_doc = pd.Series(dtype="int64")
-        doc_rows = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].values,
-                "term": "",
-                "tf": 0,
-                "dl": pdf["doc_id"].map(dl_per_doc).fillna(0).astype("int32"),
-                "repo": pdf["repo"].values,
-            }
-        )
-        frames.append(doc_rows[["doc_id", "term", "tf", "dl", "repo"]])
-        yield frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-
-
-def _analyze_partitions_arrow(iterator):
-    """mapInArrow kernel: (doc_id, repo, content) RecordBatches ->
-    ANALYZED_SCHEMA batches.  Arrow-native twin of
-    :func:`_analyze_partitions` (which stays in use on the inline-search
-    path and as the parity reference): the analyzer and the (doc_id,
-    term) tf count run entirely in Arrow compute kernels
-    (analyzer.analyze_batch_arrow) — pandas ``.str`` ops dispatch a
-    Python call per element, which dominated stage 1.  Per input batch
-    it emits one postings batch and one sentinel batch (term="", tf=0,
-    dl=doclen — the doc_stats carrier, see module docstring)."""
+    The analyzer and the (doc_id, term) tf count run in Arrow compute
+    kernels (analyzer.analyze_batch_arrow); each doc is exactly one
+    input row, so doclen and the forward index need no shuffle.  Shared
+    by the build (through :func:`_analyze_partitions_arrow`) and the
+    single-doc re-index (index/maintain.py)."""
+    import numpy as np
     import pyarrow as pa
 
     from searchengine_spark.analyzer import analyze_batch_arrow
 
-    analyzed_schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("term", pa.string()),
-            ("tf", pa.int32()),
-            ("dl", pa.int32()),
-            ("repo", pa.string()),
-        ]
+    n = batch.num_rows
+    ids = batch.column("doc_id")
+    tf = analyze_batch_arrow(ids, batch.column("content")).combine_chunks()
+    bids = ids.to_numpy(zero_copy_only=False).astype(np.int64)
+    order = np.argsort(bids, kind="stable")
+    # input row of every posting, then postings sorted by (row, term)
+    row = order[np.searchsorted(bids[order], tf.column("doc_id").to_numpy())]
+    tf = tf.append_column("row", pa.array(row)).sort_by(
+        [("row", "ascending"), ("term", "ascending")]
     )
-    import numpy as np
+    row = tf.column("row").to_numpy()
+    tfs = tf.column("tf").combine_chunks()
+    offsets = pa.array(
+        np.concatenate(([0], np.cumsum(np.bincount(row, minlength=n)))).astype(np.int32)
+    )
+    # exact: int-valued float64 sums stay < 2^53
+    doclen = np.bincount(row, weights=tfs.to_numpy(), minlength=n).astype(np.int32)
+    names = [c for c in batch.schema.names if c != "content"]
+    cols = [batch.column(c) for c in names] + [
+        pa.array(doclen),
+        pa.ListArray.from_arrays(offsets, tf.column("term").combine_chunks()),
+        pa.ListArray.from_arrays(offsets, tfs),
+    ]
+    names += ["doclen", "terms", "tfs"]
+    if keep_content:
+        cols.append(batch.column("content"))
+        names.append("content")
+    return pa.RecordBatch.from_arrays(cols, names=names)
 
+
+def _analyze_partitions_arrow(iterator, keep_content: bool):
+    """mapInArrow kernel: doc-row batches -> doc_stats batches
+    (:func:`analyze_doc_batch`)."""
     for batch in iterator:
-        n = batch.num_rows
-        if n == 0:
-            continue
-        ids = batch.column(batch.schema.get_field_index("doc_id"))
-        repos = batch.column(batch.schema.get_field_index("repo"))
-        texts = batch.column(batch.schema.get_field_index("content"))
-        tf = analyze_batch_arrow(ids, texts).combine_chunks()
-        bids = ids.to_numpy(zero_copy_only=False).astype(np.int64)
-        order = np.argsort(bids, kind="stable")
-        sorted_bids = bids[order]
-        dl_batch = np.zeros(n, dtype=np.int64)
-        if tf.num_rows:
-            tf_ids = tf.column("doc_id").to_numpy(zero_copy_only=False)
-            tf_np = tf.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-            idx = order[np.searchsorted(sorted_bids, tf_ids)]
-            # exact: int-valued float64 sums stay < 2^53
-            dl_batch = np.bincount(idx, weights=tf_np, minlength=n).astype(np.int64)
-            idx_arr = pa.array(idx)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    tf.column("doc_id").chunk(0),
-                    tf.column("term").chunk(0),
-                    tf.column("tf").chunk(0),
-                    pa.array(dl_batch[idx].astype(np.int32)),
-                    repos.take(idx_arr),
-                ],
-                schema=analyzed_schema,
-            )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(bids),
-                pa.array([""] * n, pa.string()),
-                pa.array(np.zeros(n, dtype=np.int32)),
-                pa.array(dl_batch.astype(np.int32)),
-                repos,
-            ],
-            schema=analyzed_schema,
-        )
+        if batch.num_rows:
+            yield analyze_doc_batch(batch, keep_content)
 
 
 def _footer_rowcounts(path: str) -> dict[str, int]:
@@ -420,10 +396,13 @@ def _build_index_staged(
     store_content: bool,
 ) -> dict:
     os.makedirs(out_dir, exist_ok=True)
-    fingerprint = {"source": source, "config": cfg.to_json(), "content": store_content}
+    fingerprint = {
+        "source": source, "config": cfg.to_json(), "content": store_content,
+        "format": INDEX_FORMAT,
+    }
     metrics: dict = {}
 
-    # ---------------- Stage 1: scan + analyze + flat postings ------------
+    # ---------------- Stage 1: scan + analyze -> doc_stats ---------------
     m1 = None if force else _load_manifest(out_dir, "stage1")
     if m1 is not None and m1.get("fingerprint") == fingerprint:
         metrics["stage1"] = m1
@@ -431,61 +410,18 @@ def _build_index_staged(
         t0 = time.time()
         c0 = _step_cpu()
         with_ids, arranged = _assign_doc_ids(docs)
-        with_ids = with_ids.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-
-        analyzed = with_ids.select("doc_id", "repo", "content").mapInArrow(
-            _analyze_partitions_arrow, schema=ANALYZED_SCHEMA
-        )
-        flat = analyzed.withColumn(
-            "bucket",
-            F.when(F.col("term") == "", F.lit(DOC_ROW_BUCKET))
-            .otherwise(F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)))
-            .cast("int"),
-        )
-        flat_path = os.path.join(out_dir, "stage1_postings")
-        # Write balance without file explosion.  Keying the shuffle on
-        # bucket alone has two scale flaws: (a) n_buckets+1 distinct
-        # keys hash into as many bins with balls-in-bins collisions
-        # (skewed tasks, idle cores), and (b) the sentinel pseudo-bucket
-        # (term="", one row per doc) is ONE key — at 10^12 docs that is
-        # 10^12 rows through a single task.  So each regular bucket is
-        # split into C doc-slices (C sized so distinct keys ~ 4x the
-        # partition count; at production bucket counts C collapses to 1
-        # and the layout-aligned write is preserved), and the sentinel
-        # bucket spreads over all partitions (its rows are tiny).
-        # Total file count stays ~ max(n_buckets, 4 x shuffle
-        # partitions), NOT n_partitions x n_buckets, because every
-        # (bucket, slice) key lands wholly in one task.  The explicit
-        # (bucket, term, doc_id) sort satisfies the dynamic-partition
-        # writer's required ordering AND leaves every file term-sorted
-        # (tight term row-group statistics for pruned reads).
-        n_flat = shuffle_partitions(spark)
-        slices = max(1, -(-4 * n_flat // max(cfg.n_buckets, 1)))  # ceil
-        flat_split = F.when(
-            F.col("bucket") == DOC_ROW_BUCKET,
-            F.pmod(F.col("doc_id"), F.lit(n_flat)),
-        ).otherwise(F.pmod(F.col("doc_id"), F.lit(slices)))
-        flat.repartition(n_flat, F.col("bucket"), flat_split).sortWithinPartitions(
-            "bucket", "term", "doc_id"
-        ).write.mode("overwrite").partitionBy("bucket").parquet(flat_path)
-        t_flat = time.time()
-        c_flat = _step_cpu()
-
-        # doclen: partition-pruned read of the n_docs sentinel rows —
-        # replaces a groupBy shuffle over the whole postings relation
-        doclens = (
-            spark.read.parquet(flat_path)
-            .where(F.col("bucket") == DOC_ROW_BUCKET)
-            .select("doc_id", F.col("dl").alias("doclen"))
-        )
-        stat_cols = ["doc_id", "repo", "path", "commit", "lang", "content_sha256"]
-        if store_content:
-            stat_cols.append("content")
         obs = Observation("doc_stats")
         doc_stats = (
-            with_ids.select(*stat_cols)
-            .join(doclens, "doc_id", "left")
-            .withColumn("doclen", F.coalesce("doclen", F.lit(0)).cast("int"))
+            with_ids.select(
+                "doc_id",
+                *[F.col(c).cast("string") for c in ("repo", "path", "commit", "lang")],
+                F.sha2(F.col("content"), 256).alias("content_sha256"),
+                "content",
+            )
+            .mapInArrow(
+                partial(_analyze_partitions_arrow, keep_content=store_content),
+                schema=DOC_STATS_SCHEMA + (", content string" if store_content else ""),
+            )
             # hive-partitioned by pmod(doc_id, P) so single-doc re-index
             # (S9) swaps ONE partition dir instead of rewriting the
             # whole relation (index/maintain.py reindex_doc)
@@ -493,7 +429,12 @@ def _build_index_staged(
                 "ds_part",
                 F.pmod(F.col("doc_id"), F.lit(cfg.doc_stats_parts)).cast("int"),
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("sum_dl"))
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum("doclen").alias("sum_dl"),
+                F.sum(F.size("terms")).alias("postings"),
+            )
         )
         # repartition on the partition column: one task per ds_part dir
         # -> one file per dir.  Without it every task opens P writers
@@ -513,36 +454,19 @@ def _build_index_staged(
         arranged.unpersist()
         stats = obs.get  # filled by the write job — no extra job
         n_docs = int(stats["n"] or 0)
-        avgdl = float(stats["sum_dl"] or 0) / n_docs if n_docs else 0.0
-        t_ds = time.time()
-        c_ds = _step_cpu()
-
-        # per-bucket posting counts from parquet footers (no job)
-        per_bucket = {
-            part.split("=", 1)[1]: n
-            for part, n in _footer_rowcounts(flat_path).items()
-            if part.startswith("bucket=") and part != f"bucket={DOC_ROW_BUCKET}"
-        }
+        sum_dl = int(stats["sum_dl"] or 0)
         m1 = {
             "fingerprint": fingerprint,
             "stage": "stage1",
             "n_docs": n_docs,
-            "avgdl": avgdl,
-            "postings_emitted": int(sum(per_bucket.values())),
-            "postings_per_bucket": per_bucket,
+            "sum_dl": sum_dl,
+            "avgdl": sum_dl / n_docs if n_docs else 0.0,
+            "postings_emitted": int(stats["postings"] or 0),
             "wall_sec": round(time.time() - t0, 3),
-            "steps_sec": {
-                "analyze_flat_write": round(t_flat - t0, 3),
-                "doc_stats_write": round(t_ds - t_flat, 3),
-                "footer_stats": round(time.time() - t_ds, 3),
-            },
+            "steps_sec": {"analyze_doc_stats_write": round(time.time() - t0, 3)},
         }
         if STEP_CLOCK is not None:
-            m1["steps_cpu"] = {
-                "analyze_flat_write": round(c_flat - c0, 1),
-                "doc_stats_write": round(c_ds - c_flat, 1),
-                "footer_stats": round(_step_cpu() - c_ds, 1),
-            }
+            m1["steps_cpu"] = {"analyze_doc_stats_write": round(_step_cpu() - c0, 1)}
         _write_manifest(out_dir, "stage1", m1)
         metrics["stage1"] = m1
 
@@ -553,41 +477,22 @@ def _build_index_staged(
     else:
         t0 = time.time()
         c0 = _step_cpu()
-        flat_back = read_flat_postings(spark, out_dir)
-        salted = flat_back.select("term", "doc_id", "tf", "dl", "bucket").withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int")
-        )
+        postings = doc_postings(spark, out_dir, cfg.n_buckets)
         block_size = cfg.block_size
 
-        # One shuffle: co-locate each (term, salt) run, sort runs
-        # contiguously, then encode WHOLE partitions in mapInArrow.
-        # Arrow-native end to end: per-group applyInPandas pays ~ms of
-        # pandas overhead per run, and even whole-partition mapInPandas
-        # pays O(runs) Python-object churn materializing the output
-        # lists/bytes (measured 39x slower than the Arrow kernel at
-        # code-corpus vocabularies — format.encode_sorted_table).
-        #
-        # Partition key = (term, salt), NOT (bucket, salt): the encoder
-        # only needs each run contiguous, and hashing the
-        # vocabulary-sized key space balances the encode stage at any
-        # partition count, whereas hash(bucket, salt) has only
-        # n_buckets x n_salts distinct values — balls-in-bins collisions
-        # plus unequal bucket mass skew the stage, and AQE is free to
-        # coalesce a column-only repartition below the core count.  The
-        # explicit numPartitions (the user's shuffle-sizing knob)
-        # decouples encode parallelism from the index layout and pins
-        # it against AQE.  Sorting with the leading ``bucket``
-        # (functionally determined by term, so run contiguity is
-        # preserved) lets the dynamic-partitionBy write reuse the sort
-        # instead of inserting its own, and keeps every output file
-        # term-sorted for tight row-group pruning at query time.
+        # One shuffle (encoder_input): co-locate each (term, salt) run,
+        # sort runs contiguously, then encode WHOLE partitions in
+        # mapInArrow.  Arrow-native end to end: per-group applyInPandas
+        # pays ~ms of pandas overhead per run, and even whole-partition
+        # mapInPandas pays O(runs) Python-object churn materializing the
+        # output lists/bytes (measured 39x slower than the Arrow kernel
+        # at code-corpus vocabularies — format.encode_sorted_table).
         def _encode(batches):
             return encode_partition_arrow(batches, block_size)
 
         n_enc = shuffle_partitions(spark)
         runs = (
-            salted.repartition(n_enc, "term", "salt")
-            .sortWithinPartitions("bucket", "term", "salt", "doc_id")
+            encoder_input(postings, cfg.n_salts, n_enc)
             .mapInArrow(_encode, schema=POSTING_RUN_SCHEMA)
             # the Python eval node erases ordering info, so without this
             # the partitionBy write inserts its own bucket-only sort
@@ -606,7 +511,7 @@ def _build_index_staged(
         # term dictionary — narrow columns only (no blob re-read).
         # BOTH stats relations are written bucket-partitioned (hive
         # `bucket=` dirs) and term-sorted within files: maintenance
-        # (index/maintain._rewrite_stats) then swaps ONLY the partition
+        # (index/maintain.py) then swaps ONLY the partition
         # dirs a mutation touches instead of rewriting the whole
         # vocabulary (VERDICT r4 #3a), and the sorted files keep tight
         # term row-group statistics for the driver-side point lookups
@@ -637,7 +542,7 @@ def _build_index_staged(
 
         # per-(term, repo) document frequency — the reference's per-site
         # lemma.frequency semantics (LemmaRepository.java:25-30)
-        trs = flat_back.groupBy("term", "repo").agg(
+        trs = postings.groupBy("term", "repo").agg(
             F.count("*").alias("df"), F.first("bucket").alias("bucket")
         )
         (
@@ -700,6 +605,7 @@ def _build_index_staged(
     # ---------------- meta (completion marker) ---------------------------
     meta = {
         "n_docs": metrics["stage1"]["n_docs"],
+        "sum_dl": metrics["stage1"]["sum_dl"],
         # high-water mark for id assignment: build ids are dense ranks
         # 0..n_docs-1; reindex_doc advances it per new doc so a
         # single-doc add never scans doc_stats for max(doc_id)
@@ -709,7 +615,7 @@ def _build_index_staged(
         "n_terms": metrics["stage2"]["n_terms"],
         "config": json.loads(cfg.to_json()),
         "source": source,
-        "format": "searchengine_spark/v1",
+        "format": INDEX_FORMAT,
     }
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True)

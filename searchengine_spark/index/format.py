@@ -4,20 +4,23 @@ Replaces the reference's four PostgreSQL tables (site/page/lemma/index,
 ``db/changelog/liquibase-outputChangeLog_init.xml``) with columnar
 parquet:
 
-- ``stage1_postings/bucket=<b>/`` — flat postings ``(term, doc_id, tf,
-  dl, repo)`` plus the ``bucket=-1`` doclen sentinels: the stage-1 build
-  checkpoint and the maintenance input (role of the ``index`` table
-  rows, ``model/Index.java:12-23``).  No reader on the query path.
 - ``postings/bucket=<b>/``        — encoded posting *runs*: one row per
   (term, salt) holding delta+varint doc-id blocks with skip/block-max
-  metadata.  The only postings the query engine reads, for top-k and
-  count alike.
+  metadata.  The one inverted postings relation (role of the ``index``
+  table rows, ``model/Index.java:12-23``): the query engine reads it
+  for top-k and count alike, and maintenance edits it in place.
 - ``term_stats/``  — (term, df, cf)           (role of ``lemma`` table)
 - ``term_repo_stats/`` — (term, repo, df)     (per-site df semantics,
   ``Repositories/LemmaRepository.java:25-30``)
-- ``doc_stats/``   — (doc_id, repo, path, commit, lang, doclen,
-  content_sha256)                             (role of ``page`` metadata)
-- ``meta.json``    — corpus N, avgdl, IndexConfig, source path
+- ``doc_stats/ds_part=<p>/`` — one row per document (role of ``page``
+  metadata): ``DOC_STATS_SCHEMA`` plus ``content`` on a
+  ``store_content`` index.  ``terms``/``tfs`` are the doc's forward
+  index (its terms in sorted order and their tfs, as Lucene term
+  vectors): the stage-1 build checkpoint that stage 2 explodes into
+  postings, and the old-terms source for a single-doc re-index.  The
+  search path never reads them.
+- ``meta.json``    — corpus N, sum_dl, avgdl, max_doc_id, IndexConfig,
+  source path, ``format`` (:data:`INDEX_FORMAT`)
 - ``_checkpoints/``— per-stage manifests + per-partition metrics
 
 Block layout inside a run: postings sorted by doc_id, cut into blocks of
@@ -52,8 +55,12 @@ POSTING_RUN_SCHEMA = (
 
 DOC_STATS_SCHEMA = (
     "doc_id long, repo string, path string, commit string, lang string, "
-    "doclen int, content_sha256 string"
+    "content_sha256 string, doclen int, terms array<string>, tfs array<int>"
 )
+
+#: ``meta.json`` ``format`` of the layout above; maintenance refuses any
+#: other (a v1 index has no forward index in doc_stats to maintain)
+INDEX_FORMAT = "searchengine_spark/v2"
 
 
 def encode_blocks(

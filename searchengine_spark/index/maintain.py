@@ -30,35 +30,37 @@ Scale shape (the 100x contract — VERDICT r4 #3/#4):
   builder's rank order gave the repo one, exact id list otherwise),
   removes the repo's doc_stats and term_repo_stats rows, and leaves
   the postings untouched.  Every query path filters decoded postings
-  through the tombstone set (``operators/wand.ExcludeSet``; the
-  term_repo_stats recompute over the flat postings pushes the
-  equivalent ``NOT (repo = R AND doc_id <= hi)`` predicate,
-  :func:`tombstone_flat_cond`) — exactly Lucene's deleted-docs
-  semantics, including the
-  documented staleness: global df/cf/n_docs/avgdl reflect the
-  pre-delete corpus until ``compact()``.  The purge cost is O(stats
-  metadata) — the doc_stats/term_repo_stats filter-rewrites touch the
+  through the tombstone set (``operators/wand.ExcludeSet``) — exactly
+  Lucene's deleted-docs semantics, including the documented staleness:
+  global df/cf/n_docs/avgdl reflect the pre-delete corpus until
+  ``compact()``.  The purge cost is O(stats metadata) — the
+  doc_stats/term_repo_stats filter-rewrites touch the
   ~10^-3-of-index metadata slice, never the postings mass — where the
   reference analog is an indexed cascade delete, not a table rewrite.
 - ``compact()`` applies the recorded tombstones physically: one
   metadata-pruned keep-or-reencode pass over the encoded runs
-  (untouched runs are forwarded without decoding), one narrow filter
-  pass over the flat postings, then a full stats recompute — i.e.
-  today's eager rewrite, made explicit and amortizable over many
-  deletes.  ``delete_repo(mode="eager")`` is tombstone+compact in one
-  call; the two routes produce content-identical indexes (tested).
-- ``reindex_doc``: the doc's old terms come from a driver-side pyarrow
-  read (row-group pruning on doc_id); only the buckets that old+new
-  terms hash into are rewritten — flat postings, encoded runs,
-  term_stats AND term_repo_stats are all bucket-partitioned, so every
-  write is a partition-dir swap scoped to the affected buckets.  The
-  doclen sentinel is upserted by rewriting the ONE parquet file that
-  holds the old row (driver-side pyarrow) plus a one-row append — not
-  by streaming all n_docs sentinels through Spark.  Corpus scalars
-  (n_docs/sum_dl/avgdl) update incrementally in meta.json from the
-  replaced doc_stats row.  Total write volume is O(touched buckets +
-  one sentinel file + one doc_stats partition), independent of corpus
-  size (tests assert the changed-file set).
+  (untouched runs are forwarded without decoding), then a term_stats
+  recompute and a meta refresh from doc_stats.  term_repo_stats needs
+  nothing: delete_repo already purged the repo's rows.
+  ``delete_repo(mode="eager")`` is tombstone+compact in one call; the
+  two routes produce content-identical indexes (tested).
+- ``reindex_doc``: the doc's old terms come from its doc_stats row
+  (the forward index, a driver-side pyarrow point read).  Only the
+  doc's ``(term, salt = doc_id % S)`` runs of old ∪ new terms are
+  decoded, spliced and re-encoded with the builder's encoder; every
+  other run of the touched term buckets is forwarded as-is in the
+  bucket-dir swap.  term_stats is recomputed from the runs of the
+  touched buckets; term_repo_stats takes an exact ±1 df delta for the
+  doc's repo (terms gained / lost).  One doc_stats partition is
+  swapped, and the corpus scalars (n_docs/sum_dl/avgdl) update
+  incrementally in meta.json from the replaced row.  Total write
+  volume is O(touched buckets + one doc_stats partition), independent
+  of corpus size (tests assert the changed-file set).
+
+Every entry point requires a ``searchengine_spark/v2`` index
+(:data:`~searchengine_spark.index.format.INDEX_FORMAT`) and raises
+``ValueError`` on any other: an older index has no forward index to
+maintain and must be rebuilt.
 
 Directory swaps are write-to-tmp + rename — single-filesystem atomic
 enough for this engine; a lakehouse deployment would commit the same
@@ -67,83 +69,53 @@ file sets as an Iceberg/Delta snapshot instead.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import time
-import uuid
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from searchengine_spark.analyzer import term_frequencies
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.functions.xxhash import bucket_of
 from searchengine_spark.index.builder import (
-    ANALYZED_SCHEMA,
-    DOC_ROW_BUCKET,
     _footer_rowcounts,
+    analyze_doc_batch,
     shuffle_partitions,
     stats_slices,
 )
 from searchengine_spark.index.format import (
+    INDEX_FORMAT,
     POSTING_RUN_SCHEMA,
+    decode_run,
     encode_blocks,
-    encode_partition_arrow,
+    encode_sorted_table,
 )
 from searchengine_spark.operators.wand import ExcludeSet
 
-#: explicit read schemas so post-mutation reads work even when a
+#: explicit read schema so post-mutation reads work even when a
 #: mutation emptied a directory (schema inference needs >= 1 file)
-_FLAT_SCHEMA = ANALYZED_SCHEMA + ", bucket int"
-_RUNS_SCHEMA = POSTING_RUN_SCHEMA
+_TRS_SCHEMA = "term string, repo string, df long, bucket int"
 
 
 def _read_runs(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.schema(_RUNS_SCHEMA).parquet(
+    return spark.read.schema(POSTING_RUN_SCHEMA).parquet(
         os.path.join(index_dir, "postings")
-    )
-
-
-def _read_flat(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.schema(_FLAT_SCHEMA).parquet(
-        os.path.join(index_dir, "stage1_postings")
-    )
-
-
-#: shuffle-partition count with a non-numeric fallback (the conf can be
-#: 'auto' under managed AQE modes — ADVICE r4); single source of truth
-#: in index/builder.py
-_n_shuffle = shuffle_partitions
-
-
-def flat_survivors(
-    spark: SparkSession, flat_path: str, repo: str, max_id: int | None = None
-) -> DataFrame:
-    """The flat-postings rows surviving a repo purge — a NARROW plan
-    (no repartition/Exchange): each input split keeps its bucket value,
-    so the downstream ``partitionBy("bucket")`` write routes rows back
-    to their hive dirs without a shuffle (tests assert the plan).
-
-    ``max_id``: the repo's max doc id AT TOMBSTONE TIME.  Docs of the
-    same repo name added after the tombstone get ids above it
-    (meta.json's high-water mark only grows), so the keep-condition
-    ``NOT (repo = R AND doc_id <= max_id)`` deletes exactly the
-    tombstoned id set even if the repo was re-added since — a plain
-    ``repo != R`` filter would eat the re-added docs."""
-    df = spark.read.parquet(flat_path)
-    if max_id is None:
-        return df.where(F.col("repo") != repo)
-    return df.where(
-        ~((F.col("repo") == repo) & (F.col("doc_id") <= max_id))
     )
 
 
 def _load_meta(index_dir: str) -> tuple[dict, IndexConfig]:
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
+    if meta.get("format") != INDEX_FORMAT:
+        raise ValueError(
+            f"{index_dir}: index format {meta.get('format')!r} is not "
+            f"{INDEX_FORMAT!r}; rebuild it with build_index to maintain it"
+        )
     return meta, IndexConfig(**meta["config"])
 
 
@@ -208,42 +180,26 @@ def tombstones(meta: dict) -> list[dict]:
     return meta.get("tombstones") or []
 
 
-def tombstone_exclude(meta: dict) -> ExcludeSet | None:
-    """meta.json tombstones -> the scorer-side exclusion set (contiguous
-    repos contribute ranges, non-contiguous ones their exact id
-    arrays)."""
-    tombs = tombstones(meta)
-    if not tombs:
-        return None
+def _exclusions(tombs: list[dict]) -> tuple[list[tuple[int, int]], np.ndarray | None]:
+    """Tombstones -> (ranges, ids): contiguous repos contribute their
+    [lo, hi] range, non-contiguous ones their exact ids (one sorted
+    array, None when there are none)."""
     ranges = [(t["lo"], t["hi"]) for t in tombs if not t.get("ids")]
     id_arrays = [
         np.asarray(t["ids"], dtype=np.uint64) for t in tombs if t.get("ids")
     ]
-    ids = np.sort(np.concatenate(id_arrays)) if id_arrays else None
-    return ExcludeSet(ranges, ids)
+    return ranges, np.sort(np.concatenate(id_arrays)) if id_arrays else None
 
 
-def tombstone_flat_cond(meta: dict):
-    """Spark keep-condition over the flat postings equivalent to the
-    tombstone id set: ``NOT (repo = R AND doc_id <= hi)`` per
-    tombstone (exact — see :func:`flat_survivors` on why the id bound
-    makes repo-name reuse safe).  None when no tombstones."""
-    cond = None
-    for t in tombstones(meta):
-        c = ~((F.col("repo") == t["repo"]) & (F.col("doc_id") <= t["hi"]))
-        cond = c if cond is None else cond & c
-    return cond
+def tombstone_exclude(meta: dict) -> ExcludeSet | None:
+    """meta.json tombstones -> the scorer-side exclusion set."""
+    tombs = tombstones(meta)
+    return ExcludeSet(*_exclusions(tombs)) if tombs else None
 
 
 # ---------------------------------------------------------------------------
 # stats rewrite (bucket-partitioned, partition-scoped)
 # ---------------------------------------------------------------------------
-
-def _stats_partitioned(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        e.startswith("bucket=") for e in os.listdir(path)
-    )
-
 
 def _write_stats_rel(
     spark: SparkSession,
@@ -260,7 +216,7 @@ def _write_stats_rel(
     mass) and the explicit sort both satisfies the dynamic-partition
     writer's required ordering and pins term-sorted files (tight term
     row-group statistics for the driver-side point lookups)."""
-    slices = stats_slices(_n_shuffle(spark), cfg.n_buckets)
+    slices = stats_slices(shuffle_partitions(spark), cfg.n_buckets)
     n_parts = max(1, (len(buckets) if buckets is not None else cfg.n_buckets)) * slices
     tmp = path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -279,14 +235,13 @@ def _write_stats_rel(
         _swap_subdirs(tmp, path, [f"bucket={b}" for b in buckets])
 
 
-def _rewrite_stats(
+def _rewrite_term_stats(
     spark: SparkSession,
     index_dir: str,
+    cfg: IndexConfig,
     buckets: list[int] | None = None,
-    n_buckets: int | None = None,
-    meta: dict | None = None,
 ) -> None:
-    """Recompute term_stats / term_repo_stats.
+    """Recompute term_stats from the runs.
 
     ``buckets=None`` -> full recompute (eager delete / compact).
     Otherwise only the named buckets are recomputed from
@@ -294,150 +249,69 @@ def _rewrite_stats(
     or rewrite of the untouched vocabulary (VERDICT r4 #3a; the
     incremental analog of the reference's per-lemma frequency
     decrement, ``LemmaRepository.java:40-42``, done set-at-a-time).
-
-    ``meta``: when the index carries tombstones, the term_repo_stats
-    recompute (from flat postings, which tombstone mode leaves
-    physically intact) must exclude tombstoned docs so a purged repo's
-    rows are not resurrected.  term_stats recomputes from the runs
-    unfiltered — global df/cf stay Lucene-style stale until compact().
+    The runs are read unfiltered: global df/cf stay Lucene-style stale
+    under tombstones until compact().
     """
-    _, cfg = _load_meta(index_dir)
     runs = _read_runs(spark, index_dir)
-    flat = _read_flat(spark, index_dir).where(F.col("bucket") >= 0)
     if buckets is not None:
         runs = runs.where(F.col("bucket").isin(buckets))
-        flat = flat.where(F.col("bucket").isin(buckets))
-    if meta is not None:
-        tcond = tombstone_flat_cond(meta)
-        if tcond is not None:
-            flat = flat.where(tcond)
     new_ts = runs.groupBy("term").agg(
         F.sum("df_run").alias("df"),
         F.sum("cf_run").alias("cf"),
         F.first("bucket").alias("bucket"),
     )
-    new_trs = flat.groupBy("term", "repo").agg(
-        F.count("*").alias("df"), F.first("bucket").alias("bucket")
+    _write_stats_rel(
+        spark, new_ts, os.path.join(index_dir, "term_stats"), ["bucket", "term"],
+        cfg, buckets,
     )
 
-    ts_path = os.path.join(index_dir, "term_stats")
-    trs_path = os.path.join(index_dir, "term_repo_stats")
-    if _stats_partitioned(ts_path) or buckets is None:
-        _write_stats_rel(spark, new_ts, ts_path, ["bucket", "term"], cfg, buckets)
-    else:  # legacy unpartitioned layout: keep-union full rewrite
-        keep_ts = spark.read.parquet(ts_path).where(~F.col("bucket").isin(buckets))
-        merged = keep_ts.unionByName(new_ts)
-        tmp = ts_path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.parquet(tmp)
-        _swap_dir(tmp, ts_path)
-    if _stats_partitioned(trs_path) or buckets is None:
-        _write_stats_rel(
-            spark, new_trs, trs_path, ["bucket", "term", "repo"], cfg, buckets
-        )
-    else:  # legacy layout has no bucket column on trs
-        keep_trs = spark.read.parquet(trs_path).where(
-            ~F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").isin(buckets)
-        )
-        merged = keep_trs.unionByName(new_trs.drop("bucket"))
-        tmp = trs_path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.parquet(tmp)
-        _swap_dir(tmp, trs_path)
+
+def _write_corpus_scalars(index_dir: str, meta: dict, n_docs: int, sum_dl: int) -> None:
+    """Persist n_docs/sum_dl/avgdl, with n_terms from the term_stats
+    parquet footers (driver-side metadata walk, no job)."""
+    meta["n_docs"], meta["sum_dl"] = n_docs, sum_dl
+    meta["avgdl"] = sum_dl / n_docs if n_docs else 0.0
+    meta["n_terms"] = sum(
+        _footer_rowcounts(os.path.join(index_dir, "term_stats")).values()
+    )
+    _write_meta(index_dir, meta)
 
 
-def _refresh_meta(spark: SparkSession, index_dir: str, meta: dict) -> dict:
-    """Recompute n_docs/sum_dl/avgdl/n_terms from the (tiny) sentinel
-    and term_stats relations — the FULL recompute used after corpus-
-    shaped mutations (eager delete, compact).  Single-doc reindex uses
-    the incremental :func:`_bump_meta_for_reindex` instead."""
-    doclens = (
-        _read_flat(spark, index_dir)
-        .where(F.col("bucket") == DOC_ROW_BUCKET)
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
+def _refresh_meta(spark: SparkSession, index_dir: str, meta: dict) -> None:
+    """Recompute the corpus scalars from doc_stats — the FULL recompute
+    used after corpus-shaped mutations (eager delete, compact), when
+    doc_stats holds exactly the live docs.  Single-doc reindex updates
+    them incrementally instead."""
+    totals = (
+        spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s"))
         .collect()[0]
     )
-    n_docs = int(doclens["n"] or 0)
-    meta["n_docs"] = n_docs
-    meta["sum_dl"] = int(doclens["s"] or 0)
-    meta["avgdl"] = meta["sum_dl"] / n_docs if n_docs else 0.0
-    meta["n_terms"] = sum(
-        _footer_rowcounts(os.path.join(index_dir, "term_stats")).values()
-    )
-    _write_meta(index_dir, meta)
-    return meta
-
-
-def _bump_meta_for_reindex(
-    spark: SparkSession,
-    index_dir: str,
-    meta: dict,
-    is_new: bool,
-    old_dl: int,
-    new_dl: int,
-) -> dict:
-    """O(1) corpus-scalar update for a single-doc reindex: the replaced
-    doc's old length comes from its doc_stats row, so n_docs/sum_dl/
-    avgdl never need a corpus scan (VERDICT r4 #3c).  n_terms comes
-    from term_stats parquet footers (driver-side metadata walk, no
-    job).  Falls back to the full recompute on pre-sum_dl meta."""
-    if "sum_dl" not in meta:
-        return _refresh_meta(spark, index_dir, meta)
-    meta["n_docs"] = int(meta["n_docs"]) + (1 if is_new else 0)
-    meta["sum_dl"] = int(meta["sum_dl"]) + new_dl - old_dl
-    meta["avgdl"] = meta["sum_dl"] / meta["n_docs"] if meta["n_docs"] else 0.0
-    meta["n_terms"] = sum(
-        _footer_rowcounts(os.path.join(index_dir, "term_stats")).values()
-    )
-    _write_meta(index_dir, meta)
-    return meta
+    _write_corpus_scalars(index_dir, meta, int(totals["n"] or 0), int(totals["s"] or 0))
 
 
 # ---------------------------------------------------------------------------
 # physical postings purge (shared by eager delete and compact)
 # ---------------------------------------------------------------------------
 
-def _purge_postings(
-    spark: SparkSession, index_dir: str, cfg: IndexConfig, tombs: list[dict]
-) -> None:
-    """Physically remove the tombstoned docs from the flat postings and
-    the encoded runs — ONE pass over each relation regardless of how
-    many tombstones accumulated.
-
-    - flat (incl. the bucket=-1 doclen sentinels): a NARROW keep-filter
-      pass (``NOT (repo = R AND doc_id <= hi)`` per tombstone — exact,
-      see :func:`flat_survivors`); input splits keep their bucket, so
-      the partitioned rewrite needs no Exchange and the predicate
-      prunes row groups via statistics.
-    - runs: a narrow keep-or-reencode ``mapInPandas`` pass; the
-      combined :class:`ExcludeSet`'s block metadata check forwards
-      every untouched run without decoding it, and only runs whose
-      [first, last] ranges overlap a tombstone are decoded, filtered,
-      and re-encoded.  Non-contiguous id arrays ride a Spark broadcast,
-      never task closures (VERDICT r3 #6).
-    """
-    flat_path = os.path.join(index_dir, "stage1_postings")
-    tmp = flat_path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df = spark.read.parquet(flat_path)
-    for t in tombs:
-        df = df.where(~((F.col("repo") == t["repo"]) & (F.col("doc_id") <= t["hi"])))
-    df.write.partitionBy("bucket").parquet(tmp)
-    _ensure_schema_file(df, tmp)
-    _swap_dir(tmp, flat_path)
-
-    ranges = [(t["lo"], t["hi"]) for t in tombs if not t.get("ids")]
-    id_arrays = [
-        np.asarray(t["ids"], dtype=np.uint64) for t in tombs if t.get("ids")
-    ]
-    ids = np.sort(np.concatenate(id_arrays)) if id_arrays else None
-    ids_bc = spark.sparkContext.broadcast(ids) if ids is not None else None
-    block = cfg.block_size
+def _kept_runs(
+    spark: SparkSession,
+    index_dir: str,
+    block: int,
+    ranges: list[tuple[int, int]],
+    ids_bc=None,
+) -> DataFrame:
+    """The encoded runs with the excluded docs (``ranges`` plus the
+    broadcast id array ``ids_bc``) removed — a NARROW keep-or-reencode
+    ``mapInPandas`` pass (no Exchange: each input split keeps its
+    bucket, so the partitioned rewrite routes rows back to their dirs
+    without a shuffle; tests assert the plan).  The :class:`ExcludeSet`
+    block-metadata check forwards every untouched run without decoding
+    it; only runs whose [first, last] ranges overlap an exclusion are
+    decoded, filtered, and re-encoded."""
     out_cols = [f.strip().split(" ")[0] for f in POSTING_RUN_SCHEMA.split(",")]
 
     def rewrite_runs(batches):
-        from searchengine_spark.index.format import decode_run
-
         ex = ExcludeSet(ranges, ids_bc.value if ids_bc is not None else None)
         for pdf in batches:
             first = np.fromiter(
@@ -466,14 +340,26 @@ def _purge_postings(
             if len(res):
                 yield res[out_cols]
 
+    return _read_runs(spark, index_dir).mapInPandas(
+        rewrite_runs, schema=POSTING_RUN_SCHEMA
+    )
+
+
+def _purge_postings(
+    spark: SparkSession, index_dir: str, cfg: IndexConfig, tombs: list[dict]
+) -> None:
+    """Physically remove the tombstoned docs from the encoded runs — ONE
+    :func:`_kept_runs` pass regardless of how many tombstones
+    accumulated.  Non-contiguous id arrays ride a Spark broadcast,
+    never task closures (VERDICT r3 #6)."""
+    ranges, ids = _exclusions(tombs)
+    ids_bc = spark.sparkContext.broadcast(ids) if ids is not None else None
     runs_path = os.path.join(index_dir, "postings")
     tmp = runs_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    kept_runs = spark.read.parquet(runs_path).mapInPandas(
-        rewrite_runs, schema=POSTING_RUN_SCHEMA
-    )
-    kept_runs.write.partitionBy("bucket").parquet(tmp)
-    _ensure_schema_file(spark.createDataFrame([], POSTING_RUN_SCHEMA), tmp)
+    kept = _kept_runs(spark, index_dir, cfg.block_size, ranges, ids_bc)
+    kept.write.partitionBy("bucket").parquet(tmp)
+    _ensure_schema_file(kept, tmp)
     _swap_dir(tmp, runs_path)
     if ids_bc is not None:
         ids_bc.unpersist()
@@ -485,10 +371,7 @@ def _purge_doc_stats(spark: SparkSession, index_dir: str, repo: str, hi: int) ->
     tmp = ds_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     keep = ds.where(~((F.col("repo") == repo) & (F.col("doc_id") <= hi)))
-    w = keep.write
-    if "ds_part" in ds.columns:  # preserve the partitioned layout
-        w = w.partitionBy("ds_part")
-    w.parquet(tmp)
+    keep.write.partitionBy("ds_part").parquet(tmp)
     _ensure_schema_file(keep, tmp)
     _swap_dir(tmp, ds_path)
 
@@ -496,17 +379,15 @@ def _purge_doc_stats(spark: SparkSession, index_dir: str, repo: str, hi: int) ->
 def _purge_term_repo_stats(spark: SparkSession, index_dir: str, repo: str) -> None:
     """Drop one repo's rows from term_repo_stats (the per-repo stats
     dimension — removed at tombstone time so repo-scoped planning and
-    the statistics surface stop seeing the repo immediately).  O(vocab
-    x repos) filter rewrite, preserving whichever layout is on disk."""
+    the statistics surface stop seeing the repo immediately, and never
+    recomputed afterwards).  O(vocab x repos) filter rewrite."""
     trs_path = os.path.join(index_dir, "term_repo_stats")
-    trs = spark.read.parquet(trs_path)
-    keep = trs.where(F.col("repo") != repo)
+    keep = spark.read.schema(_TRS_SCHEMA).parquet(trs_path).where(
+        F.col("repo") != repo
+    )
     tmp = trs_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    w = keep.write
-    if _stats_partitioned(trs_path):
-        w = w.partitionBy("bucket")
-    w.parquet(tmp)
+    keep.write.partitionBy("bucket").parquet(tmp)
     _ensure_schema_file(keep, tmp)
     _swap_dir(tmp, trs_path)
 
@@ -585,7 +466,7 @@ def delete_repo(
     # delete must never silently drop an unapplied deletion vector.
     _purge_postings(spark, index_dir, cfg, tombstones(meta) + [tomb])
     meta.pop("tombstones", None)
-    _rewrite_stats(spark, index_dir, meta=meta)
+    _rewrite_term_stats(spark, index_dir, cfg)
     _refresh_meta(spark, index_dir, meta)
     rec = {
         "op": "delete_repo",
@@ -601,10 +482,9 @@ def delete_repo(
 
 
 def compact(spark: SparkSession, index_dir: str) -> dict:
-    """Apply every recorded tombstone physically: purge the flat
-    postings and encoded runs (one pass each, block-metadata pruned),
-    recompute term_stats/term_repo_stats, refresh the corpus scalars,
-    and clear the deletion vector.  The result is content-identical to
+    """Apply every recorded tombstone physically: purge the encoded runs
+    (one block-metadata-pruned pass), recompute term_stats, refresh the
+    corpus scalars from doc_stats, and clear the deletion vector.  The result is content-identical to
     having run ``delete_repo(mode="eager")`` for each repo (tested)."""
     t0 = time.time()
     meta, cfg = _load_meta(index_dir)
@@ -613,7 +493,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         return {"op": "compact", "tombstones_applied": 0}
     _purge_postings(spark, index_dir, cfg, tombs)
     meta.pop("tombstones", None)
-    _rewrite_stats(spark, index_dir, meta=meta)
+    _rewrite_term_stats(spark, index_dir, cfg)
     _refresh_meta(spark, index_dir, meta)
     rec = {
         "op": "compact",
@@ -629,139 +509,111 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
 # S9: single-doc re-index
 # ---------------------------------------------------------------------------
 
-def _analyze_one(content: str, doc_id: int, repo: str) -> pd.DataFrame:
-    """Driver-side run of the SAME vectorized analyze kernel over one
-    doc: postings rows + the doclen sentinel (term='')."""
-    tf = term_frequencies(
-        pd.Series([doc_id], dtype="int64"), pd.Series([content])
-    )
-    dl = int(tf["tf"].sum()) if len(tf) else 0
-    tf["dl"] = np.int32(dl)
-    tf["repo"] = repo
-    sentinel = pd.DataFrame(
-        {"doc_id": [doc_id], "term": [""], "tf": [0], "dl": [dl], "repo": [repo]}
-    )
-    cols = ["doc_id", "term", "tf", "dl", "repo"]
-    return pd.concat([tf[cols] if len(tf) else tf.reindex(columns=cols), sentinel], ignore_index=True)
-
-
 def _lookup_doc(index_dir: str, repo: str, path: str) -> dict | None:
-    """(repo, path) -> doc_stats row via a driver-side pyarrow pruned
-    read — NO Spark job (VERDICT r3 #2; the reference analog is the
-    indexed ``pageRepository.findBySiteAndPath`` point lookup,
+    """(repo, path) -> doc_stats row, its forward-index ``terms``
+    included, via a driver-side pyarrow pruned read — NO Spark job
+    (VERDICT r3 #2; the reference analog is the indexed
+    ``pageRepository.findBySiteAndPath`` point lookup,
     ``PageProcessorService.java:34-46``).  The builder sorts each
     ds_part file by (repo, doc_id), so row-group statistics on repo
     prune within partitions; content is never read."""
     import pyarrow.dataset as pads
 
-    ds = pads.dataset(
+    tbl = pads.dataset(
         os.path.join(index_dir, "doc_stats"), format="parquet",
         partitioning="hive",
-    )
-    cols = [f.name for f in ds.schema if f.name not in ("content", "ds_part")]
-    tbl = ds.to_table(
+    ).to_table(
         filter=(pads.field("repo") == repo) & (pads.field("path") == path),
-        columns=cols,
+        columns=["doc_id", "repo", "path", "commit", "lang", "doclen", "terms"],
     )
     rows = tbl.to_pylist()
     return rows[0] if rows else None
 
 
-def _max_doc_id_from_footers(index_dir: str) -> int:
-    """Max doc_id from parquet row-group STATISTICS only (no data
-    read) — the fallback when meta.json predates the ``max_doc_id``
-    high-water mark.  O(#row-groups) footer reads, not O(n_docs)."""
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(
-        os.path.join(index_dir, "doc_stats"), format="parquet",
-        partitioning="hive",
-    )
-    mx = -1
-    for frag in ds.get_fragments():
-        for rg in frag.row_groups:
-            st = rg.statistics or {}
-            s = st.get("doc_id")
-            if s and s.get("max") is not None:
-                mx = max(mx, int(s["max"]))
-    return mx
-
-
-def _old_terms(index_dir: str, doc_id: int) -> set[str]:
-    """The doc's current terms via a driver-side pyarrow pruned read
-    (row-group statistics on doc_id do the pruning; the reference's
-    analog is the indexed Index-table lookup by page id)."""
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(
-        os.path.join(index_dir, "stage1_postings"), format="parquet",
-        partitioning="hive",
-    )
-    tbl = ds.to_table(
-        filter=(pads.field("doc_id") == doc_id) & (pads.field("bucket") >= 0),
-        columns=["term"],
-    )
-    return set(tbl["term"].to_pylist())
-
-
-def _upsert_sentinel(index_dir: str, doc_id: int, dl: int, repo: str) -> None:
-    """Replace/add the doc's doclen sentinel row in
-    ``stage1_postings/bucket=-1`` by rewriting ONLY the parquet file
-    that holds the old row (located via row-group statistics on
-    doc_id) and appending a one-row file — driver-side pyarrow, no
-    Spark job, no rewrite of the other n_docs-1 sentinels (VERDICT r4
-    #3b).  The builder keeps each sentinel file internally doc_id-
-    sorted, so statistics prune the probe to one row group per file."""
+def _spliced_runs(
+    index_dir: str,
+    cfg: IndexConfig,
+    doc_id: int,
+    terms: list[str],
+    new_tfs: dict[str, int],
+    dl: int,
+):
+    """The doc's ``(term, salt = doc_id % S)`` runs for ``terms`` (old ∪
+    new) after the edit: each existing run is decoded (driver-side
+    pyarrow read, bucket partition pruning + term row-group pruning),
+    the doc's old posting dropped and its new one (``new_tfs``, length
+    ``dl``) added, and the lot re-encoded in one call of the builder's
+    encoder — so a spliced run is byte-identical to a fresh build's.
+    Returns a POSTING_RUN RecordBatch, or None when every run emptied."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
 
-    sdir = os.path.join(index_dir, "stage1_postings", f"bucket={DOC_ROW_BUCKET}")
-    os.makedirs(sdir, exist_ok=True)
-    ds = pads.dataset(sdir, format="parquet")
-    schema = ds.schema
-    for frag in ds.get_fragments():
-        hit = False
-        try:
-            for rg in frag.row_groups:
-                s = (rg.statistics or {}).get("doc_id")
-                if (
-                    s
-                    and s.get("min") is not None
-                    and s["min"] <= doc_id <= s["max"]
-                ):
-                    hit = True
-                    break
-        except Exception:  # noqa: BLE001 — stats unavailable: scan it
-            hit = True
-        if not hit:
-            continue
-        tbl = frag.to_table()
-        mask = pc.equal(tbl["doc_id"], doc_id)
-        if not pc.any(mask).as_py():
-            continue
-        keep = tbl.filter(pc.invert(mask))
-        # both names are dot-prefixed, hidden from Spark and pyarrow
-        # dataset discovery: a crash before the swap leaves the old rows
-        # the only visible ones.  Hadoop's checksum sidecar goes first —
-        # it came from Spark's LocalFS writer and would no longer match
-        # the rewritten bytes, failing every later Spark read
-        d, name = os.path.split(frag.path)
-        tmp = os.path.join(d, f".{name}.tmp")
-        pq.write_table(keep, tmp)
-        crc = os.path.join(d, f".{name}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        os.replace(tmp, frag.path)
-        break
-    new_tbl = pa.Table.from_pylist(
-        [{"doc_id": doc_id, "term": "", "tf": 0, "dl": dl, "repo": repo}],
-        schema=schema,
+    salt = doc_id % cfg.n_salts
+    old = pads.dataset(
+        os.path.join(index_dir, "postings"), format="parquet", partitioning="hive"
+    ).to_table(
+        filter=pads.field("bucket").isin(sorted({bucket_of(t, cfg.n_buckets) for t in terms}))
+        & pads.field("term").isin(terms)
+        & (pads.field("salt") == salt)
     )
-    pq.write_table(
-        new_tbl,
-        os.path.join(sdir, f"sentinel-upsert-{doc_id}-{uuid.uuid4().hex}.parquet"),
+    # (term, doc ids, tfs, dls) per run: the doc's new postings, then
+    # every old run without the doc's old posting
+    parts = [(t, [doc_id], [tf], [dl]) for t, tf in new_tfs.items()]
+    for run in old.to_pylist():
+        d, t, l = decode_run(run)
+        keep = d != doc_id
+        parts.append((run["term"], d[keep], t[keep], l[keep]))
+    if not parts:
+        return None
+    sizes = [len(p[1]) for p in parts]
+
+    def column(i, dtype):
+        return pa.array(np.concatenate([np.asarray(p[i], dtype=dtype) for p in parts]))
+
+    flat = pa.table({
+        "term": pa.array(np.repeat(np.array([p[0] for p in parts], dtype=object), sizes), pa.string()),
+        "salt": pa.array(np.full(sum(sizes), salt, dtype=np.int32)),
+        "doc_id": column(1, np.int64),
+        "tf": column(2, np.int64),
+        "dl": column(3, np.int64),
+        "bucket": pa.array(np.repeat(
+            np.array([bucket_of(p[0], cfg.n_buckets) for p in parts], dtype=np.int32), sizes
+        )),
+    }).sort_by([("term", "ascending"), ("doc_id", "ascending")])
+    return encode_sorted_table(flat, cfg.block_size)
+
+
+def _apply_repo_df_delta(
+    spark: SparkSession,
+    index_dir: str,
+    cfg: IndexConfig,
+    repo: str,
+    gained: set[str],
+    lost: set[str],
+) -> None:
+    """Exact ±1 update of the doc's repo's term_repo_stats rows: +1 for
+    each term the doc gained, -1 for each it lost (rows reaching 0 are
+    dropped) — the per-repo df kept exact by deltas instead of a
+    recompute from a second copy of the postings.  Only the buckets of
+    the changed terms are rewritten."""
+    delta = [(t, repo, 1, bucket_of(t, cfg.n_buckets)) for t in sorted(gained)] + [
+        (t, repo, -1, bucket_of(t, cfg.n_buckets)) for t in sorted(lost)
+    ]
+    if not delta:
+        return
+    buckets = sorted({d[3] for d in delta})
+    trs_path = os.path.join(index_dir, "term_repo_stats")
+    trs = spark.read.schema(_TRS_SCHEMA).parquet(trs_path).where(
+        F.col("bucket").isin(buckets)
+    )
+    merged = (
+        trs.unionByName(spark.createDataFrame(delta, _TRS_SCHEMA))
+        .groupBy("term", "repo", "bucket")
+        .agg(F.sum("df").alias("df"))
+        .where(F.col("df") > 0)
+    )
+    _write_stats_rel(
+        spark, merged, trs_path, ["bucket", "term", "repo"], cfg, buckets
     )
 
 
@@ -777,169 +629,114 @@ def reindex_doc(
     """Re-index one document in place (add it if new).
 
     Every write is scoped to what the doc touches: the term buckets
-    its old+new terms hash into (flat postings, encoded runs,
-    term_stats, term_repo_stats — all bucket-partition-dir swaps), one
-    sentinel parquet file, one doc_stats partition, and meta.json —
-    O(touched), independent of corpus size (VERDICT r4 #3).
+    its old+new terms hash into (encoded runs and term_stats), the
+    buckets of the terms it gained or lost (term_repo_stats), one
+    doc_stats partition, and meta.json — O(touched), independent of
+    corpus size (VERDICT r4 #3).
     """
+    import pyarrow as pa
+
     t0 = time.time()
     meta, cfg = _load_meta(index_dir)
     ds_path = os.path.join(index_dir, "doc_stats")
     ds = spark.read.parquet(ds_path)
     # metadata-cheap lookups (VERDICT r3 #2): the (repo, path) -> row
-    # lookup is a driver-side pyarrow pruned read and the new-doc id
-    # comes from meta.json's high-water mark — NO Spark job scans
-    # doc_stats before the rewrite work starts
+    # lookup (old terms included) is a driver-side pyarrow pruned read
+    # and the new-doc id comes from meta.json's high-water mark — NO
+    # Spark job scans doc_stats before the rewrite work starts
     existing = _lookup_doc(index_dir, repo, path)
     if existing is not None:
         doc_id = int(existing["doc_id"])
         commit = commit if commit is not None else existing["commit"]
         lang = lang if lang is not None else existing["lang"]
-        old_terms = _old_terms(index_dir, doc_id)
-        old_dl = int(existing.get("doclen") or 0)
-        is_new = False
+        old_terms = set(existing["terms"])
+        old_dl = int(existing["doclen"])
     else:
-        hwm = meta.get("max_doc_id")
-        if hwm is None:  # pre-hwm index: parquet footer statistics,
-            # plus the tombstones (purged from doc_stats, never reused)
-            hwm = max([_max_doc_id_from_footers(index_dir)]
-                      + [t["hi"] for t in tombstones(meta)])
-        doc_id = int(hwm) + 1
+        doc_id = int(meta["max_doc_id"]) + 1
         commit = commit or ""
         lang = lang or ""
         old_terms = set()
         old_dl = 0
-        is_new = True
-    meta["max_doc_id"] = max(int(meta.get("max_doc_id", -1)), doc_id)
+    is_new = existing is None
+    meta["max_doc_id"] = max(int(meta["max_doc_id"]), doc_id)
 
-    new_rows = _analyze_one(content, doc_id, repo)
-    new_terms = set(new_rows["term"]) - {""}
-    affected = sorted(
-        {bucket_of(t, cfg.n_buckets) for t in (old_terms | new_terms)}
-    )
+    # the new doc_stats row, through the builder's own analyze kernel
+    store_content = "content" in ds.columns
+    new_stat = analyze_doc_batch(
+        pa.RecordBatch.from_pydict({
+            "doc_id": pa.array([doc_id], pa.int64()),
+            "repo": [repo], "path": [path], "commit": [commit], "lang": [lang],
+            "content_sha256": [hashlib.sha256(content.encode()).hexdigest()],
+            "content": [content],
+        }),
+        keep_content=store_content,
+    ).to_pylist()[0]
+    dl = int(new_stat["doclen"])
+    new_tfs = dict(zip(new_stat["terms"], new_stat["tfs"]))
+    touched = sorted(old_terms | set(new_tfs))
+    affected = sorted({bucket_of(t, cfg.n_buckets) for t in touched})
 
-    # 1. flat postings: rewrite ONLY the affected bucket dirs —
-    #    partition pruning on read, dir swap on write.  Mirrors the
-    #    builder's write shape (ADVICE r4): (bucket, doc-slice)
-    #    repartition so no single bucket funnels through one task, and
-    #    the explicit (bucket, term, doc_id) sort keeps every file
-    #    term-sorted, like the builder's.  The doclen sentinel is NOT
-    #    part of this job — it is upserted file-scoped in step 1b.
-    flat_path = os.path.join(index_dir, "stage1_postings")
+    # 1. encoded runs: splice the doc's (term, salt) runs, forward every
+    #    other run of the affected buckets, and swap those bucket dirs.
+    #    The (term, salt) shuffle and (bucket, term) sort mirror the
+    #    builder's write shape (ADVICE r4): bounded files per bucket,
+    #    every file term-sorted
     if affected:
-        new_df = spark.createDataFrame(
-            new_rows[new_rows["term"] != ""],
-            "doc_id long, term string, tf int, dl int, repo string",
-        ).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int"),
+        salt = doc_id % cfg.n_salts
+        runs = _read_runs(spark, index_dir).where(
+            F.col("bucket").isin(affected)
+            & ~((F.col("salt") == salt) & F.col("term").isin(touched))
         )
-        keep = spark.read.parquet(flat_path).where(
-            F.col("bucket").isin(affected) & (F.col("doc_id") != doc_id)
-        )
-        slices = max(1, -(-4 * _n_shuffle(spark) // max(cfg.n_buckets, 1)))
-        tmp = flat_path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            keep.unionByName(new_df)
-            .repartition(
-                len(affected) * slices,
-                F.col("bucket"),
-                F.pmod(F.col("doc_id"), F.lit(slices)),
-            )
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.partitionBy("bucket")
-            .parquet(tmp)
-        )
-        _swap_subdirs(tmp, flat_path, [f"bucket={b}" for b in affected])
-
-    # 1b. doclen sentinel: file-scoped driver-side upsert
-    dl = int(new_rows.loc[new_rows["term"] == "", "dl"].iloc[0])
-    _upsert_sentinel(index_dir, doc_id, dl, repo)
-
-    # 2. re-encode runs for the affected buckets only — the stage-2
-    #    Arrow kernel over a partition-pruned read, with the builder's
-    #    exact shuffle/sort shape (ADVICE r4): (term, salt) keys for
-    #    balance, (bucket, term, salt, doc_id) pre-sort for the
-    #    encoder, and the post-encode (bucket, term) sort that pins
-    #    term-sorted output files
-    runs_path = os.path.join(index_dir, "postings")
-    if affected:
-        salted = (
-            spark.read.parquet(flat_path)
-            .where(F.col("bucket").isin(affected))
-            .select("term", "doc_id", "tf", "dl", "bucket")
-            .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int"))
-        )
-        block = cfg.block_size
-
-        def _encode(batches):
-            return encode_partition_arrow(batches, block)
-
+        spliced = _spliced_runs(index_dir, cfg, doc_id, touched, new_tfs, dl)
+        if spliced is not None:
+            runs = runs.unionByName(spark.createDataFrame(
+                pa.Table.from_batches([spliced]), schema=POSTING_RUN_SCHEMA
+            ))
+        runs_path = os.path.join(index_dir, "postings")
         tmp = runs_path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         (
-            salted.repartition(min(len(affected) * 4, _n_shuffle(spark)), "term", "salt")
-            .sortWithinPartitions("bucket", "term", "salt", "doc_id")
-            .mapInArrow(_encode, schema=POSTING_RUN_SCHEMA)
+            runs.repartition(min(len(affected) * 4, shuffle_partitions(spark)), "term", "salt")
             .sortWithinPartitions("bucket", "term")
             .write.partitionBy("bucket")
             .parquet(tmp)
         )
         _swap_subdirs(tmp, runs_path, [f"bucket={b}" for b in affected])
 
-    # 3. stats for affected buckets (partition-dir-scoped recompute)
-    if affected:
-        _rewrite_stats(
-            spark, index_dir, buckets=affected, n_buckets=cfg.n_buckets, meta=meta
+        # 2. stats: term_stats recomputed for the affected buckets from
+        #    the runs, term_repo_stats by the doc's ±1 df delta
+        _rewrite_term_stats(spark, index_dir, cfg, buckets=affected)
+        _apply_repo_df_delta(
+            spark, index_dir, cfg, repo, set(new_tfs) - old_terms,
+            old_terms - set(new_tfs),
         )
 
-    # 4. doc_stats row upsert
-    store_content = "content" in ds.columns
-    import hashlib
-
-    new_stat = {
-        "doc_id": doc_id,
-        "repo": repo,
-        "path": path,
-        "commit": commit,
-        "lang": lang,
-        "content_sha256": hashlib.sha256(content.encode()).hexdigest(),
-        "doclen": dl,
-    }
-    if store_content:
-        new_stat["content"] = content
-    partitioned = "ds_part" in ds.columns
-    if partitioned:
-        new_stat["ds_part"] = doc_id % cfg.doc_stats_parts
-    # build with doc_stats' exact schema: plain createDataFrame would
-    # infer doclen as long and union-widen the stored int column
+    # 3. doc_stats row upsert, partition-scoped: only the pmod(doc_id,
+    #    P) partition is re-read (partition pruning) and swapped — the
+    #    rest of doc_stats is untouched (VERDICT r2 #3; the reference
+    #    analog is a one-row UPDATE, PageProcessorService.java:34-46).
+    #    The row takes doc_stats' exact schema: plain createDataFrame
+    #    would infer doclen as long and union-widen the stored int column
+    p = doc_id % cfg.doc_stats_parts
+    new_stat["ds_part"] = p
     stat_df = spark.createDataFrame(
         [tuple(new_stat[c] for c in ds.columns)], schema=ds.schema
     )
     tmp = ds_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    if partitioned:
-        # partition-scoped upsert: only the pmod(doc_id, P) partition is
-        # re-read (partition pruning) and swapped — the rest of
-        # doc_stats is untouched (VERDICT r2 #3; the reference analog is
-        # a one-row UPDATE, PageProcessorService.java:34-46)
-        p = doc_id % cfg.doc_stats_parts
-        keep_part = ds.where(
-            (F.col("ds_part") == p) & (F.col("doc_id") != doc_id)
-        )
-        # coalesce(1): the upsert touches one partition's rows — keep it
-        # one file so driver-side point reads stay cheap
-        keep_part.unionByName(stat_df).coalesce(1).write.partitionBy(
-            "ds_part"
-        ).parquet(tmp)
-        _swap_subdirs(tmp, ds_path, [f"ds_part={p}"])
-    else:  # pre-partitioning index layout: full rewrite
-        ds.where(F.col("doc_id") != doc_id).unionByName(stat_df).write.parquet(tmp)
-        _swap_dir(tmp, ds_path)
+    # coalesce(1): the upsert touches one partition's rows — keep it
+    # one file so driver-side point reads stay cheap
+    ds.where((F.col("ds_part") == p) & (F.col("doc_id") != doc_id)).unionByName(
+        stat_df
+    ).coalesce(1).write.partitionBy("ds_part").parquet(tmp)
+    _swap_subdirs(tmp, ds_path, [f"ds_part={p}"])
 
-    # 5. corpus scalars: incremental, no scan
-    _bump_meta_for_reindex(spark, index_dir, meta, is_new, old_dl, dl)
+    # 4. corpus scalars: O(1) from the replaced row's doclen, no scan
+    #    (VERDICT r4 #3c).  Tombstoned docs keep counting until
+    #    compact(), as the global df/cf do
+    _write_corpus_scalars(
+        index_dir, meta, int(meta["n_docs"]) + is_new, int(meta["sum_dl"]) + dl - old_dl
+    )
     rec = {
         "op": "reindex_doc",
         "repo": repo,
@@ -948,7 +745,7 @@ def reindex_doc(
         "new_doc": is_new,
         "buckets_rewritten": affected,
         "old_terms": len(old_terms),
-        "new_terms": len(new_terms),
+        "new_terms": len(new_tfs),
         "wall_sec": round(time.time() - t0, 3),
     }
     _record_mutation(index_dir, rec)

@@ -226,8 +226,7 @@ class SearchEngine:
         if not terms:
             return {}
         # hive=True: term_stats is bucket-partitioned (bucket is the
-        # dir key, exposed by hive discovery); on a legacy flat layout
-        # the same call reads bucket from the file columns
+        # dir key, exposed by hive discovery)
         tbl = self._read_table(
             "term_stats", hive=True,
             filter=pads.field("term").isin(terms),
@@ -287,14 +286,13 @@ class SearchEngine:
 
         if not terms:
             return {}
-        # bucket-partitioned layout: prune to the query terms' bucket
-        # dirs before the term/repo row-group filters (legacy flat
-        # layout has no bucket field — skip the partition filter)
-        filt = pads.field("term").isin(terms) & (pads.field("repo") == repo)
-        if "bucket" in self._dataset("term_repo_stats", hive=True).schema.names:
-            filt = filt & pads.field("bucket").isin(
-                sorted({self._bucket_of(t) for t in terms})
-            )
+        # prune to the query terms' bucket dirs before the term/repo
+        # row-group filters
+        filt = (
+            pads.field("bucket").isin(sorted({self._bucket_of(t) for t in terms}))
+            & pads.field("term").isin(terms)
+            & (pads.field("repo") == repo)
+        )
         tbl = self._read_table(
             "term_repo_stats", hive=True, filter=filt, columns=["term", "df"]
         )
@@ -628,19 +626,16 @@ class SearchEngine:
         hive partition pruning on ``ds_part = pmod(doc_id, P)`` (the
         builder's layout) skips every partition dir the k ids don't
         hash into, then row-group statistics on doc_id prune within
-        them; no Spark job on the p50 path.  ``need_content=False``
-        additionally skips the wide content column entirely."""
+        them; no Spark job on the p50 path.  Explicit columns: the
+        forward index (``terms``/``tfs``) is never read, and
+        ``need_content=False`` also skips the wide content column."""
         import pyarrow.dataset as pads
 
-        ds = self._dataset("doc_stats", hive=True)
-        cols = [f.name for f in ds.schema]
-        if not need_content and "content" in cols:
-            cols = [c for c in cols if c != "content"]
-        filt = pads.field("doc_id").isin(doc_ids)
-        if "ds_part" in cols:
-            cols = [c for c in cols if c != "ds_part"]
-            parts = sorted({d % self.cfg.doc_stats_parts for d in doc_ids})
-            filt = pads.field("ds_part").isin(parts) & filt
+        cols = ["doc_id", "repo", "path", "commit", "lang", "doclen", "content_sha256"]
+        if need_content and "content" in self._dataset("doc_stats", hive=True).schema.names:
+            cols.append("content")
+        parts = sorted({d % self.cfg.doc_stats_parts for d in doc_ids})
+        filt = pads.field("ds_part").isin(parts) & pads.field("doc_id").isin(doc_ids)
         tbl = self._read_table("doc_stats", hive=True, filter=filt, columns=cols)
         out = {int(m["doc_id"]): m for m in tbl.to_pylist()}
         if not need_content:

@@ -10,21 +10,38 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from searchengine_spark.analyzer import term_frequencies
 from searchengine_spark.config import IndexConfig
-from searchengine_spark.index.builder import ANALYZED_SCHEMA, _analyze_partitions, assign_doc_ids
+from searchengine_spark.index.builder import assign_doc_ids
 from searchengine_spark.plans.planner import analyze_query, bm25_idf
+
+ANALYZED_SCHEMA = "doc_id long, term string, tf int, dl int, repo string"
+
+
+def _analyze_partitions(iterator):
+    """mapInPandas kernel: (doc_id, repo, content) -> postings rows
+    ``(doc_id, term, tf, dl, repo)``.
+
+    Vectorized end-to-end (searchengine_spark.analyzer); doclen = Σtf is
+    computed in-batch because each document is exactly one input row.
+    A doc without terms emits no row."""
+    import pandas as pd  # local import: runs on executors
+
+    for pdf in iterator:
+        tf = term_frequencies(pdf["doc_id"], pdf["content"])
+        tf["dl"] = tf.groupby("doc_id", sort=False)["tf"].transform("sum").astype("int32")
+        repo_map = pd.Series(pdf["repo"].values, index=pdf["doc_id"].values)
+        tf["repo"] = tf["doc_id"].map(repo_map)
+        yield tf[["doc_id", "term", "tf", "dl", "repo"]]
 
 
 def corpus_postings(docs: DataFrame) -> DataFrame:
     """corpus (repo, path, commit, lang, content) -> flat postings
     (doc_id, term, tf, dl, repo) with deterministic doc ids."""
     with_ids = assign_doc_ids(docs)
-    analyzed = with_ids.select("doc_id", "repo", "content").mapInPandas(
+    return with_ids.select("doc_id", "repo", "content").mapInPandas(
         _analyze_partitions, schema=ANALYZED_SCHEMA
     )
-    # drop the per-doc doclen sentinel rows (term="") the kernel emits
-    # for the persisted-index path — this relation is real postings only
-    return analyzed.where(F.col("term") != "")
 
 
 def inline_search_topk(

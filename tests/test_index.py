@@ -16,9 +16,10 @@ from tests.conftest import CFG
 
 
 def _flat(spark, index_dir):
-    from searchengine_spark.index.builder import read_flat_postings
+    """The doc_stats forward index exploded to postings (dl = doclen)."""
+    from searchengine_spark.index.builder import doc_postings
 
-    return read_flat_postings(spark, index_dir)
+    return doc_postings(spark, index_dir, CFG.n_buckets)
 
 
 def test_doc_ids_are_global_rank(spark, corpus_rows, index_dir, oracle_index):
@@ -64,8 +65,14 @@ def test_postings_match_oracle(spark, index_dir, oracle_index):
 
 def test_doclen_is_tf_sum(spark, index_dir, oracle_index):
     ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-    got = {r["doc_id"]: r["doclen"] for r in ds.select("doc_id", "doclen").collect()}
+    rows = ds.select("doc_id", "doclen", "terms", "tfs").collect()
+    got = {r["doc_id"]: r["doclen"] for r in rows}
     assert got == oracle_index.doclen
+    # the forward index: terms sorted, one tf per term, Σ tfs == doclen
+    for r in rows:
+        assert r["terms"] == sorted(r["terms"]), r["doc_id"]
+        assert len(r["terms"]) == len(r["tfs"]), r["doc_id"]
+        assert sum(r["tfs"]) == r["doclen"], r["doc_id"]
 
 
 def test_term_stats_match_oracle(spark, index_dir, oracle_index):
@@ -92,8 +99,8 @@ def test_sha256_invariant(spark, index_dir, oracle_index):
 
 
 def test_encoded_postings_match_flat(spark, index_dir):
-    """Decoding every run reproduces the flat postings exactly —
-    Σ block counts == posting count (SURVEY.md §5.5)."""
+    """Decoding every run reproduces the doc_stats forward index exactly
+    (dl = doclen) — Σ block counts == posting count (SURVEY.md §5.5)."""
     import numpy as np
 
     from searchengine_spark.index.format import decode_run
@@ -197,6 +204,19 @@ def test_meta_contents(index_dir, oracle_index):
     assert meta["config"]["n_salts"] == CFG.n_salts
 
 
+def test_meta_is_v2_with_sum_dl_and_hwm(spark, index_dir, oracle_index):
+    """A fresh build writes the v2 format: meta carries sum_dl (= Σ
+    doclen over doc_stats) and the max_doc_id high-water mark, and the
+    index holds one postings relation — no flat stage1_postings."""
+    meta = json.load(open(os.path.join(index_dir, "meta.json")))
+    assert meta["format"] == "searchengine_spark/v2"
+    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+    assert meta["sum_dl"] == ds.agg(F.sum("doclen")).collect()[0][0]
+    assert meta["sum_dl"] == sum(oracle_index.doclen.values())
+    assert meta["max_doc_id"] == oracle_index.n_docs - 1
+    assert not os.path.exists(os.path.join(index_dir, "stage1_postings"))
+
+
 def test_resume_skips_completed_stages(spark, corpus_rows, tmp_path):
     """Second build over same (source, config) must be a no-op resume;
     deleting only the stage2 manifest re-runs only stage2 and produces
@@ -293,7 +313,7 @@ def test_config_change_invalidates_checkpoint(spark, corpus_rows, tmp_path):
 def test_index_invariant_across_shuffle_partition_counts(
     spark, corpus_rows, tmp_path
 ):
-    """The encode/flat shuffles key on (term[, salt]) with an explicit
+    """The encode shuffle keys on (term, salt) with an explicit
     partition count taken from spark.sql.shuffle.partitions — the
     index CONTENT (postings runs, term stats, search results) must not
     depend on that knob (the N->4N determinism contract: a 4x cluster
@@ -328,22 +348,6 @@ def test_index_invariant_across_shuffle_partition_counts(
     r3 = SearchEngine(spark, outs["3"]).search("index search", limit=5)
     r13 = SearchEngine(spark, outs["13"]).search("index search", limit=5)
     assert r3 == r13
-
-
-def test_sentinel_rows_spread_across_write_tasks(spark, corpus_rows, tmp_path):
-    """The doc-sentinel pseudo-bucket (term="", one row per doc) must
-    NOT collapse into a single write task: at 10^12 docs one key ==
-    one task holding 10^12 rows.  The builder spreads it over the
-    shuffle partitions — at least 2 part files must appear under
-    bucket=-1 whenever shuffle partitions > 1."""
-    docs = spark.createDataFrame(
-        corpus_rows, ["repo", "path", "commit", "lang", "content"]
-    )
-    out = str(tmp_path / "idx_sentinel")
-    build_index(spark, docs, out, CFG, source="sentinel-spread")
-    sentinel_dir = os.path.join(out, "stage1_postings", "bucket=-1")
-    files = [f for f in os.listdir(sentinel_dir) if f.endswith(".parquet")]
-    assert len(files) >= 2, files
 
 
 def test_postings_files_are_term_sorted(spark, index_dir):

@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.builder import build_index, read_flat_postings
+from searchengine_spark.index.builder import build_index
 from searchengine_spark.index.maintain import delete_repo, reindex_doc
 from searchengine_spark.query.engine import SearchEngine
 from tests.conftest import CFG
@@ -31,13 +31,38 @@ def _build(spark, rows, out):
 
 
 def _postings_by_doc(spark, index_dir):
-    """{(repo, doc_key_path-free doc_id, term): tf} keyed portably."""
-    flat = read_flat_postings(spark, index_dir).select("doc_id", "term", "tf")
-    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats")).select(
-        "doc_id", "repo", "path"
+    """{(repo, path, term): tf} from the decoded runs, keyed portably
+    (doc ids map to (repo, path) through doc_stats)."""
+    from searchengine_spark.index.format import decode_run
+
+    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+    key = {r["doc_id"]: (r["repo"], r["path"]) for r in ds.select("doc_id", "repo", "path").collect()}
+    out = {}
+    for run in spark.read.parquet(os.path.join(index_dir, "postings")).collect():
+        docs, tfs, _ = decode_run(run.asDict())
+        for doc, tf in zip(docs.tolist(), tfs.tolist()):
+            out[(*key[doc], run["term"])] = tf
+    return out
+
+
+def _term_repo_stats(spark, index_dir):
+    trs = spark.read.parquet(os.path.join(index_dir, "term_repo_stats"))
+    return {(r["term"], r["repo"]): r["df"] for r in trs.collect()}
+
+
+def _forward_index_row(spark, index_dir, repo, path):
+    """The doc's doc_stats (terms, tfs) as {term: tf}, terms in order."""
+    row = (
+        spark.read.parquet(os.path.join(index_dir, "doc_stats"))
+        .where((F.col("repo") == repo) & (F.col("path") == path)).collect()[0]
     )
-    joined = flat.join(ds, "doc_id").select("repo", "path", "term", "tf")
-    return {(r["repo"], r["path"], r["term"]): r["tf"] for r in joined.collect()}
+    assert row["terms"] == sorted(row["terms"])
+    return dict(zip(row["terms"], row["tfs"]))
+
+
+def _analyzed(content):
+    """{term: tf} of one content string, by the oracle's analyzer."""
+    return build_oracle_index([("r", "p", "", "", content)]).doc_tfs[0]
 
 
 def _term_stats(spark, index_dir):
@@ -77,7 +102,9 @@ def test_reindex_doc_edit_matches_fresh_build_byte_for_byte(
     fresh = _build(spark, edited, tmp_path / "fresh")
     assert _postings_by_doc(spark, live) == _postings_by_doc(spark, fresh)
     assert _term_stats(spark, live) == _term_stats(spark, fresh)
+    assert _term_repo_stats(spark, live) == _term_repo_stats(spark, fresh)
     assert _encoded_runs(spark, live) == _encoded_runs(spark, fresh)
+    assert _forward_index_row(spark, live, target[0], target[1]) == _analyzed(target[4])
 
     import json
 
@@ -116,6 +143,17 @@ def test_reindex_doc_adds_new_document(spark, corpus_rows, tmp_path):
         .where(F.col("doc_id") == rec["doc_id"]).collect()[0]
     )
     assert row["doclen"] > 0 and len(row["content_sha256"]) == 64
+    assert _forward_index_row(spark, live, "repo-new", "src/new.py") == _analyzed(
+        "def brandnewfn(): return uniquemarkertoken"
+    )
+    # the per-repo df kept by ±1 deltas equals a fresh build's
+    fresh = _build(
+        spark,
+        list(rows) + [("repo-new", "src/new.py", "c1", "py",
+                       "def brandnewfn(): return uniquemarkertoken")],
+        tmp_path / "fresh",
+    )
+    assert _term_repo_stats(spark, live) == _term_repo_stats(spark, fresh)
 
 
 def test_delete_repo_matches_fresh_build_by_identity(spark, corpus_rows, tmp_path):
@@ -132,16 +170,8 @@ def test_delete_repo_matches_fresh_build_by_identity(spark, corpus_rows, tmp_pat
     assert _postings_by_doc(spark, live) == _postings_by_doc(spark, fresh)
     assert _term_stats(spark, live) == _term_stats(spark, fresh)
 
-    # per-repo stats agree too (term_repo_stats rewrite)
-    trs_live = {
-        (r["term"], r["repo"]): r["df"]
-        for r in spark.read.parquet(os.path.join(live, "term_repo_stats")).collect()
-    }
-    trs_fresh = {
-        (r["term"], r["repo"]): r["df"]
-        for r in spark.read.parquet(os.path.join(fresh, "term_repo_stats")).collect()
-    }
-    assert trs_live == trs_fresh
+    # per-repo stats agree too (the repo's rows purged, never recomputed)
+    assert _term_repo_stats(spark, live) == _term_repo_stats(spark, fresh)
 
     s_live = SearchEngine(spark, live).statistics()["statistics"]["total"]
     s_fresh = SearchEngine(spark, fresh).statistics()["statistics"]["total"]
@@ -172,8 +202,8 @@ def test_reindex_doc_without_stored_content(spark, corpus_rows, tmp_path):
     row = ds.where(F.col("doc_id") == rec["doc_id"]).collect()[0]
     assert row["doclen"] == 3
     # postings reflect the new content
-    flat = read_flat_postings(spark, out)
-    terms = {r["term"] for r in flat.where(F.col("doc_id") == rec["doc_id"]).collect()}
+    terms = {t for (repo, path, t) in _postings_by_doc(spark, out)
+             if (repo, path) == (target[0], target[1])}
     assert terms == {"replacement", "nocontent", "marker"}
 
 
@@ -186,8 +216,7 @@ def test_reindex_doc_to_empty_content(spark, corpus_rows, tmp_path):
     build_index(spark, docs, out, CFG, source="ec", store_content=True)
     target = rows[2]
     rec = reindex_doc(spark, out, target[0], target[1], "")
-    flat = read_flat_postings(spark, out)
-    assert flat.where(F.col("doc_id") == rec["doc_id"]).count() == 0
+    assert not [k for k in _postings_by_doc(spark, out) if k[:2] == tuple(target[:2])]
     ds = spark.read.parquet(os.path.join(out, "doc_stats"))
     row = ds.where(F.col("doc_id") == rec["doc_id"]).collect()[0]
     assert row["doclen"] == 0
@@ -361,17 +390,16 @@ def test_reindex_doc_rewrites_single_doc_stats_partition(
     assert row["doclen"] == 5
 
 
-def test_delete_repo_flat_pass_has_no_exchange(spark, corpus_rows, tmp_path):
-    """VERDICT r2 #7: the flat-postings survivor pass must be narrow —
-    no repartition/Exchange before the partitioned rewrite."""
-    from searchengine_spark.index.maintain import flat_survivors
+def test_delete_repo_runs_pass_has_no_exchange(spark, corpus_rows, tmp_path):
+    """VERDICT r2 #7: the runs keep-or-reencode pass of a physical purge
+    must be narrow — no repartition/Exchange before the partitioned
+    rewrite."""
+    from searchengine_spark.index.maintain import _kept_runs
 
     live = _build(spark, corpus_rows[:15], tmp_path / "live")
-    df = flat_survivors(
-        spark, os.path.join(live, "stage1_postings"), corpus_rows[0][0]
-    )
+    df = _kept_runs(spark, live, CFG.block_size, [(0, 4)])
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "Exchange" not in plan
+    assert "MapInPandas" in plan and "Exchange" not in plan
 
 
 def test_mutation_invalidates_resume_checkpoints(spark, corpus_rows, tmp_path):
@@ -392,35 +420,29 @@ def test_reindex_lookups_are_metadata_cheap(spark, corpus_rows, tmp_path):
     """VERDICT r3 #2: the per-doc lookups reindex_doc runs BEFORE any
     rewrite work are pure driver-side pyarrow reads (no Spark job) —
     `_lookup_doc` resolves (repo, path) via pruned parquet reads and
-    the new-doc id comes from meta.json's max_doc_id high-water mark
-    (with a footer-statistics fallback for pre-hwm indexes)."""
+    the new-doc id comes from meta.json's max_doc_id high-water mark."""
     import inspect
     import json
 
-    from searchengine_spark.index.maintain import (
-        _lookup_doc,
-        _max_doc_id_from_footers,
-    )
+    from searchengine_spark.index.maintain import _lookup_doc
 
     rows = corpus_rows[:30]
     live = _build(spark, rows, tmp_path / "live")
-    # the helpers take no SparkSession at all — structurally job-free
+    # the helper takes no SparkSession at all — structurally job-free
     assert "spark" not in inspect.signature(_lookup_doc).parameters
-    assert "spark" not in inspect.signature(_max_doc_id_from_footers).parameters
 
     repo, path = rows[3][0], rows[3][1]
     row = _lookup_doc(live, repo, path)
     assert row is not None and row["repo"] == repo and row["path"] == path
     assert "content" not in row  # wide column never read
+    assert row["terms"] and "tfs" not in row  # old terms only
     assert _lookup_doc(live, repo, "no/such/path.py") is None
 
     with open(os.path.join(live, "meta.json")) as f:
         meta = json.load(f)
     n_docs = meta["n_docs"]
-    # builder records the dense-rank high-water mark...
+    # builder records the dense-rank high-water mark
     assert meta["max_doc_id"] == n_docs - 1
-    # ...which equals the footer-statistics fallback
-    assert _max_doc_id_from_footers(live) == n_docs - 1
 
     # a new doc advances the hwm without scanning doc_stats
     rec = reindex_doc(
@@ -439,25 +461,36 @@ def test_reindex_lookups_are_metadata_cheap(spark, corpus_rows, tmp_path):
     assert meta3["max_doc_id"] == n_docs
 
 
-def test_reindex_on_pre_hwm_meta_uses_footer_fallback(spark, corpus_rows, tmp_path):
-    """An index whose meta.json predates max_doc_id still assigns
-    max+1 to a new doc — via parquet footer statistics, not a scan."""
+def test_maintenance_rejects_v1_index(spark, corpus_rows, tmp_path):
+    """A meta.json of any format but v2 (e.g. a v1 index: no sum_dl, no
+    forward index in doc_stats) is refused by every maintenance entry
+    point before it writes anything."""
     import json
+
+    from searchengine_spark.index.maintain import compact
 
     rows = corpus_rows[:20]
     live = _build(spark, rows, tmp_path / "live")
     mp = os.path.join(live, "meta.json")
     with open(mp) as f:
         meta = json.load(f)
-    n_docs = meta["n_docs"]
-    meta.pop("max_doc_id")
+    meta["format"] = "searchengine_spark/v1"
+    for key in ("sum_dl", "max_doc_id"):
+        meta.pop(key)
     with open(mp, "w") as f:
         json.dump(meta, f)
-    rec = reindex_doc(
-        spark, live, repo=rows[0][0], path="src/fallback.py",
-        content="fallbacktoken beta",
-    )
-    assert rec["new_doc"] and rec["doc_id"] == n_docs
+    before = _file_snapshot(live, ["postings", "doc_stats", "term_stats", "term_repo_stats"])
+    calls = [
+        lambda: reindex_doc(spark, live, rows[0][0], "src/v1.py", "v1token"),
+        lambda: delete_repo(spark, live, rows[0][0]),
+        lambda: compact(spark, live),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="searchengine_spark/v2"):
+            call()
+    assert _file_snapshot(
+        live, ["postings", "doc_stats", "term_stats", "term_repo_stats"]
+    ) == before
 
 
 def test_live_engine_survives_mutation_via_retry_and_refresh(
@@ -521,9 +554,8 @@ def test_snippets_on_contentless_index_via_pushdown_fallback(
 # ---------------------------------------------------------------------------
 
 def _file_snapshot(index_dir, rels):
-    """{relpath: (mtime, size)} of every DATA file (markers/checksum
-    sidecars excluded — the sentinel upsert legitimately drops a stale
-    .crc)."""
+    """{relpath: (mtime, size)} of every DATA file (markers and checksum
+    sidecars excluded)."""
     out = {}
     for rel in rels:
         base = os.path.join(index_dir, rel)
@@ -561,7 +593,7 @@ def test_delete_repo_tombstone_is_metadata_cheap_and_excludes(
     repos = sorted({r[0] for r in rows})
     victim = repos[0]
     live = _build(spark, rows, tmp_path / "live")
-    heavy = ["stage1_postings", "postings", "term_stats"]
+    heavy = ["postings", "term_stats"]
     before = _file_snapshot(live, heavy)
     rec = delete_repo(spark, live, victim)
     assert rec["mode"] == "tombstone"
@@ -596,7 +628,7 @@ def test_delete_repo_tombstone_is_metadata_cheap_and_excludes(
 
 def test_tombstone_compact_equals_eager_delete(spark, corpus_rows, tmp_path):
     """compact() applies accumulated tombstones with output content-
-    identical to eager deletes of the same repos — encoded runs, flat
+    identical to eager deletes of the same repos — encoded runs, decoded
     postings, both stats relations, and the refreshed meta scalars."""
     import json
 
@@ -618,6 +650,7 @@ def test_tombstone_compact_equals_eager_delete(spark, corpus_rows, tmp_path):
     assert _encoded_runs(spark, a) == _encoded_runs(spark, b)
     assert _postings_by_doc(spark, a) == _postings_by_doc(spark, b)
     assert _term_stats(spark, a) == _term_stats(spark, b)
+    assert _term_repo_stats(spark, a) == _term_repo_stats(spark, b)
     ma = json.load(open(os.path.join(a, "meta.json")))
     mb = json.load(open(os.path.join(b, "meta.json")))
     assert "tombstones" not in ma
@@ -705,18 +738,12 @@ def test_reindex_writes_bounded_by_touched_partitions(
     spark, corpus_rows, tmp_path
 ):
     """The file set rewritten by ONE reindex_doc is bounded by the
-    affected term buckets (flat postings, encoded runs, term_stats,
-    term_repo_stats — all partition-dir swaps), the sentinel upsert
-    (<= 1 rewritten file + 1 appended), and one doc_stats partition —
-    never a full-relation rewrite, independent of corpus size."""
-    from searchengine_spark.index.builder import DOC_ROW_BUCKET
-
+    affected term buckets (encoded runs, term_stats, term_repo_stats —
+    all partition-dir swaps) and one doc_stats partition — never a
+    full-relation rewrite, independent of corpus size."""
     rows = corpus_rows[:40]
     live = _build(spark, rows, tmp_path / "live")
-    rels = [
-        "stage1_postings", "postings", "term_stats",
-        "term_repo_stats", "doc_stats",
-    ]
+    rels = ["postings", "term_stats", "term_repo_stats", "doc_stats"]
     before = _file_snapshot(live, rels)
     target = rows[7]
     rec = reindex_doc(
@@ -728,35 +755,23 @@ def test_reindex_writes_bounded_by_touched_partitions(
     }
     assert changed, "reindex must write something"
     allowed_buckets = {f"bucket={b}" for b in rec["buckets_rewritten"]}
-    sentinel = f"bucket={DOC_ROW_BUCKET}"
     for f in sorted(changed):
         rel, _, rest = f.partition(os.sep)
         sub = rest.split(os.sep, 1)[0] if rest else ""
-        if rel in ("stage1_postings", "postings", "term_stats", "term_repo_stats"):
-            ok = sub in allowed_buckets or (
-                rel == "stage1_postings" and sub == sentinel
-            )
-            assert ok, f"unexpected rewrite outside touched buckets: {f}"
+        if rel in ("postings", "term_stats", "term_repo_stats"):
+            assert sub in allowed_buckets, f"unexpected rewrite outside touched buckets: {f}"
         elif rel == "doc_stats":
             assert sub == f"ds_part={rec['doc_id'] % CFG.doc_stats_parts}", f
         else:
             raise AssertionError(f"unexpected relation touched: {f}")
-    sent_changed = [
-        f for f in changed if f.startswith(f"stage1_postings{os.sep}{sentinel}")
-    ]
-    assert len(sent_changed) <= 2  # one rewritten holder + one appended
 
 
 def _assert_term_sorted_files(index_dir, rel):
     import pyarrow.parquet as pq
 
-    from searchengine_spark.index.builder import DOC_ROW_BUCKET
-
     checked = 0
     base = os.path.join(index_dir, rel)
     for root, _dirs, files in os.walk(base):
-        if f"bucket={DOC_ROW_BUCKET}" in root:
-            continue  # doclen sentinels (term="") live outside the invariant
         for fn in files:
             if not fn.endswith(".parquet"):
                 continue
@@ -771,8 +786,8 @@ def _assert_term_sorted_files(index_dir, rel):
 def test_postings_stay_term_sorted_after_reindex(spark, corpus_rows, tmp_path):
     """ADVICE r4 (medium): maintenance must preserve the term-sorted-
     file invariant that J2/_match_stats row-group pruning relies on —
-    in the rewritten flat buckets AND the re-encoded runs (the fresh-
-    build-only fixture test cannot catch a drift here)."""
+    in the rewritten runs buckets (the fresh-build-only fixture test
+    cannot catch a drift here)."""
     rows = corpus_rows[:40]
     live = _build(spark, rows, tmp_path / "live")
     target = rows[11]
@@ -781,73 +796,41 @@ def test_postings_stay_term_sorted_after_reindex(spark, corpus_rows, tmp_path):
         target[4] + "\nsortinvariant probe tokens",
     )
     _assert_term_sorted_files(live, "postings")
-    _assert_term_sorted_files(live, "stage1_postings")
 
 
 # ---------------------------------------------------------------------------
-# maintenance hygiene: id high-water mark, crash-safe sentinel rewrite,
-# builder-shaped stats writes
+# maintenance hygiene: corpus scalars under tombstones, builder-shaped
+# stats writes
 # ---------------------------------------------------------------------------
 
-def test_pre_hwm_fallback_never_reuses_tombstoned_ids(spark, corpus_rows, tmp_path):
-    """On an index whose meta.json lacks max_doc_id, a new doc's id must
-    clear every tombstone too: tombstone-mode delete_repo purges the
-    repo's doc_stats rows, so the footer statistics alone would hand
-    out an id inside the deleted range, and the new doc would be masked
-    on every query path."""
+def test_reindex_after_tombstone_keeps_pre_delete_n_docs(spark, corpus_rows, tmp_path):
+    """Tombstoned docs keep counting in the corpus scalars until
+    compact(), so the first reindex_doc of a new doc after a tombstone
+    moves n_docs from its pre-delete value by exactly 1 (and sum_dl by
+    the new doc's length) — it must not recount doc_stats, which no
+    longer holds the tombstoned docs.  The new id clears the tombstone."""
     import json
 
     rows = _multi_repo_subset(corpus_rows)
     repos = sorted({r[0] for r in rows})
     live = _build(spark, rows, tmp_path / "live")
-    delete_repo(spark, live, repos[-1])  # rank order: the top id block
     mp = os.path.join(live, "meta.json")
     with open(mp) as f:
-        meta = json.load(f)
-    hi = meta["tombstones"][0]["hi"]
-    assert hi == len(rows) - 1
-    meta.pop("max_doc_id")
-    with open(mp, "w") as f:
-        json.dump(meta, f)
-
+        before = json.load(f)
+    delete_repo(spark, live, repos[-1])  # rank order: the top id block
     rec = reindex_doc(
         spark, live, repo=repos[0], path="src/after_tombstone.py",
         content="posttombstonemarker alpha",
     )
-    assert rec["new_doc"] and rec["doc_id"] > hi
+    with open(mp) as f:
+        after = json.load(f)
+    assert rec["new_doc"] and rec["doc_id"] == before["max_doc_id"] + 1
+    assert after["n_docs"] == before["n_docs"] + 1
+    assert after["sum_dl"] == before["sum_dl"] + sum(
+        _analyzed("posttombstonemarker alpha").values()
+    )
     eng = SearchEngine(spark, live)
     assert eng.search("posttombstonemarker", limit=5)["count"] == 1
-
-
-def test_sentinel_upsert_crash_keeps_visible_rows(
-    spark, corpus_rows, tmp_path, monkeypatch
-):
-    """A crash between writing the rewritten sentinel holder and
-    swapping it in must leave readers the old rows only: the temp file
-    has a name both Spark and pyarrow dataset discovery skip."""
-    import pyarrow.dataset as pads
-
-    from searchengine_spark.index.builder import DOC_ROW_BUCKET
-    from searchengine_spark.index.maintain import _upsert_sentinel
-
-    live = _build(spark, corpus_rows[:15], tmp_path / "live")
-    sdir = os.path.join(live, "stage1_postings", f"bucket={DOC_ROW_BUCKET}")
-
-    def visible():
-        rows = pads.dataset(sdir, format="parquet").to_table().to_pylist()
-        return sorted(rows, key=lambda r: r["doc_id"])
-
-    before = visible()
-
-    def crash(*_a, **_kw):
-        raise OSError("crash before the swap")
-
-    monkeypatch.setattr(os, "replace", crash)
-    with pytest.raises(OSError):
-        _upsert_sentinel(live, 3, 99, corpus_rows[0][0])
-    monkeypatch.undo()
-    assert visible() == before
-    assert spark.read.parquet(sdir).count() == len(before)
 
 
 def test_reindex_stats_writes_keep_builder_file_count(spark, corpus_rows, tmp_path):

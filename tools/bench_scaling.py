@@ -16,7 +16,7 @@ to ``BENCH/scaling_runs.json``, and regenerates ``BENCH/BASELINE.md``
 never leaves stale hand-written claims behind).
 
 The measured job is the full two-stage index build (scan -> Arrow
-analyze UDF -> bucket-partitioned flat postings -> salted sort-merge
+analyze UDF -> doc_stats forward index -> explode -> salted sort-merge
 shuffle -> block encode).  The corpus is the deterministic synthetic
 code corpus (``generate_corpus_distributed`` — executor-side
 counter-based hashing, bit-identical at any parallelism), written to

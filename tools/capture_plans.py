@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import io
+import re
 import shutil
 import sys
 from contextlib import redirect_stdout
@@ -42,7 +43,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from searchengine_spark import IndexConfig, get_spark
-    from searchengine_spark.index.builder import DOC_ROW_BUCKET, build_index
+    from searchengine_spark.index.builder import (
+        build_index,
+        doc_postings,
+        encoder_input,
+        shuffle_partitions,
+    )
     from searchengine_spark.operators.dedup import lsh_candidate_pairs
     from searchengine_spark.query.engine import COUNT_SCHEMA, SearchEngine, _count_salt
     from searchengine_spark.sources.corpus import generate_corpus
@@ -88,19 +94,26 @@ def main() -> None:
         ["PushedFilters", "PartitionFilters", "FlatMapGroupsInPandas"],
     ))
 
-    doclens = (
-        spark.read.parquet(f"{idx}/stage1_postings")
-        .where(F.col("bucket") == DOC_ROW_BUCKET)
-        .select("doc_id", "dl")
+    stage2 = encoder_input(
+        doc_postings(spark, idx, eng.cfg.n_buckets), eng.cfg.n_salts,
+        shuffle_partitions(spark),
+    )
+    s2text = fmt(stage2)
+    assert re.search(r"hashpartitioning\(term#\d+, salt#\d+", s2text), (
+        "stage-2 input lost its (term, salt) shuffle"
+    )
+    assert "content" not in s2text.split("ReadSchema:", 1)[1].split("\n", 1)[0], (
+        "stage-2 input reads doc_stats' content column"
     )
     plans.append((
-        "doclen sentinel read (stage-1 doc_stats input)",
-        "The doclen carrier rows live in their own hive partition "
-        "(bucket=-1): PartitionFilters reduce this scan to n_docs tiny "
-        "rows — the round-2 replacement for a groupBy shuffle over the "
-        "whole postings relation.",
-        fmt(doclens),
-        ["PartitionFilters"],
+        "stage-2 input (doc_stats forward index -> block encoder)",
+        "Stage 2 reads only doc_stats' narrow columns (doc_id, doclen, "
+        "terms, tfs — never content), explodes each doc's forward index "
+        "into postings in one Generate, and shuffles once — an Exchange "
+        "hashpartitioning on (term, salt) — so every run arrives "
+        "contiguous and doc-sorted for the encoder.",
+        s2text,
+        ["Generate", "Exchange", "hashpartitioning(term"],
     ))
 
     corpus_path = "/tmp/plans_corpus"
