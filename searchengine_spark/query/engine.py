@@ -23,6 +23,13 @@ this):
   pruned scan, per-salt top-k merged by a final tiny sort.  The scale
   path; counts above the cap run here too.
 
+The rest of a request is driver-side too: the term dictionary, repo
+scopes and the page's doc rows are pruned pyarrow reads of the index,
+and on a ``store_content=False`` index the snippet content is fetched
+from a parquet ``meta["source"]`` the same way.  With ``engine="local"``
+a ``search()`` runs no Spark job; Spark serves only a source that is a
+catalog (Iceberg) table name.
+
 Semantics (``mode``):
 
 - ``"and"``  — reference parity: conjunctive intersection, Σtf absolute
@@ -40,6 +47,7 @@ from functools import partial
 import numpy as np
 import pandas as pd
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.config import IndexConfig
@@ -48,7 +56,7 @@ from searchengine_spark.index.maintain import tombstone_exclude
 from searchengine_spark.operators.wand import ExcludeSet, TermRuns, score_salt_group
 from searchengine_spark.plans.planner import PlannedQuery, bm25_idf, plan_query
 from searchengine_spark.query.snippets import build_snippet
-from searchengine_spark.sources.corpus import load_corpus
+from searchengine_spark.sources.corpus import is_path_source, load_corpus
 
 RESULT_SCHEMA = "doc_id long, bm25 double, tf_sum long"
 COUNT_SCHEMA = "total long, max_tf long"
@@ -61,6 +69,13 @@ ENGINES = ("local", "wand")
 #: count (a head term at 10^12-doc scale must never be pulled onto the
 #: driver)
 LOCAL_COUNT_MAX_DF = 5_000_000
+
+
+def _empty_result(spark: SparkSession) -> DataFrame:
+    """A zero-row ``RESULT_SCHEMA`` frame whose ``collect`` runs no
+    Spark job: a limit-0 local relation (``createDataFrame([])`` and a
+    zero-row pandas frame each launch one job)."""
+    return spark.createDataFrame([(0, 0.0, 0)], RESULT_SCHEMA).limit(0)
 
 
 def _runs_by_salt(columns: dict) -> dict[int, dict[str, list[dict]]]:
@@ -139,13 +154,14 @@ class SearchEngine:
         #: repo per engine instance; the distributed scorer ships the
         #: handle in its closure, not the array — VERDICT r3 #6)
         self._repo_ids_bc_cache: dict[str, "object"] = {}
-        #: pyarrow.dataset objects memoized per relation: dataset
-        #: discovery re-lists the directory tree on every construction,
-        #: which the p50 path would otherwise pay per request.  An
-        #: engine instance is a read snapshot of the index — after a
-        #: maintenance mutation call :meth:`refresh` (reads that race a
-        #: dir swap additionally self-heal: _read_table retries once on
-        #: FileNotFoundError).
+        #: pyarrow.dataset objects memoized per path (the index
+        #: relations and a parquet corpus source): dataset discovery
+        #: re-lists the directory tree on every construction, which the
+        #: p50 path would otherwise pay per request.  An engine instance
+        #: is a read snapshot of the index — after a maintenance
+        #: mutation (or a rewrite of the source) call :meth:`refresh`
+        #: (reads that race a dir swap additionally self-heal:
+        #: _read_table retries once on FileNotFoundError).
         self._pads_cache: dict[str, "object"] = {}
         #: the last driver-side runs read as (term set, rows by salt and
         #: term): search() runs the top-k and then the count over the
@@ -153,39 +169,43 @@ class SearchEngine:
         #: read costs several times the decode
         self._last_runs: tuple = (None, {})
 
-    def _dataset(self, rel: str, hive: bool = False):
-        """Memoized pyarrow dataset over an index relation dir."""
-        key = f"{rel}:{hive}"
-        if key not in self._pads_cache:
+    def _rel(self, name: str) -> str:
+        return os.path.join(self.index_dir, name)
+
+    def _dataset(self, path: str):
+        """Memoized pyarrow dataset over a parquet dir: hive discovery
+        exposes partition keys (``bucket=``, ``ds_part=``, a source's
+        ``repo=``) as columns, and the default ``_``/``.`` prefix
+        exclusion skips ``_SUCCESS`` markers and ``.crc`` sidecars."""
+        if path not in self._pads_cache:
             import pyarrow.dataset as pads
 
-            kwargs = {"format": "parquet"}
-            if hive:
-                kwargs["partitioning"] = "hive"
-            self._pads_cache[key] = pads.dataset(
-                os.path.join(self.index_dir, rel), **kwargs
+            self._pads_cache[path] = pads.dataset(
+                path, format="parquet", partitioning="hive"
             )
-        return self._pads_cache[key]
+        return self._pads_cache[path]
 
-    def _read_table(self, rel: str, hive: bool = False, **kw):
+    def _read_table(self, path: str, **kw):
         """``to_table`` over the memoized dataset, with ONE retry on
         FileNotFoundError: maintenance (index/maintain.py) swaps
-        relation dirs via rename, so a memoized dataset can point at
-        vanished part files.  The retry rebuilds the dataset against
-        the swapped-in files; callers that also hold stale *scalar*
-        caches (meta, repo scopes) should call :meth:`refresh`."""
+        relation dirs via rename, and a source rewrite replaces its
+        part files, so a memoized dataset can point at vanished files.
+        The retry rebuilds the dataset against the current files;
+        callers that also hold stale *scalar* caches (meta, repo
+        scopes) should call :meth:`refresh`."""
         try:
-            return self._dataset(rel, hive=hive).to_table(**kw)
+            return self._dataset(path).to_table(**kw)
         except FileNotFoundError:
-            self._pads_cache.pop(f"{rel}:{hive}", None)
-            return self._dataset(rel, hive=hive).to_table(**kw)
+            self._pads_cache.pop(path, None)
+            return self._dataset(path).to_table(**kw)
 
     def refresh(self) -> None:
-        """Drop every memoized view of the index (pyarrow datasets, the
-        last runs read, repo scopes, meta scalars, tombstone vector) and re-read
-        meta.json — call on a live engine after a maintenance mutation
-        (delete_repo / reindex_doc) instead of constructing a new
-        SearchEngine."""
+        """Drop every memoized view of the index (pyarrow datasets of
+        the index and the corpus source, the last runs read, repo
+        scopes, meta scalars, tombstone vector) and re-read meta.json —
+        call on a live engine after a maintenance mutation (delete_repo
+        / reindex_doc) or a source rewrite instead of constructing a
+        new SearchEngine."""
         self._pads_cache.clear()
         self._last_runs = (None, {})
         self._repo_scope_cache.clear()
@@ -225,10 +245,10 @@ class SearchEngine:
 
         if not terms:
             return {}
-        # hive=True: term_stats is bucket-partitioned (bucket is the
-        # dir key, exposed by hive discovery)
+        # term_stats is bucket-partitioned (bucket is the dir key,
+        # exposed by hive discovery)
         tbl = self._read_table(
-            "term_stats", hive=True,
+            self._rel("term_stats"),
             filter=pads.field("term").isin(terms),
             columns=["term", "df", "cf", "bucket"],
         )
@@ -257,7 +277,7 @@ class SearchEngine:
             import pyarrow.dataset as pads
 
             tbl = self._read_table(
-                "doc_stats", hive=True,
+                self._rel("doc_stats"),
                 filter=pads.field("repo") == repo, columns=["doc_id", "doclen"],
             )
             n = tbl.num_rows
@@ -294,7 +314,7 @@ class SearchEngine:
             & (pads.field("repo") == repo)
         )
         tbl = self._read_table(
-            "term_repo_stats", hive=True, filter=filt, columns=["term", "df"]
+            self._rel("term_repo_stats"), filter=filt, columns=["term", "df"]
         )
         return dict(zip(tbl["term"].to_pylist(), (int(x) for x in tbl["df"].to_pylist())))
 
@@ -357,7 +377,7 @@ class SearchEngine:
             planned if planned is not None else self.plan(query, repo)
         )
         if not plan.ordered or (mode == "and" and plan.empty):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _empty_result(self.spark)
         kernel = partial(
             _score_salt,
             idfs=self._idf_map(plan, n_docs),
@@ -370,9 +390,9 @@ class SearchEngine:
         if engine == "wand":
             per_salt = self._spark_salts(plan, repo, kernel, RESULT_SCHEMA)
             return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
-        outs = self._local_salts(plan, repo, kernel)
+        outs = [o for o in self._local_salts(plan, repo, kernel) if o["doc_id"].size]
         if not outs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _empty_result(self.spark)
         top = pd.DataFrame(
             {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
         ).sort_values(["bm25", "doc_id"], ascending=[False, True], kind="mergesort")
@@ -413,7 +433,7 @@ class SearchEngine:
         if self._last_runs[0] != terms:
             buckets = sorted({self._bucket_of(t) for t in terms})
             filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
-            tbl = self._read_table("postings", hive=True, filter=filt)
+            tbl = self._read_table(self._runs_path, filter=filt)
             self._last_runs = (terms, _runs_by_salt(
                 {c: tbl[c].to_numpy(zero_copy_only=False) for c in tbl.column_names}
             ))
@@ -606,16 +626,19 @@ class SearchEngine:
         return int(row[0] or 0), int(row[1] or 0)
 
     @staticmethod
-    def _doc_keys_condition(metas: list[dict]):
-        """OR-of-(repo ∧ path) conjunctions over k result rows: pushes
-        down on BOTH plain columns, so the parquet reader prunes row
-        groups instead of scanning the corpus — a computed concat_ws
-        key would defeat pushdown and turn every store_content=False
-        snippet fetch into a full 100 TB scan (VERDICT r3 #3;
-        plan-asserted in tools/capture_plans.py)."""
+    def _doc_keys_condition(metas: list[dict], col):
+        """OR-of-(repo ∧ path) conjunctions over k result rows, built
+        with ``col`` (``pyarrow.dataset.field`` for a parquet source,
+        ``F.col`` for a catalog table): it pushes down on BOTH plain
+        columns, so the reader prunes partition dirs on ``repo`` and row
+        groups on their statistics instead of scanning the corpus — a
+        computed concat_ws key would defeat pushdown and turn every
+        store_content=False snippet fetch into a full 100 TB scan
+        (VERDICT r3 #3; the Spark plan is asserted in
+        tools/capture_plans.py)."""
         cond = None
         for m in metas:
-            c = (F.col("repo") == m["repo"]) & (F.col("path") == m["path"])
+            c = (col("repo") == m["repo"]) & (col("path") == m["path"])
             cond = c if cond is None else cond | c
         return cond
 
@@ -628,35 +651,66 @@ class SearchEngine:
         hash into, then row-group statistics on doc_id prune within
         them; no Spark job on the p50 path.  Explicit columns: the
         forward index (``terms``/``tfs``) is never read, and
-        ``need_content=False`` also skips the wide content column."""
+        ``need_content=False`` also skips the wide content column.
+
+        On a ``store_content=False`` index the content comes from
+        ``meta["source"]`` (:meth:`_source_content`); a row missing
+        there gets empty content (an empty snippet)."""
         import pyarrow.dataset as pads
 
         cols = ["doc_id", "repo", "path", "commit", "lang", "doclen", "content_sha256"]
-        if need_content and "content" in self._dataset("doc_stats", hive=True).schema.names:
+        if need_content and "content" in self._dataset(self._rel("doc_stats")).schema.names:
             cols.append("content")
         parts = sorted({d % self.cfg.doc_stats_parts for d in doc_ids})
         filt = pads.field("ds_part").isin(parts) & pads.field("doc_id").isin(doc_ids)
-        tbl = self._read_table("doc_stats", hive=True, filter=filt, columns=cols)
+        tbl = self._read_table(self._rel("doc_stats"), filter=filt, columns=cols)
         out = {int(m["doc_id"]): m for m in tbl.to_pylist()}
         if not need_content:
             return out
         if out and "content" in next(iter(out.values())):
             return out  # built with store_content=True
         src = self.meta.get("source")
-        if src and out:
+        if not (src and out):
+            return out
+        by_key = self._source_content(src, list(out.values()))
+        for m in out.values():
+            m["content"] = by_key.get((m["repo"], m["path"]), "")
+        return out
+
+    def _source_content(self, src: str, metas: list[dict]) -> dict[tuple, str]:
+        """{(repo, path): content} of the ``metas`` rows in the corpus
+        source.  A parquet path is read driver-side through the memoized
+        pyarrow dataset — no Spark job; only a catalog (Iceberg) table
+        name goes through Spark.  A source that is gone or never was a
+        table — a deleted path, a missing table, a label such as
+        ``"fixture"`` — gives no rows; any other error raises."""
+        if is_path_source(src):
+            import pyarrow.dataset as pads
+
+            try:
+                tbl = self._read_table(
+                    src,
+                    filter=self._doc_keys_condition(metas, pads.field),
+                    columns=["repo", "path", "content"],
+                )
+            except FileNotFoundError:
+                return {}
+            rows = zip(*(tbl[c].to_pylist() for c in ("repo", "path", "content")))
+        else:
             try:
                 corpus = load_corpus(self.spark, src)
-                crows = corpus.where(
-                    self._doc_keys_condition(list(out.values()))
-                ).select(
-                    "repo", "path", "content"
-                ).collect()
-                by_key = {(r["repo"], r["path"]): r["content"] for r in crows}
-                for m in out.values():
-                    m["content"] = by_key.get((m["repo"], m["path"]), "")
-            except Exception:
-                pass
-        return out
+            except ParseException:  # a label such as "scaling-N"
+                return {}
+            except AnalysisException as e:
+                if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                    raise
+                return {}
+            rows = (
+                corpus.where(self._doc_keys_condition(metas, F.col))
+                .select("repo", "path", "content")
+                .collect()
+            )
+        return {(repo, path): content for repo, path, content in rows}
 
     # ------------------------------------------------------------------
     # statistics (reference GET /api/statistics,

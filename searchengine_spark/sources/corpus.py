@@ -210,13 +210,21 @@ def generate_corpus_distributed(
     )
 
 
+def is_path_source(source: str) -> bool:
+    """True when ``source`` is a parquet path, False when it is a
+    catalog (Iceberg) table name — the one rule every reader of a
+    corpus source goes by."""
+    return "/" in source or source.endswith(".parquet")
+
+
 def load_corpus(spark: SparkSession, source: str) -> DataFrame:
-    """Load the corpus table: Iceberg table name or parquet path.
+    """Load the corpus table: Iceberg table name or parquet path
+    (:func:`is_path_source`).
 
     Column pruning/pushdown happen downstream; this returns the raw
     5-column relation (extra columns are dropped).
     """
-    if "/" in source or source.endswith(".parquet"):
+    if is_path_source(source):
         df = spark.read.parquet(source)
     else:
         df = spark.read.table(source)

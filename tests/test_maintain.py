@@ -528,7 +528,7 @@ def test_snippets_on_contentless_index_via_pushdown_fallback(
     """store_content=False (the production layout): snippet fetch falls
     back to the source corpus through _doc_keys_condition — an OR of
     (repo ∧ path) conjunctions that pushes down on both columns
-    (VERDICT r3 #3; plan-asserted in tools/capture_plans.py).  The
+    (VERDICT r3 #3); a parquet source is read through pyarrow.  The
     response must still carry highlighted snippets."""
     rows = corpus_rows[:30]
     src = str(tmp_path / "corpus_src")

@@ -6,6 +6,8 @@ pre-pagination counts on both executors, pagination, guards
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.conftest import CFG
@@ -292,9 +294,9 @@ def test_search_reads_runs_once_for_topk_and_count(spark, index_dir, monkeypatch
     reads = []
     read_table = eng._read_table  # noqa: SLF001
 
-    def counting(rel, *a, **kw):
-        reads.append(rel)
-        return read_table(rel, *a, **kw)
+    def counting(path, *a, **kw):
+        reads.append(os.path.basename(path))
+        return read_table(path, *a, **kw)
 
     monkeypatch.setattr(eng, "_read_table", counting)
     first = eng.search("index search", limit=3, engine="local")
@@ -419,7 +421,7 @@ def test_match_stats_scan_is_row_group_pruned(engine):
     info = engine.term_info(terms)
     assert terms[0] in info
     buckets = sorted({info[t][2] for t in terms})
-    ds = engine._dataset("postings", hive=True)  # noqa: SLF001
+    ds = engine._dataset(engine._rel("postings"))  # noqa: SLF001
 
     all_frags = list(ds.get_fragments())
     filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)

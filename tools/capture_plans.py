@@ -51,7 +51,7 @@ def main() -> None:
     )
     from searchengine_spark.operators.dedup import lsh_candidate_pairs
     from searchengine_spark.query.engine import COUNT_SCHEMA, SearchEngine, _count_salt
-    from searchengine_spark.sources.corpus import generate_corpus
+    from searchengine_spark.sources.corpus import generate_corpus, load_corpus
 
     spark = get_spark(cores=8)
     idx = "/tmp/plans_index"
@@ -116,30 +116,39 @@ def main() -> None:
         ["Generate", "Exchange", "hashpartitioning(term"],
     ))
 
+    # a catalog table over a parquet dir: the source kind whose snippet
+    # fetch still goes through Spark (a parquet path is read by pyarrow)
     corpus_path = "/tmp/plans_corpus"
     shutil.rmtree(corpus_path, ignore_errors=True)
     docs.write.parquet(corpus_path)
-    fallback = spark.read.parquet(corpus_path).where(
+    spark.read.parquet(corpus_path).createOrReplaceTempView("plans_corpus")
+    fetch = load_corpus(spark, "plans_corpus").where(
         SearchEngine._doc_keys_condition(
             [
                 {"repo": "repo-001", "path": "src/file_001.py"},
                 {"repo": "repo-002", "path": "src/file_002.py"},
-            ]
+            ],
+            F.col,
         )
     ).select("repo", "path", "content")
+    ftext = fmt(fetch)
+    pushed = ftext.split("PushedFilters", 1)[1].split("\n", 1)[0]
+    assert "repo" in pushed and "path" in pushed, (
+        "catalog-table snippet fetch lost repo/path pushdown"
+    )
     plans.append((
-        "snippet corpus-fallback fetch (J4 on a store_content=False index)",
-        "The k result rows' (repo, path) keys reach the corpus reader "
-        "as an OR of per-column conjunctions — PushedFilters on repo "
-        "AND path, so the reader prunes row groups instead of scanning "
-        "the corpus (a computed concat_ws key would push nothing).",
-        fmt(fallback),
+        "snippet fetch from a catalog-table source (J4 on a "
+        "store_content=False index)",
+        "Only a source named as a catalog (Iceberg) table is fetched "
+        "through Spark; a parquet-path source is read driver-side by "
+        "pyarrow with the same filter.  The k result rows' (repo, path) "
+        "keys reach the table scan as an OR of per-column conjunctions "
+        "— PushedFilters on repo AND path, so the reader prunes row "
+        "groups instead of scanning the corpus (a computed concat_ws "
+        "key would push nothing).",
+        ftext,
         ["PushedFilters"],
     ))
-    ftext = fmt(fallback)
-    assert "repo" in ftext.split("PushedFilters", 1)[1].split("\n", 1)[0] and (
-        "path" in ftext.split("PushedFilters", 1)[1].split("\n", 1)[0]
-    ), "corpus-fallback lost repo/path pushdown"
 
     lsh = lsh_candidate_pairs(
         docs.select(F.col("path").alias("doc_id_str"), "content")
