@@ -149,7 +149,7 @@ def main() -> None:
     lat_ms: list[float] = []
     for mode, q in QUERY_SET:
         t0 = time.time()
-        eng.search(q, limit=10, mode=mode, engine="local", with_snippets=False)
+        eng.search(q, limit=10, mode=mode, with_snippets=False)
         lat_ms.append((time.time() - t0) * 1000.0)
     lat_ms.sort()
     p50 = lat_ms[len(lat_ms) // 2]

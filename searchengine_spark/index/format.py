@@ -41,10 +41,6 @@ from searchengine_spark.functions.codec import (
     varint_encode,
 )
 
-POSTINGS_FLAT_SCHEMA = (
-    "term string, doc_id long, tf int, dl int, bucket int"
-)
-
 POSTING_RUN_SCHEMA = (
     "term string, salt int, df_run long, cf_run long, n_blocks int, block_len int, "
     "block_first array<long>, block_last array<long>, "
@@ -559,19 +555,3 @@ def encode_partition_arrow(batches, block_size: int):
         if out is not None:
             yield out
 
-
-def encode_run_pdf(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """applyInPandas kernel: one (term, salt) group -> one encoded row.
-
-    Sorts by doc_id (the shuffle delivers the group unsorted), encodes
-    blocks, returns a single-row frame matching POSTING_RUN_SCHEMA.
-    """
-    pdf = pdf.sort_values("doc_id", kind="mergesort")
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.uint64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["dl"].to_numpy(dtype=np.int64)
-    enc = encode_blocks(doc_ids, tfs, dls, block_size)
-    enc["term"] = pdf["term"].iloc[0]
-    enc["salt"] = int(pdf["salt"].iloc[0])
-    enc["bucket"] = int(pdf["bucket"].iloc[0])
-    return pd.DataFrame([enc])

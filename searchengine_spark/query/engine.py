@@ -13,22 +13,24 @@ scope (doc-id range or id array) and the tombstone ``ExcludeSet`` are
 applied by ``TermRuns`` as runs are decoded.
 
 Two executors run the kernels, with identical results (tests assert
-this):
+this).  The query decides which, never the caller: :func:`_runs_on_driver`
+compares the query terms' summed global df with :data:`LOCAL_MAX_DF`,
+and the top-k and the count of a request follow the same answer.
 
-- ``engine="local"`` — a driver loop over a pruned pyarrow read.  No
-  Spark job: the p50-latency path for interactive queries (SURVEY.md
-  §7.2 "Latency").  Counts use it while the query terms' summed df stays
-  within ``LOCAL_COUNT_MAX_DF``.
-- ``engine="wand"`` — ``groupBy("salt").applyInPandas`` over the same
-  pruned scan, per-salt top-k merged by a final tiny sort.  The scale
-  path; counts above the cap run here too.
+- At or under the cap — a driver loop over a pruned pyarrow read
+  (:meth:`SearchEngine._local_salts`).  No Spark job: the p50-latency
+  path for interactive queries (SURVEY.md §7.2 "Latency").
+- Above it — ``groupBy("salt").applyInPandas`` over the same pruned
+  scan (:meth:`SearchEngine._spark_salts`), per-salt results merged by
+  a final tiny sort or sum.  The scale path: a head term's runs never
+  land on the driver.
 
 The rest of a request is driver-side too: the term dictionary, repo
 scopes and the page's doc rows are pruned pyarrow reads of the index,
 and on a ``store_content=False`` index the snippet content is fetched
-from a parquet ``meta["source"]`` the same way.  With ``engine="local"``
-a ``search()`` runs no Spark job; Spark serves only a source that is a
-catalog (Iceberg) table name.
+from a parquet ``meta["source"]`` the same way.  So a ``search()``
+under the cap runs no Spark job, unless its source is a catalog
+(Iceberg) table name.
 
 Semantics (``mode``):
 
@@ -61,14 +63,11 @@ from searchengine_spark.sources.corpus import is_path_source, load_corpus
 RESULT_SCHEMA = "doc_id long, bm25 double, tf_sum long"
 COUNT_SCHEMA = "total long, max_tf long"
 
-#: the executors :meth:`SearchEngine.search_df` accepts
-ENGINES = ("local", "wand")
-
-#: count_matches(engine="local") decodes the query terms' runs
-#: driver-side; above this summed df it falls back to the distributed
-#: count (a head term at 10^12-doc scale must never be pulled onto the
-#: driver)
-LOCAL_COUNT_MAX_DF = 5_000_000
+#: the largest summed global df of a query's terms whose runs are read
+#: and decoded on the driver; above it the top-k and the count run
+#: distributed (a head term at 10^12-doc scale must never be pulled
+#: onto the driver)
+LOCAL_MAX_DF = 5_000_000
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:
@@ -76,6 +75,14 @@ def _empty_result(spark: SparkSession) -> DataFrame:
     Spark job: a limit-0 local relation (``createDataFrame([])`` and a
     zero-row pandas frame each launch one job)."""
     return spark.createDataFrame([(0, 0.0, 0)], RESULT_SCHEMA).limit(0)
+
+
+def _runs_on_driver(plan: PlannedQuery, info3: dict) -> bool:
+    """Whether a query's per-salt kernels run on the driver: its terms'
+    summed global df (``info3`` of :meth:`SearchEngine.plan`, so a
+    repo-scoped query is judged by the runs it reads) is within
+    :data:`LOCAL_MAX_DF`."""
+    return sum(info3[t][0] for t, _, _ in plan.ordered if t in info3) <= LOCAL_MAX_DF
 
 
 def _runs_by_salt(columns: dict) -> dict[int, dict[str, list[dict]]]:
@@ -361,19 +368,16 @@ class SearchEngine:
         query: str,
         k: int = 10,
         mode: str = "and",
-        engine: str = "wand",
         repo: str | None = None,
         planned: tuple | None = None,
     ) -> DataFrame:
         """Top-k as a DataFrame (doc_id, bm25, tf_sum), deterministic
-        order (bm25 desc, doc_id asc).  ``engine`` picks the executor
-        (``"local"`` or ``"wand"``, module docstring).  ``planned`` lets
-        callers reuse an already-computed ``plan()`` result (one
-        term-dictionary read per request, not one per phase — the p50
-        path)."""
-        if engine not in ENGINES:
-            raise ValueError(f"engine must be one of {ENGINES}, got {engine!r}")
-        plan, _, (n_docs, avgdl) = (
+        order (bm25 desc, doc_id asc).  It runs on the driver while the
+        query terms' summed df is within ``LOCAL_MAX_DF`` and distributed
+        above it (module docstring).  ``planned`` lets callers reuse an
+        already-computed ``plan()`` result (one term-dictionary read per
+        request, not one per phase — the p50 path)."""
+        plan, info3, (n_docs, avgdl) = (
             planned if planned is not None else self.plan(query, repo)
         )
         if not plan.ordered or (mode == "and" and plan.empty):
@@ -387,7 +391,7 @@ class SearchEngine:
             b=self.cfg.bm25_b,
             avgdl=avgdl,
         )
-        if engine == "wand":
+        if not _runs_on_driver(plan, info3):
             per_salt = self._spark_salts(plan, repo, kernel, RESULT_SCHEMA)
             return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
         outs = [o for o in self._local_salts(plan, repo, kernel) if o["doc_id"].size]
@@ -499,7 +503,6 @@ class SearchEngine:
         limit: int = 10,
         repo: str | None = None,
         mode: str = "and",
-        engine: str = "local",
         with_snippets: bool = True,
         with_count: bool = True,
     ) -> dict:
@@ -509,8 +512,8 @@ class SearchEngine:
         relevance}]} with site->repo, uri->path.
 
         ``with_count=False`` skips the pre-pagination total (a second
-        postings read) and reports ``count=-1`` — the cheap path when a
-        caller only wants the page.
+        pass over the query terms' runs) and reports ``count=-1`` — the
+        cheap path when a caller only wants the page.
         """
         if not query.strip():
             return {"result": False, "error": "Empty search query"}
@@ -521,9 +524,7 @@ class SearchEngine:
         if mode == "and" and plan.empty:
             return {"result": True, "count": 0, "data": []}
         k = offset + limit
-        df = self.search_df(
-            query, k=k, mode=mode, engine=engine, repo=repo, planned=planned
-        )
+        df = self.search_df(query, k=k, mode=mode, repo=repo, planned=planned)
         rows = df.collect() if isinstance(df, DataFrame) else list(df.itertuples())
         # count AND the relevance normalizer come from ONE matched-set
         # scan: the reference computes maxRank over ALL matched docs
@@ -533,20 +534,17 @@ class SearchEngine:
         # normalizes by the max over the k collected rows instead — a
         # documented deviation bounded to that path.
         if with_count:
-            total, max_tf = self._match_stats(plan, info3, mode, repo, engine)
+            total, max_tf = self._match_stats(plan, info3, mode, repo)
         else:
             total = -1
-            max_tf = max(
-                (int(r.tf_sum if hasattr(r, "tf_sum") else r["tf_sum"]) for r in rows),
-                default=0,
-            )
+            max_tf = max((int(r.tf_sum) for r in rows), default=0)
         page = rows[offset: offset + limit]
         if not page:
             return {"result": True, "count": total, "data": []}
 
-        doc_ids = [int(r.doc_id if hasattr(r, "doc_id") else r["doc_id"]) for r in page]
-        scores = [float(r.bm25 if hasattr(r, "bm25") else r["bm25"]) for r in page]
-        tf_sums = [int(r.tf_sum if hasattr(r, "tf_sum") else r["tf_sum"]) for r in page]
+        doc_ids = [int(r.doc_id) for r in page]
+        scores = [float(r.bm25) for r in page]
+        tf_sums = [int(r.tf_sum) for r in page]
         max_tf = max_tf or 1
         docs_meta = self._doc_meta(doc_ids, need_content=with_snippets)
         qterms = {t for t, _, _ in plan.ordered}
@@ -575,21 +573,15 @@ class SearchEngine:
         query: str,
         mode: str = "and",
         repo: str | None = None,
-        engine: str = "local",
         planned: tuple | None = None,
     ) -> int:
         """Total hit count pre-pagination (reference ``count``,
-        SearchServiceImpl.java:171,200).
-
-        ``engine="local"`` runs the count kernel on the driver — no
-        Spark job.  Guard rail: when the query terms' summed global df
-        exceeds ``LOCAL_COUNT_MAX_DF`` the local path would decode that
-        many postings on the driver, so it falls through to the
-        distributed executor regardless of what the caller asked for;
-        any other ``engine`` value runs distributed.
-        """
+        SearchServiceImpl.java:171,200).  Like the top-k, it runs on the
+        driver (no Spark job) while the query terms' summed global df is
+        within ``LOCAL_MAX_DF`` and distributed above it, so a head
+        term's postings are never decoded on the driver."""
         plan, info3, _ = planned if planned is not None else self.plan(query, repo)
-        return self._match_stats(plan, info3, mode, repo, engine)[0]
+        return self._match_stats(plan, info3, mode, repo)[0]
 
     def _match_stats(
         self,
@@ -597,7 +589,6 @@ class SearchEngine:
         info3: dict,
         mode: str,
         repo: str | None,
-        engine: str = "local",
     ) -> tuple[int, int]:
         """(total matches, max Σtf) over the FULL matched-doc set,
         pre-pagination, from the query terms' encoded runs.
@@ -606,13 +597,14 @@ class SearchEngine:
         all matched pages (SearchServiceImpl.java:171,200) and
         ``maxRank`` = max absolute relevance over ALL matched docs
         BEFORE pagination (:149-151) — so a doc's reported relevance is
-        page-invariant.  Executor choice is :meth:`count_matches`'s.
+        page-invariant.  The executor is :func:`_runs_on_driver`'s
+        choice, the same as the top-k's over the same plan, so within
+        one ``search()`` the count reuses the top-k's runs read.
         """
         if not plan.ordered or (mode == "and" and plan.empty):
             return 0, 0
         kernel = partial(_count_salt, n_terms=len(plan.ordered), mode_and=mode == "and")
-        total_df = sum(info3[t][0] for t, _, _ in plan.ordered if t in info3)
-        if engine == "local" and total_df <= LOCAL_COUNT_MAX_DF:
+        if _runs_on_driver(plan, info3):
             outs = self._local_salts(plan, repo, kernel)
             return (
                 sum(o["total"][0] for o in outs),
@@ -721,10 +713,8 @@ class SearchEngine:
         :meth:`statistics` (which collects per-repo rows to the driver
         for the reference's small-site-list response shape; SCALE.md
         §8).  Columns: (repo, pages, lemmas)."""
-        ds = self.spark.read.parquet(os.path.join(self.index_dir, "doc_stats"))
-        trs = self.spark.read.parquet(
-            os.path.join(self.index_dir, "term_repo_stats")
-        )
+        ds = self.spark.read.parquet(self._rel("doc_stats"))
+        trs = self.spark.read.parquet(self._rel("term_repo_stats"))
         pages = ds.groupBy("repo").agg(F.count("*").alias("pages"))
         lemmas = trs.groupBy("repo").agg(
             F.countDistinct("term").alias("lemmas")
@@ -754,31 +744,24 @@ class SearchEngine:
             "status_time": None,
             "last_error": None,
         }
-        ds = self.spark.read.parquet(os.path.join(self.index_dir, "doc_stats"))
-        trs = self.spark.read.parquet(os.path.join(self.index_dir, "term_repo_stats"))
-        pages = {r["repo"]: r["n"] for r in ds.groupBy("repo").agg(F.count("*").alias("n")).collect()}
-        lemmas = {
-            r["repo"]: r["n"]
-            for r in trs.groupBy("repo").agg(F.countDistinct("term").alias("n")).collect()
-        }
         detailed = [
             {
-                "url": repo,
-                "name": repo,
-                "pages": int(pages.get(repo, 0)),
-                "lemmas": int(lemmas.get(repo, 0)),
+                "url": r.repo,
+                "name": r.repo,
+                "pages": int(r.pages),
+                "lemmas": int(r.lemmas),
                 "status": build["status"],
                 "statusTime": build["status_time"],
                 "error": build["last_error"],
             }
-            for repo in sorted(pages)
+            for r in sorted(self.statistics_df().collect(), key=lambda r: r.repo)
         ]
         return {
             "result": True,
             "statistics": {
                 "total": {
-                    "sites": len(pages),
-                    "pages": int(sum(pages.values())),
+                    "sites": len(detailed),
+                    "pages": sum(d["pages"] for d in detailed),
                     "lemmas": int(self.meta["n_terms"]),
                     "indexing": build["status"] == "INDEXING",
                 },

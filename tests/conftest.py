@@ -6,7 +6,9 @@ treat it read-only.
 
 from __future__ import annotations
 
+import itertools
 import sys
+from contextlib import contextmanager, nullcontext
 from pathlib import Path
 
 import pytest
@@ -20,6 +22,42 @@ from searchengine_spark.sources.corpus import generate_corpus_rows
 from tests.oracle import build_oracle_index
 
 CFG = IndexConfig(n_buckets=4, n_salts=2, block_size=32)
+
+
+_groups = itertools.count()
+
+
+def with_jobs(spark, fn, *args, **kwargs):
+    """``(fn(*args, **kwargs), Spark jobs it launched)``: the call runs
+    under its own job group, whose job ids the status tracker lists."""
+    sc = spark.sparkContext
+    group = f"counted-call-{next(_groups)}"
+    sc.setJobGroup(group, "counted call")
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def distributed():
+    """Run the block with every query's top-k and count on the
+    distributed executor: a ``LOCAL_MAX_DF`` of -1 is below any summed
+    df, so no query's runs are read on the driver."""
+    import searchengine_spark.query.engine as engine_mod
+
+    cap = engine_mod.LOCAL_MAX_DF
+    engine_mod.LOCAL_MAX_DF = -1
+    try:
+        yield
+    finally:
+        engine_mod.LOCAL_MAX_DF = cap
+
+
+#: the block a query runs in, once per executor: the driver under the
+#: default cap, then distributed
+EXECUTORS = (nullcontext, distributed)
 
 
 @pytest.fixture(scope="session")

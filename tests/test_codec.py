@@ -17,7 +17,7 @@ from searchengine_spark.functions.codec import (
     varint_decode,
     varint_encode,
 )
-from searchengine_spark.index.format import decode_run, encode_blocks, encode_run_pdf
+from searchengine_spark.index.format import decode_run, encode_blocks
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=500))
@@ -103,24 +103,6 @@ def test_block_metadata_invariants():
         assert row["block_last"][i] == ids[e - 1]
         assert row["block_max_tf"][i] == tfs[s:e].max()
         assert row["block_min_dl"][i] == dls[s:e].min()
-
-
-def test_encode_run_pdf_sorts_input():
-    rng = np.random.default_rng(1)
-    ids = rng.permutation(np.arange(100, 400, 3)).astype(np.int64)
-    pdf = pd.DataFrame(
-        {
-            "term": "t",
-            "salt": 0,
-            "bucket": 1,
-            "doc_id": ids,
-            "tf": rng.integers(1, 5, ids.size),
-            "dl": rng.integers(5, 20, ids.size),
-        }
-    )
-    out = encode_run_pdf(pdf, 64)
-    d, _, _ = decode_run(out.iloc[0])
-    assert np.array_equal(d, np.sort(ids).astype(np.uint64))
 
 
 def test_compression_beats_raw():

@@ -11,7 +11,6 @@ raise, and an empty top-k collects without a Spark job.
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import shutil
@@ -22,7 +21,7 @@ from pyspark.errors import AnalysisException
 
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.query.engine import SearchEngine
-from tests.conftest import CFG
+from tests.conftest import CFG, with_jobs
 
 COLUMNS = ["repo", "path", "commit", "lang", "content"]
 QUERIES = [
@@ -33,22 +32,6 @@ QUERIES = [
     "build merge split",
     "commonterm index",
 ]
-
-_groups = itertools.count()
-
-
-def with_jobs(spark, fn, *args, **kwargs):
-    """``(fn(*args, **kwargs), Spark jobs it launched)``: the call runs
-    under its own job group, whose job ids the status tracker lists."""
-    sc = spark.sparkContext
-    group = f"test-doc-fetch-{next(_groups)}"
-    sc.setJobGroup(group, "counted call")
-    try:
-        out = fn(*args, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _write_source(spark, rows, path: str, layout: str) -> None:
     """The corpus rows as a Spark-written multi-file parquet dir:
@@ -223,7 +206,7 @@ def test_empty_topk_collects_without_spark_job(spark, engine, oracle_index):
     plan = engine.plan(disjoint)[0]
     assert len(plan.ordered) == 2 and not plan.empty
     for q in ("ghostterm9999", disjoint):
-        df = engine.search_df(q, k=10, mode="and", engine="local")
+        df = engine.search_df(q, k=10, mode="and")
         rows, jobs = with_jobs(spark, df.collect)
         assert rows == [] and jobs == 0, q
         assert df.columns == ["doc_id", "bm25", "tf_sum"]

@@ -82,7 +82,7 @@ def test_index_build_and_search_over_iceberg_source(ice_spark, tmp_path_factory)
         store_content=False,
     )
     eng = SearchEngine(ice_spark, out)
-    res = eng.search("index", limit=3, engine="local")
+    res = eng.search("index", limit=3)
     assert res["result"] and res["data"]
     for d in res["data"]:
         assert d["snippet"].startswith("...") and "<b>" in d["snippet"]

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.index.maintain import delete_repo, reindex_doc
 from searchengine_spark.query.engine import SearchEngine
-from tests.conftest import CFG
+from tests.conftest import CFG, EXECUTORS
 from tests.oracle import build_oracle_index, oracle_search
 
 
@@ -258,10 +258,10 @@ def _multi_repo_subset(corpus_rows):
     return by_repo[repos[0]][:15] + by_repo[repos[1]][:12] + by_repo[repos[2]][:10]
 
 
-def _scoped_results(eng, query, repo, engine):
+def _scoped_results(eng, query, repo):
     """Every scoped AND match as {((repo, path), bm25, Σtf)} — keyed by
     identity, since maintenance ids differ from a fresh ranking."""
-    df = eng.search_df(query, k=10**6, mode="and", engine=engine, repo=repo)
+    df = eng.search_df(query, k=10**6, mode="and", repo=repo)
     rows = df.collect()
     metas = eng._doc_meta([int(r["doc_id"]) for r in rows], need_content=False)  # noqa: SLF001
     return {
@@ -311,19 +311,17 @@ def test_new_doc_in_existing_repo_keeps_scoped_search_correct(
     for q in ("index search", "data text"):
         truth = _oracle_scoped(oracle, q, first_repo)
         assert any(key == added[:2] for key, _, _ in truth), q
-        for engine_kind in ("local", "wand"):
-            assert _scoped_results(eng, q, first_repo, engine_kind) == truth, (
-                q, engine_kind,
-            )
-            ids = eng.search_df(q, k=50, engine=engine_kind, repo=first_repo).collect()
-            assert all(r["doc_id"] in repo_ids for r in ids)
-        for count_engine in ("local", "spark"):
-            assert eng.count_matches(
-                q, repo=first_repo, engine=count_engine
-            ) == len(truth), (q, count_engine)
+        for on_executor in EXECUTORS:
+            with on_executor():
+                assert _scoped_results(eng, q, first_repo) == truth, (q, on_executor)
+                ids = eng.search_df(q, k=50, repo=first_repo).collect()
+                assert all(r["doc_id"] in repo_ids for r in ids)
+                assert eng.count_matches(q, repo=first_repo) == len(truth), (
+                    q, on_executor,
+                )
     # other repos' scoped search is unaffected
     other = repos[1]
-    assert _scoped_results(eng, "index search", other, "local") == _oracle_scoped(
+    assert _scoped_results(eng, "index search", other) == _oracle_scoped(
         oracle, "index search", other
     )
 
@@ -505,7 +503,7 @@ def test_live_engine_survives_mutation_via_retry_and_refresh(
     live = _build(spark, rows, tmp_path / "live")
     eng = SearchEngine(spark, live)
     # warm every memoized dataset (term_stats, postings, doc_stats, ...)
-    before = eng.search("index", limit=5, engine="local")
+    before = eng.search("index", limit=5)
     assert before["result"]
 
     reindex_doc(
@@ -513,11 +511,11 @@ def test_live_engine_survives_mutation_via_retry_and_refresh(
         content="refreshmarkertoken index index",
     )
     # (a) stale-dataset reads recover instead of raising
-    again = eng.search("index", limit=5, engine="local")
+    again = eng.search("index", limit=5)
     assert again["result"]
     # (b) refresh picks up the new doc + meta
     eng.refresh()
-    hits = eng.search("refreshmarkertoken", limit=5, engine="local")
+    hits = eng.search("refreshmarkertoken", limit=5)
     assert hits["count"] == 1
     assert eng.n_docs == len(rows) + 1
 
@@ -539,7 +537,7 @@ def test_snippets_on_contentless_index_via_pushdown_fallback(
     out = str(tmp_path / "nc_idx")
     build_index(spark, docs, out, CFG, source=src, store_content=False)
     eng = SearchEngine(spark, out)
-    res = eng.search("index", limit=3, mode="and", engine="local")
+    res = eng.search("index", limit=3, mode="and")
     assert res["data"], "expected hits"
     for d in res["data"]:
         assert d["snippet"].startswith("...") and "<b>" in d["snippet"], d
@@ -570,11 +568,11 @@ def _file_snapshot(index_dir, rels):
     return out
 
 
-def _result_keys(eng, query, k=50, engine="local"):
+def _result_keys(eng, query, k=50):
     """Matched-doc identity set (repo, path) — BM25-independent, so a
     tombstoned index (stale n_docs/avgdl by design) can be compared
     against a fresh build of the remainder."""
-    df = eng.search_df(query, k=k, mode="and", engine=engine)
+    df = eng.search_df(query, k=k, mode="and")
     ids = [int(r["doc_id"]) for r in df.collect()]
     metas = eng._doc_meta(ids, need_content=False)  # noqa: SLF001
     return {(m["repo"], m["path"]) for m in metas.values()}
@@ -610,15 +608,11 @@ def test_delete_repo_tombstone_is_metadata_cheap_and_excludes(
     el, ef = SearchEngine(spark, live), SearchEngine(spark, fresh)
     for q in ("index search", "data", "engine text"):
         truth = _result_keys(ef, q)
-        for engine_kind in ("local", "wand"):
-            assert _result_keys(el, q, engine=engine_kind) == truth, (
-                q, engine_kind,
-            )
-        # pre-pagination count (the _match_stats scan) excludes too
-        for count_engine in ("local", "spark"):
-            assert el.count_matches(q, engine=count_engine) == len(truth), (
-                q, count_engine,
-            )
+        for on_executor in EXECUTORS:
+            with on_executor():
+                assert _result_keys(el, q) == truth, (q, on_executor)
+                # pre-pagination count (the _match_stats scan) excludes too
+                assert el.count_matches(q) == len(truth), (q, on_executor)
     # per-repo statistics no longer see the repo (rows purged at
     # tombstone time); totals' lemma count stays pre-delete by design
     s = el.statistics()["statistics"]
@@ -684,23 +678,20 @@ def test_tombstone_noncontiguous_repo_excluded_exactly(
     assert meta["tombstones"][0]["ids"], "exact id list expected"
 
     eng = SearchEngine(spark, live)
-    for engine_kind in ("local", "wand"):
-        assert not eng.search_df(
-            "tombstonedsoon", k=5, engine=engine_kind
-        ).collect(), engine_kind
+    for on_executor in EXECUTORS:
+        with on_executor():
+            assert not eng.search_df("tombstonedsoon", k=5).collect(), on_executor
     remaining = [r for r in rows if r[0] != victim]
     fresh = _build(spark, remaining, tmp_path / "fresh")
     ef = SearchEngine(spark, fresh)
     for q in ("index search", "data text", "tombstonedsoon"):
         truth = _result_keys(ef, q)
-        for engine_kind in ("local", "wand"):
-            assert _result_keys(eng, q, engine=engine_kind) == truth
-        # the tombstone's explicit id list masks the count on both
-        # executors (the distributed one ships it as a broadcast)
-        for count_engine in ("local", "spark"):
-            assert eng.count_matches(q, engine=count_engine) == len(truth), (
-                q, count_engine,
-            )
+        # the tombstone's explicit id list masks the top-k and the count
+        # on both executors (the distributed one ships it as a broadcast)
+        for on_executor in EXECUTORS:
+            with on_executor():
+                assert _result_keys(eng, q) == truth, (q, on_executor)
+                assert eng.count_matches(q) == len(truth), (q, on_executor)
 
 
 def test_tombstone_then_readd_same_repo_name(spark, corpus_rows, tmp_path):
@@ -722,11 +713,10 @@ def test_tombstone_then_readd_same_repo_name(spark, corpus_rows, tmp_path):
     hits = eng.search("resurrectmarker", limit=5)
     assert hits["count"] == 1 and hits["data"][0]["site"] == victim
     # repo-scoped search sees ONLY the new doc
-    for engine_kind in ("local", "wand"):
-        got = eng.search_df(
-            "index search", k=50, engine=engine_kind, repo=victim
-        ).collect()
-        assert [int(r["doc_id"]) for r in got] == [rec["doc_id"]], engine_kind
+    for on_executor in EXECUTORS:
+        with on_executor():
+            got = eng.search_df("index search", k=50, repo=victim).collect()
+        assert [int(r["doc_id"]) for r in got] == [rec["doc_id"]], on_executor
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,8 @@
 """Search correctness vs the oracle: rank-identical top-k, BM25 score
 tolerance 1e-6 (order exact with doc_id tie-break), Σtf reference
-relevance, executor equivalence (local == wand, pruned == unpruned),
-pre-pagination counts on both executors, pagination, guards
-(SURVEY.md §5.4/5.6)."""
+relevance, executor equivalence (driver == distributed, pruned ==
+unpruned), pre-pagination counts on both executors, the executor choice
+by the query terms' summed df, pagination, guards (SURVEY.md §5.4/5.6)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from tests.conftest import CFG
+from tests.conftest import CFG, EXECUTORS, distributed, with_jobs
 from tests.oracle import oracle_search, oracle_tf_relevance
 
 # Query set (FIXTURES.md §2 composition): rare terms, identifiers,
@@ -29,11 +29,6 @@ QUERIES = [
     "commonterm index",
     "build merge split",
 ]
-
-ENGINES = ["wand", "local"]
-
-#: the count executor that matches each search_df engine
-COUNT_ENGINE = {"local": "local", "wand": "spark"}
 
 
 def _oracle_count(oracle_index, query, mode, repo=None):
@@ -54,39 +49,31 @@ def _rows(df):
 @pytest.mark.parametrize("query", QUERIES)
 @pytest.mark.parametrize("mode", ["and", "or"])
 def test_rank_identical_to_oracle(engine, oracle_index, query, mode):
-    got = _rows(engine.search_df(query, k=10, mode=mode, engine="local"))
     want = oracle_search(
         oracle_index, query, k=10, mode=mode,
         k1=CFG.bm25_k1, b=CFG.bm25_b, search_filter_pct=CFG.search_filter_pct,
     )
-    assert [g[0] for g in got] == [w[0] for w in want], query
-    for (gd, gb, gt), (wd, wb, wt) in zip(got, want):
-        assert abs(gb - wb) < 1e-6, (query, gd)
-        assert gt == wt, (query, gd)
     count = _oracle_count(oracle_index, query, mode)
-    for executor in COUNT_ENGINE.values():
-        assert engine.count_matches(query, mode=mode, engine=executor) == count, executor
+    for on_executor in EXECUTORS:
+        with on_executor():
+            got = _rows(engine.search_df(query, k=10, mode=mode))
+            assert engine.count_matches(query, mode=mode) == count, on_executor
+        assert [g[0] for g in got] == [w[0] for w in want], (query, on_executor)
+        for (gd, gb, gt), (wd, wb, wt) in zip(got, want):
+            assert abs(gb - wb) < 1e-6, (query, gd)
+            assert gt == wt, (query, gd)
 
 
 @pytest.mark.parametrize("query", ["index search", "def return", "commonterm index", "42"])
 @pytest.mark.parametrize("mode", ["and", "or"])
 def test_engine_paths_agree(engine, query, mode):
-    base = _rows(engine.search_df(query, k=10, mode=mode, engine="local"))
-    rows = _rows(engine.search_df(query, k=10, mode=mode, engine="wand"))
+    base = _rows(engine.search_df(query, k=10, mode=mode))
+    with distributed():
+        rows = _rows(engine.search_df(query, k=10, mode=mode))
     assert [r[0] for r in rows] == [r[0] for r in base]
     assert [r[2] for r in rows] == [r[2] for r in base]
     for (_, gb, _), (_, wb, _) in zip(rows, base):
         assert abs(gb - wb) < 1e-9
-
-
-@pytest.mark.parametrize("bad", ["flat", "spark"])
-def test_unknown_engine_is_rejected(engine, bad):
-    """A caller still asking for a removed or misspelled executor fails
-    loudly instead of silently running another one."""
-    with pytest.raises(ValueError, match="engine"):
-        engine.search_df("index", engine=bad)
-    with pytest.raises(ValueError, match="engine"):
-        engine.search("index search", engine=bad)
 
 
 def test_blockmax_pruned_equals_exhaustive(engine, oracle_index):
@@ -116,7 +103,7 @@ def test_tf_relevance_matches_reference_semantics(engine, oracle_index):
     relevance values must EQUAL the oracle's globally-normalized ones."""
     for query in ["index search", "def return", "build"]:
         want = oracle_tf_relevance(oracle_index, query, CFG.search_filter_pct)
-        res = engine.search(query, limit=len(want) or 1, mode="and", engine="local")
+        res = engine.search(query, limit=len(want) or 1, mode="and")
         assert res["result"]
         # the API sorts by bm25; compare as mapping doc -> normalized Σtf
         want_map = {d: rel for d, _, rel in want}
@@ -137,7 +124,7 @@ def test_relevance_normalized_by_global_max_across_pages(engine, oracle_index):
         want_map = {d: rel for d, _, rel in want}
         abs_map = {d: a for d, a, _ in want}
         global_max = max(abs_map.values())
-        res = engine.search(query, offset=5, limit=5, mode="and", engine="local")
+        res = engine.search(query, offset=5, limit=5, mode="and")
         page_tf = [abs_map[d["doc_id"]] for d in res["data"]]
         if res["data"] and max(page_tf) < global_max:
             # discriminating page: page-local max != global max, so a
@@ -151,7 +138,7 @@ def test_relevance_normalized_by_global_max_across_pages(engine, oracle_index):
 
 
 def test_missing_term_empty_result(engine):
-    res = engine.search("ghostterm9999 index", mode="and", engine="local")
+    res = engine.search("ghostterm9999 index", mode="and")
     assert res == {"result": True, "count": 0, "data": []}
 
 
@@ -161,15 +148,15 @@ def test_empty_query_is_error(engine):
 
 
 def test_stopword_only_query_empty(engine):
-    res = engine.search("the of and", mode="and", engine="local")
+    res = engine.search("the of and", mode="and")
     assert res["count"] == 0
 
 
 def test_pagination_slices_global_ranking(engine, oracle_index):
     want = oracle_search(oracle_index, "index", k=100, mode="and",
                          k1=CFG.bm25_k1, b=CFG.bm25_b)
-    p1 = engine.search("index", offset=0, limit=5, mode="and", engine="local")
-    p2 = engine.search("index", offset=5, limit=5, mode="and", engine="local")
+    p1 = engine.search("index", offset=0, limit=5, mode="and")
+    p2 = engine.search("index", offset=5, limit=5, mode="and")
     got = [d["doc_id"] for d in p1["data"]] + [d["doc_id"] for d in p2["data"]]
     assert got == [w[0] for w in want[:10]]
     assert p1["count"] == len(want)
@@ -178,13 +165,13 @@ def test_pagination_slices_global_ranking(engine, oracle_index):
 def test_count_is_prelimit_total(engine, oracle_index):
     want = oracle_search(oracle_index, "index search", k=10**6, mode="and",
                          k1=CFG.bm25_k1, b=CFG.bm25_b)
-    res = engine.search("index search", limit=3, mode="and", engine="local")
+    res = engine.search("index search", limit=3, mode="and")
     assert res["count"] == len(want)
     assert len(res["data"]) == min(3, len(want))
 
 
 def test_snippets_highlight_query_terms(engine):
-    res = engine.search("index search", limit=3, mode="and", engine="local")
+    res = engine.search("index search", limit=3, mode="and")
     assert res["data"], "expected hits"
     for d in res["data"]:
         assert "<b>" in d["snippet"], d
@@ -212,13 +199,14 @@ def test_high_df_pruning_via_config(spark, index_dir, oracle_index):
     # oracle agrees
     want = oracle_search(oracle_index, "commonterm index", k=10, mode="and",
                          k1=CFG.bm25_k1, b=CFG.bm25_b, search_filter_pct=threshold)
-    got = _rows(eng.search_df("commonterm index", k=10, mode="and", engine="local"))
+    got = _rows(eng.search_df("commonterm index", k=10, mode="and"))
     assert [g[0] for g in got] == [w[0] for w in want]
 
 
-@pytest.mark.parametrize("eng_path", ENGINES)
+# ids: "wand" is the distributed block-max WAND scorer
+@pytest.mark.parametrize("on_executor", EXECUTORS, ids=["local", "wand"])
 @pytest.mark.parametrize("query", ["index", "index search", "def return", "42"])
-def test_repo_scoped_search_rank_identical(engine, oracle_index, eng_path, query):
+def test_repo_scoped_search_rank_identical(engine, oracle_index, on_executor, query):
     """Scoped queries use per-repo planning + scoring (reference
     per-site loop) and stay rank-identical to the per-repo oracle on
     both executors, and their pre-pagination counts match it too."""
@@ -227,15 +215,14 @@ def test_repo_scoped_search_rank_identical(engine, oracle_index, eng_path, query
         for mode in ("and", "or"):
             want = oracle_search(oracle_index, query, k=10, mode=mode,
                                  k1=CFG.bm25_k1, b=CFG.bm25_b, repo=repo)
-            got = _rows(engine.search_df(query, k=10, mode=mode,
-                                         engine=eng_path, repo=repo))
+            with on_executor():
+                got = _rows(engine.search_df(query, k=10, mode=mode, repo=repo))
+                count = engine.count_matches(query, mode=mode, repo=repo)
             assert [g[0] for g in got] == [w[0] for w in want], (repo, mode)
             for (gd, gb, gt), (wd, wb, wt) in zip(got, want):
                 assert abs(gb - wb) < 1e-6, (repo, mode, gd)
                 assert gt == wt
-            assert engine.count_matches(
-                query, mode=mode, repo=repo, engine=COUNT_ENGINE[eng_path]
-            ) == _oracle_count(oracle_index, query, mode, repo), (repo, mode)
+            assert count == _oracle_count(oracle_index, query, mode, repo), (repo, mode)
 
 
 def test_repo_scoped_guard_term_missing_in_repo(engine, oracle_index):
@@ -299,24 +286,40 @@ def test_search_reads_runs_once_for_topk_and_count(spark, index_dir, monkeypatch
         return read_table(path, *a, **kw)
 
     monkeypatch.setattr(eng, "_read_table", counting)
-    first = eng.search("index search", limit=3, engine="local")
+    first = eng.search("index search", limit=3)
     assert first["count"] > 0 and reads.count("postings") == 1
     eng.refresh()
-    assert eng.search("index search", limit=3, engine="local") == first
+    assert eng.search("index search", limit=3) == first
     assert reads.count("postings") == 2
 
 
-def test_count_local_falls_back_to_spark_above_df_cap(engine, monkeypatch):
-    """count_matches must not materialize head-term postings on the
-    driver: with the cap forced to 0 the local engine silently routes
-    through the distributed plan and agrees with it."""
-    import searchengine_spark.query.engine as EM
+def test_executor_follows_summed_df(spark, engine, monkeypatch):
+    """The query terms' summed global df picks the executor of the
+    top-k and the count alike: within LOCAL_MAX_DF search() and
+    count_matches() run no Spark job; with the cap below the query's
+    summed df both run distributed — the top-k alone launches jobs — and
+    the response is identical."""
+    import searchengine_spark.query.engine as engine_mod
 
-    monkeypatch.setattr(EM, "LOCAL_COUNT_MAX_DF", 0)
-    forced = engine.count_matches("index", engine="local")
-    monkeypatch.undo()
-    assert forced == engine.count_matches("index", engine="spark")
-    assert forced == engine.count_matches("index", engine="local")
+    query = "index search"
+    plan, info3, _ = engine.plan(query)
+    summed = sum(info3[t][0] for t, _, _ in plan.ordered)
+    assert len(plan.ordered) == 2 and summed <= engine_mod.LOCAL_MAX_DF
+    for mode in ("and", "or"):
+        local, jobs = with_jobs(spark, engine.search, query, mode=mode)
+        assert local["count"] > 0 and local["data"] and jobs == 0, mode
+        count, jobs = with_jobs(spark, engine.count_matches, query, mode=mode)
+        assert count == local["count"] and jobs == 0, mode
+        page = engine.search(query, mode=mode, with_count=False)
+
+        monkeypatch.setattr(engine_mod, "LOCAL_MAX_DF", summed - 1)
+        forced, jobs = with_jobs(spark, engine.search, query, mode=mode)
+        assert forced == local and jobs > 0, mode
+        forced, jobs = with_jobs(
+            spark, engine.search, query, mode=mode, with_count=False
+        )
+        assert forced == page and jobs > 0, mode
+        monkeypatch.undo()
 
 
 # ---------------------------------------------------------------------------
@@ -441,6 +444,6 @@ def test_match_stats_scan_is_row_group_pruned(engine):
     assert kept_rgs <= total_rgs
     # and the scan's answer is right (ties the assertion to the path)
     total, max_tf = engine._match_stats(  # noqa: SLF001
-        *engine.plan("getManager")[:2], "and", None, "local"
+        *engine.plan("getManager")[:2], "and", None
     )
     assert total >= 1 and max_tf >= 1

@@ -58,7 +58,7 @@ def test_spark_submit_build_and_query_from_pyfiles_zip(spark, tmp_path):
     stdout = _run(
         [SUBMIT, "--master", "local[2]", "--py-files", zip_path,
          os.path.join(REPO, "tools", "submit_job.py"),
-         "query", "--index", idx, "--query", "index", "--engine", "wand"],
+         "query", "--index", idx, "--query", "index"],
         env,
     )
     line = next(l for l in stdout.splitlines() if l.startswith("QUERY_RESULT "))

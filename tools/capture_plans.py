@@ -84,7 +84,7 @@ def main() -> None:
         "distributed count lost the term pushdown on its runs scan"
     )
     plans.append((
-        "distributed match count (count_matches above LOCAL_COUNT_MAX_DF)",
+        "distributed match count (query terms' summed df above LOCAL_MAX_DF)",
         "The count decodes the same pruned runs scan as the top-k: "
         "PartitionFilters keep the query terms' bucket dirs, "
         "PushedFilters carry the term IN-list to the parquet reader, "

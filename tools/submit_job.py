@@ -89,7 +89,6 @@ def cmd_query(args) -> None:
         limit=args.k,
         repo=args.repo,
         mode=args.mode,
-        engine=args.engine,
         with_snippets=False,
     )
     print("QUERY_RESULT " + json.dumps(res))
@@ -112,7 +111,6 @@ def main() -> None:
     q.add_argument("--repo", default=None)
     q.add_argument("--k", type=int, default=10)
     q.add_argument("--mode", default="and")
-    q.add_argument("--engine", default="wand")
     args = ap.parse_args()
     if args.package:
         print("PACKAGED " + package_pyfiles(args.package))
