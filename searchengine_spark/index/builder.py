@@ -11,7 +11,7 @@ Two shuffle stages (SURVEY.md §3.2 "Spark rebuild"):
   sorted order, their ``tfs``).  doc_stats is the stage-1 checkpoint.
 - **Stage 2 — shuffle/encode**: doc_stats exploded to postings
   ``(term, doc_id, tf, dl, repo)`` -> salt = ``pmod(doc_id, S)`` ->
-  (term, salt) sort-merge shuffle -> ``mapInArrow`` block encoder
+  (bucket, term, salt) range shuffle -> ``mapInArrow`` block encoder
   (delta+varint+skip+block-max) -> ``postings/`` runs + ``term_stats``
   + ``term_repo_stats``.
 
@@ -54,6 +54,7 @@ from searchengine_spark.index.format import (
     INDEX_FORMAT,
     POSTING_RUN_SCHEMA,
     encode_partition_arrow,
+    write_relation,
 )
 
 #: columns that define the deterministic global document order
@@ -129,23 +130,34 @@ def doc_postings(spark: SparkSession, index_dir: str, n_buckets: int) -> DataFra
 
 def encoder_input(postings: DataFrame, n_salts: int, n_enc: int) -> DataFrame:
     """Postings -> the block encoder's input: salted by ``pmod(doc_id,
-    S)``, shuffled on (term, salt) into ``n_enc`` partitions and sorted
-    so every (term, salt) run is contiguous and doc-ordered.
+    S)``, range-partitioned on (bucket, term, salt) into ``n_enc``
+    partitions and sorted so every (term, salt) run is contiguous and
+    doc-ordered.
 
-    Partition key = (term, salt), NOT (bucket, salt): the encoder only
-    needs each run contiguous, and hashing the vocabulary-sized key
-    space balances the encode stage at any partition count, whereas
-    hash(bucket, salt) has only n_buckets x n_salts distinct values.
-    The explicit numPartitions (the user's shuffle-sizing knob)
-    decouples encode parallelism from the index layout and pins it
-    against AQE.  The leading ``bucket`` sort key (functionally
-    determined by term, so run contiguity is preserved) lets the
-    dynamic-partitionBy write reuse the sort instead of inserting its
-    own."""
+    Range, not hash: each task covers one contiguous (bucket, term,
+    salt) interval, so it writes into one bucket dir, or two where its
+    interval crosses a bucket boundary.  The relation then holds at
+    most n_enc + n_buckets - 1 files, and a bucket with a share s of
+    the postings at most ceil(s * n_enc) + 1 (ceil(n_enc / n_buckets)
+    + 1 for equal-mass buckets) instead of one per task: the per-file
+    footer and open cost of every reader and of a reindex's bucket
+    swap scale with that count.  Balance comes from
+    the range bounds, which Spark samples from the postings
+    themselves: every task gets about 1/n_enc of the postings whatever
+    the partition count, unlike a hash on (bucket, ...), whose few
+    distinct values collide balls-in-bins (SCALE.md §5).  ``salt``
+    stays in the key, so a head term's S runs are separate keys that a
+    bound may fall between; the encoder only needs each (term, salt)
+    run whole in one partition, which any partitioning on that key
+    prefix gives.  The explicit numPartitions (the user's
+    shuffle-sizing knob) decouples encode parallelism from the index
+    layout and pins it against AQE.  The sort repeats the range key
+    plus doc_id, so the dynamic-partitionBy write reuses it instead of
+    inserting its own."""
     return (
         postings.select("term", "doc_id", "tf", "dl", "bucket")
         .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int"))
-        .repartition(n_enc, "term", "salt")
+        .repartitionByRange(n_enc, "bucket", "term", "salt")
         .sortWithinPartitions("bucket", "term", "salt", "doc_id")
     )
 
@@ -446,11 +458,11 @@ def _build_index_staged(
         # driver-side point reads (repo_scope, _doc_meta, reindex's
         # (repo, path) lookup) prune row groups instead of reading the
         # whole partition (ADVICE r3)
-        doc_stats.repartition(cfg.doc_stats_parts, F.col("ds_part")).sortWithinPartitions(
-            "repo", "doc_id"
-        ).write.mode(
-            "overwrite"
-        ).partitionBy("ds_part").parquet(os.path.join(out_dir, "doc_stats"))
+        write_relation(
+            doc_stats.repartition(cfg.doc_stats_parts, F.col("ds_part"))
+            .sortWithinPartitions("repo", "doc_id"),
+            os.path.join(out_dir, "doc_stats"), "ds_part", mode="overwrite",
+        )
         arranged.unpersist()
         stats = obs.get  # filled by the write job — no extra job
         n_docs = int(stats["n"] or 0)
@@ -480,13 +492,14 @@ def _build_index_staged(
         postings = doc_postings(spark, out_dir, cfg.n_buckets)
         block_size = cfg.block_size
 
-        # One shuffle (encoder_input): co-locate each (term, salt) run,
-        # sort runs contiguously, then encode WHOLE partitions in
-        # mapInArrow.  Arrow-native end to end: per-group applyInPandas
-        # pays ~ms of pandas overhead per run, and even whole-partition
-        # mapInPandas pays O(runs) Python-object churn materializing the
-        # output lists/bytes (measured 39x slower than the Arrow kernel
-        # at code-corpus vocabularies — format.encode_sorted_table).
+        # One shuffle (encoder_input): co-locate each (term, salt) run in
+        # a (bucket, term, salt) range, sort runs contiguously, then
+        # encode WHOLE partitions in mapInArrow.  Arrow-native end to
+        # end: per-group applyInPandas pays ~ms of pandas overhead per
+        # run, and even whole-partition mapInPandas pays O(runs)
+        # Python-object churn materializing the output lists/bytes
+        # (measured 39x slower than the Arrow kernel at code-corpus
+        # vocabularies — format.encode_sorted_table).
         def _encode(batches):
             return encode_partition_arrow(batches, block_size)
 
@@ -504,7 +517,7 @@ def _build_index_staged(
             .sortWithinPartitions("bucket", "term")
         )
         runs_path = os.path.join(out_dir, "postings")
-        runs.write.mode("overwrite").partitionBy("bucket").parquet(runs_path)
+        write_relation(runs, runs_path, "bucket", mode="overwrite")
         t_enc = time.time()
         c_enc = _step_cpu()
 
@@ -526,16 +539,13 @@ def _build_index_staged(
             F.sum("cf_run").alias("cf"),
             F.first("bucket").alias("bucket"),
         )
-        (
+        write_relation(
             term_stats.repartition(
                 max(1, cfg.n_buckets) * stat_slices,
                 "bucket",
                 F.pmod(F.xxhash64("term"), F.lit(stat_slices)),
-            )
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(out_dir, "term_stats"))
+            ).sortWithinPartitions("bucket", "term"),
+            os.path.join(out_dir, "term_stats"), "bucket", mode="overwrite",
         )
         t_ts = time.time()
         c_ts = _step_cpu()
@@ -545,16 +555,13 @@ def _build_index_staged(
         trs = postings.groupBy("term", "repo").agg(
             F.count("*").alias("df"), F.first("bucket").alias("bucket")
         )
-        (
+        write_relation(
             trs.repartition(
                 max(1, cfg.n_buckets) * stat_slices,
                 "bucket",
                 F.pmod(F.xxhash64("term"), F.lit(stat_slices)),
-            )
-            .sortWithinPartitions("bucket", "term", "repo")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(out_dir, "term_repo_stats"))
+            ).sortWithinPartitions("bucket", "term", "repo"),
+            os.path.join(out_dir, "term_repo_stats"), "bucket", mode="overwrite",
         )
         t_trs = time.time()
         c_trs = _step_cpu()

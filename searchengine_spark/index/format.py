@@ -2,7 +2,7 @@
 
 Replaces the reference's four PostgreSQL tables (site/page/lemma/index,
 ``db/changelog/liquibase-outputChangeLog_init.xml``) with columnar
-parquet:
+parquet, every relation written by :func:`write_relation`:
 
 - ``postings/bucket=<b>/``        — encoded posting *runs*: one row per
   (term, salt) holding delta+varint doc-id blocks with skip/block-max
@@ -32,6 +32,8 @@ jumps straight to byte offset ``doc_offsets[i]``.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 
@@ -40,6 +42,9 @@ from searchengine_spark.functions.codec import (
     varint_decode,
     varint_encode,
 )
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 POSTING_RUN_SCHEMA = (
     "term string, salt int, df_run long, cf_run long, n_blocks int, block_len int, "
@@ -57,6 +62,25 @@ DOC_STATS_SCHEMA = (
 #: ``meta.json`` ``format`` of the layout above; maintenance refuses any
 #: other (a v1 index has no forward index in doc_stats to maintain)
 INDEX_FORMAT = "searchengine_spark/v2"
+
+#: parquet codec of every index relation.  Each file's footer names its
+#: codec and pyarrow and Spark read any of them, so an index whose files
+#: mix codecs (built snappy, then maintained) stays readable: the codec
+#: is not part of :data:`INDEX_FORMAT`.
+INDEX_CODEC = "zstd"
+
+
+def write_relation(
+    df: DataFrame, path: str, partition_by: str | None = None, mode: str = "error"
+) -> None:
+    """Write ``df`` as one index relation: :data:`INDEX_CODEC` parquet
+    under ``path``, hive-partitioned on ``partition_by`` when given.
+    Every builder and maintenance write goes through here; the caller
+    keeps its own repartition and sort, which decide the file layout."""
+    writer = df.write.mode(mode).option("compression", INDEX_CODEC)
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
 
 
 def encode_blocks(

@@ -94,6 +94,7 @@ from searchengine_spark.index.format import (
     decode_run,
     encode_blocks,
     encode_sorted_table,
+    write_relation,
 )
 from searchengine_spark.operators.wand import ExcludeSet
 
@@ -136,7 +137,7 @@ def _ensure_schema_file(df: DataFrame, tmp: str) -> None:
         for f in files
     )
     if not has_file:
-        df.limit(0).write.mode("append").parquet(tmp)
+        write_relation(df.limit(0), tmp, mode="append")
 
 
 def _swap_dir(tmp: str, live: str) -> None:
@@ -220,13 +221,10 @@ def _write_stats_rel(
     n_parts = max(1, (len(buckets) if buckets is not None else cfg.n_buckets)) * slices
     tmp = path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        df.repartition(
-            n_parts, "bucket", F.pmod(F.xxhash64("term"), F.lit(slices))
-        )
-        .sortWithinPartitions(*sort_cols)
-        .write.partitionBy("bucket")
-        .parquet(tmp)
+    write_relation(
+        df.repartition(n_parts, "bucket", F.pmod(F.xxhash64("term"), F.lit(slices)))
+        .sortWithinPartitions(*sort_cols),
+        tmp, "bucket",
     )
     if buckets is None:
         _ensure_schema_file(df, tmp)
@@ -358,7 +356,7 @@ def _purge_postings(
     tmp = runs_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     kept = _kept_runs(spark, index_dir, cfg.block_size, ranges, ids_bc)
-    kept.write.partitionBy("bucket").parquet(tmp)
+    write_relation(kept, tmp, "bucket")
     _ensure_schema_file(kept, tmp)
     _swap_dir(tmp, runs_path)
     if ids_bc is not None:
@@ -371,7 +369,7 @@ def _purge_doc_stats(spark: SparkSession, index_dir: str, repo: str, hi: int) ->
     tmp = ds_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     keep = ds.where(~((F.col("repo") == repo) & (F.col("doc_id") <= hi)))
-    keep.write.partitionBy("ds_part").parquet(tmp)
+    write_relation(keep, tmp, "ds_part")
     _ensure_schema_file(keep, tmp)
     _swap_dir(tmp, ds_path)
 
@@ -387,7 +385,7 @@ def _purge_term_repo_stats(spark: SparkSession, index_dir: str, repo: str) -> No
     )
     tmp = trs_path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    keep.write.partitionBy("bucket").parquet(tmp)
+    write_relation(keep, tmp, "bucket")
     _ensure_schema_file(keep, tmp)
     _swap_dir(tmp, trs_path)
 
@@ -678,9 +676,11 @@ def reindex_doc(
 
     # 1. encoded runs: splice the doc's (term, salt) runs, forward every
     #    other run of the affected buckets, and swap those bucket dirs.
-    #    The (term, salt) shuffle and (bucket, term) sort mirror the
-    #    builder's write shape (ADVICE r4): bounded files per bucket,
-    #    every file term-sorted
+    #    Hash-partitioning on bucket alone sends all of a touched
+    #    bucket's runs to one task, so each swapped dir gets exactly one
+    #    file (no more than the builder's range-partitioned encode wrote
+    #    there) and needs no range-sampling job; the (bucket, term) sort
+    #    keeps every file term-sorted (ADVICE r4)
     if affected:
         salt = doc_id % cfg.n_salts
         runs = _read_runs(spark, index_dir).where(
@@ -695,11 +695,9 @@ def reindex_doc(
         runs_path = os.path.join(index_dir, "postings")
         tmp = runs_path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        (
-            runs.repartition(min(len(affected) * 4, shuffle_partitions(spark)), "term", "salt")
-            .sortWithinPartitions("bucket", "term")
-            .write.partitionBy("bucket")
-            .parquet(tmp)
+        write_relation(
+            runs.repartition(len(affected), "bucket").sortWithinPartitions("bucket", "term"),
+            tmp, "bucket",
         )
         _swap_subdirs(tmp, runs_path, [f"bucket={b}" for b in affected])
 
@@ -726,9 +724,11 @@ def reindex_doc(
     shutil.rmtree(tmp, ignore_errors=True)
     # coalesce(1): the upsert touches one partition's rows — keep it
     # one file so driver-side point reads stay cheap
-    ds.where((F.col("ds_part") == p) & (F.col("doc_id") != doc_id)).unionByName(
-        stat_df
-    ).coalesce(1).write.partitionBy("ds_part").parquet(tmp)
+    write_relation(
+        ds.where((F.col("ds_part") == p) & (F.col("doc_id") != doc_id))
+        .unionByName(stat_df).coalesce(1),
+        tmp, "ds_part",
+    )
     _swap_subdirs(tmp, ds_path, [f"ds_part={p}"])
 
     # 4. corpus scalars: O(1) from the replaced row's doclen, no scan

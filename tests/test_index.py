@@ -313,8 +313,8 @@ def test_config_change_invalidates_checkpoint(spark, corpus_rows, tmp_path):
 def test_index_invariant_across_shuffle_partition_counts(
     spark, corpus_rows, tmp_path
 ):
-    """The encode shuffle keys on (term, salt) with an explicit
-    partition count taken from spark.sql.shuffle.partitions — the
+    """The encode shuffle range-partitions on (bucket, term, salt) with
+    an explicit partition count taken from spark.sql.shuffle.partitions — the
     index CONTENT (postings runs, term stats, search results) must not
     depend on that knob (the N->4N determinism contract: a 4x cluster
     re-partitions everything, bytes must not change)."""
@@ -351,9 +351,11 @@ def test_index_invariant_across_shuffle_partition_counts(
 
 
 def test_postings_files_are_term_sorted(spark, index_dir):
-    """Every postings file must be term-sorted (the explicit
-    post-encode sort): tight term row-group min/max stats are what
-    J2's query-time row-group pruning relies on."""
+    """Every postings file must be (term, salt)-sorted: the encoder
+    emits its range in (bucket, term, salt) order, and the explicit
+    post-encode (bucket, term) sort keeps it.  Tight term row-group
+    min/max stats are what J2's query-time row-group pruning relies
+    on."""
     import pyarrow.parquet as pq
 
     runs_root = os.path.join(index_dir, "postings")
@@ -362,9 +364,90 @@ def test_postings_files_are_term_sorted(spark, index_dir):
         for fn in files:
             if not fn.endswith(".parquet"):
                 continue
-            terms = pq.read_table(
-                os.path.join(root, fn), columns=["term"]
-            )["term"].to_pylist()
-            assert terms == sorted(terms), os.path.join(root, fn)
+            t = pq.read_table(os.path.join(root, fn), columns=["term", "salt"])
+            keys = list(zip(t["term"].to_pylist(), t["salt"].to_pylist()))
+            assert keys == sorted(keys), os.path.join(root, fn)
             checked += 1
     assert checked > 0
+
+
+def _parquet_files(index_dir, rel):
+    """{bucket/partition dirname: [file path]} of one relation."""
+    out: dict[str, list[str]] = {}
+    for root, _dirs, files in os.walk(os.path.join(index_dir, rel)):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                out.setdefault(os.path.basename(root), []).append(os.path.join(root, fn))
+    return out
+
+
+def _assert_zstd(index_dir):
+    import pyarrow.parquet as pq
+
+    for rel in ("postings", "term_stats", "term_repo_stats", "doc_stats"):
+        files = [f for fs in _parquet_files(index_dir, rel).values() for f in fs]
+        assert files, rel
+        for f in files:
+            codec = pq.ParquetFile(f).metadata.row_group(0).column(0).compression
+            assert codec == "ZSTD", (f, codec)
+
+
+def test_index_layout_and_codec(spark, index_dir):
+    """Every index relation is zstd parquet, and the postings are laid
+    out by the (bucket, term, salt) range shuffle: each encoder task
+    (``part-NNNNN`` = its range partition) writes into a contiguous run
+    of bucket dirs, and neighbouring buckets share at most their
+    boundary task (files sorted: the test above).  So the relation holds
+    at most n_enc + n_buckets - 1 files, and a bucket holding a share s
+    of the postings at most ceil(s * n_enc) + 1: ceil(n_enc /
+    n_buckets) + 1 for equal-mass buckets.  A hash shuffle writes
+    n_enc files into every bucket dir."""
+    import pyarrow.parquet as pq
+
+    from searchengine_spark.index.builder import shuffle_partitions
+
+    _assert_zstd(index_dir)
+    n_enc = shuffle_partitions(spark)
+    by_bucket = _parquet_files(index_dir, "postings")
+    assert sorted(by_bucket) == [f"bucket={b}" for b in range(CFG.n_buckets)]
+    assert sum(map(len, by_bucket.values())) <= n_enc + CFG.n_buckets - 1
+
+    postings = {b: 0 for b in by_bucket}
+    tasks = {}
+    for b, files in by_bucket.items():
+        tasks[b] = sorted(int(os.path.basename(f).split("-")[1]) for f in files)
+        for f in files:
+            postings[b] += sum(pq.read_table(f, columns=["df_run"])["df_run"].to_pylist())
+    total = sum(postings.values())
+    prev_last = -1
+    for b in sorted(by_bucket, key=lambda d: int(d.split("=")[1])):
+        ts = tasks[b]
+        assert ts == list(range(ts[0], ts[-1] + 1)), (b, ts)  # one range per bucket
+        assert ts[0] >= prev_last, (b, ts)  # ranges ascend with the bucket
+        prev_last = ts[-1]
+        assert len(ts) <= -(-postings[b] * n_enc // total) + 1, (b, ts, postings[b])
+
+
+def test_maintenance_writes_zstd(spark, corpus_rows, tmp_path):
+    """reindex_doc, a tombstone delete_repo + compact, and an eager
+    delete_repo all rewrite their relations as zstd."""
+    from searchengine_spark.index.maintain import compact, delete_repo, reindex_doc
+
+    by_repo: dict[str, list] = {}
+    for r in corpus_rows:
+        by_repo.setdefault(r[0], []).append(r)
+    repos = sorted(by_repo)[:3]
+    rows = [r for repo in repos for r in by_repo[repo][:10]]
+    out = str(tmp_path / "live")
+    build_index(
+        spark, spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"]),
+        out, CFG, source="codec-test", store_content=True,
+    )
+    target = rows[3]
+    reindex_doc(spark, out, target[0], target[1], "codec probe tokens index search")
+    _assert_zstd(out)
+    delete_repo(spark, out, repos[1])
+    compact(spark, out)
+    _assert_zstd(out)
+    delete_repo(spark, out, repos[2], mode="eager")
+    _assert_zstd(out)

@@ -824,16 +824,16 @@ def test_reindex_after_tombstone_keeps_pre_delete_n_docs(spark, corpus_rows, tmp
 
 
 def test_reindex_stats_writes_keep_builder_file_count(spark, corpus_rows, tmp_path):
-    """The stats relations a reindex_doc rewrites are sliced like the
-    builder's: no touched bucket dir ends up with more files than the
-    build wrote there."""
+    """The runs and stats relations a reindex_doc rewrites keep the
+    builder's file shape: no touched bucket dir ends up with more files
+    than the build wrote there."""
     live = _build(spark, corpus_rows[:40], tmp_path / "live")
 
     def n_files(rel, b):
         d = os.path.join(live, rel, f"bucket={b}")
         return sum(f.endswith(".parquet") for f in os.listdir(d))
 
-    rels = ("term_stats", "term_repo_stats")
+    rels = ("postings", "term_stats", "term_repo_stats")
     built = {(r, b): n_files(r, b) for r in rels for b in range(CFG.n_buckets)}
     target = corpus_rows[7]
     rec = reindex_doc(spark, live, target[0], target[1], "slice count probe tokens")

@@ -99,8 +99,9 @@ def main() -> None:
         shuffle_partitions(spark),
     )
     s2text = fmt(stage2)
-    assert re.search(r"hashpartitioning\(term#\d+, salt#\d+", s2text), (
-        "stage-2 input lost its (term, salt) shuffle"
+    range_key = r"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, term#\d+ ASC NULLS FIRST, salt#\d+"
+    assert re.search(range_key, s2text), (
+        "stage-2 input lost its (bucket, term, salt) range shuffle"
     )
     assert "content" not in s2text.split("ReadSchema:", 1)[1].split("\n", 1)[0], (
         "stage-2 input reads doc_stats' content column"
@@ -110,10 +111,12 @@ def main() -> None:
         "Stage 2 reads only doc_stats' narrow columns (doc_id, doclen, "
         "terms, tfs — never content), explodes each doc's forward index "
         "into postings in one Generate, and shuffles once — an Exchange "
-        "hashpartitioning on (term, salt) — so every run arrives "
-        "contiguous and doc-sorted for the encoder.",
+        "rangepartitioning on (bucket, term, salt) — so every run arrives "
+        "contiguous and doc-sorted for the encoder, and each encoder task "
+        "covers one key range: it writes into one bucket dir, or two "
+        "where its range crosses a bucket boundary.",
         s2text,
-        ["Generate", "Exchange", "hashpartitioning(term"],
+        ["Generate", "Exchange", "rangepartitioning(bucket"],
     ))
 
     # a catalog table over a parquet dir: the source kind whose snippet
