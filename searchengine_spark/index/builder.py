@@ -12,8 +12,9 @@ Two shuffle stages (SURVEY.md §3.2 "Spark rebuild"):
 - **Stage 2 — shuffle/encode**: doc_stats exploded to postings
   ``(term, doc_id, tf, dl, repo)`` -> salt = ``pmod(doc_id, S)`` ->
   (bucket, term, salt) range shuffle -> ``mapInArrow`` block encoder
-  (delta+varint+skip+block-max) -> ``postings/`` runs + ``term_stats``
-  + ``term_repo_stats``.
+  (delta+varint+skip+block-max) -> ``postings/`` runs +
+  ``term_repo_stats``.  The runs are the global term dictionary too:
+  a term's df/cf are its runs' summed ``df_run``/``cf_run``.
 
 The reference buffers every posting of the whole crawl in one in-memory
 set and flushes once (``LemmaFinder.java:32,113-115``,
@@ -28,10 +29,9 @@ for the N->4N scaling-efficiency bar):
   doc_stats row — no groupBy shuffle of the postings, no join;
 - corpus n/sum_dl and the posting count are collected by an
   ``Observation`` attached to the doc_stats write (zero extra jobs);
-- the term-dictionary cardinality comes from parquet footer metadata
-  (driver-side, no job, no data read);
-- per-bucket lineage bytes aggregate the encoder-emitted ``n_bytes``
-  column — the compressed blobs themselves are never re-read.
+- per-bucket lineage (bytes from the encoder-emitted ``n_bytes``
+  column, the term count as distinct terms per bucket) is one narrow
+  aggregate over the runs — the compressed blobs are never re-read.
 
 Each stage writes a checkpoint manifest with per-partition lineage
 metrics (postings emitted, runs/blocks encoded, bytes compressed);
@@ -86,10 +86,10 @@ def shuffle_partitions(spark: SparkSession) -> int:
 
 
 def stats_slices(n_shuffle: int, n_buckets: int) -> int:
-    """Term-hash slices per bucket for the stats-relation writes
-    (term_stats, term_repo_stats): ceil(shuffle partitions / buckets),
-    so the write runs ~n_shuffle tasks.  Shared by the builder and
-    maintenance, which rewrites the same relations."""
+    """Term-hash slices per bucket for the term_repo_stats write:
+    ceil(shuffle partitions / buckets), so the write runs ~n_shuffle
+    tasks.  Shared by the builder and maintenance, which rewrites the
+    same relation."""
     return max(1, -(-n_shuffle // max(n_buckets, 1)))
 
 
@@ -288,29 +288,6 @@ def _analyze_partitions_arrow(iterator, keep_content: bool):
     for batch in iterator:
         if batch.num_rows:
             yield analyze_doc_batch(batch, keep_content)
-
-
-def _footer_rowcounts(path: str) -> dict[str, int]:
-    """{hive-partition-dirname: total rows} from parquet footers only.
-
-    Driver-side metadata walk — no Spark job, no data pages read.  At
-    production bucket counts (10^3-10^4 files) this is a millisecond
-    listing; the alternative (a count(*) job) re-scans the relation.
-    Files directly under ``path`` are keyed "".
-    """
-    import pyarrow.parquet as pq
-
-    counts: dict[str, int] = {}
-    for root, _dirs, files in os.walk(path):
-        part = os.path.relpath(root, path)
-        part = "" if part == "." else part
-        n = 0
-        for fn in files:
-            if fn.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-        if n:
-            counts[part] = counts.get(part, 0) + n
-    return counts
 
 
 def write_build_status(
@@ -521,37 +498,18 @@ def _build_index_staged(
         t_enc = time.time()
         c_enc = _step_cpu()
 
-        # term dictionary — narrow columns only (no blob re-read).
-        # BOTH stats relations are written bucket-partitioned (hive
-        # `bucket=` dirs) and term-sorted within files: maintenance
-        # (index/maintain.py) then swaps ONLY the partition
-        # dirs a mutation touches instead of rewriting the whole
-        # vocabulary (VERDICT r4 #3a), and the sorted files keep tight
-        # term row-group statistics for the driver-side point lookups
-        # (term_info / term_repo_df).  `slices` spreads each bucket
-        # over several tasks so head-bucket mass never funnels through
-        # one; task count stays ~n_enc (the measured per-task fixed
-        # cost on small corpora makes task-count inflation expensive).
-        runs_back = spark.read.parquet(runs_path)
-        stat_slices = stats_slices(n_enc, cfg.n_buckets)
-        term_stats = runs_back.groupBy("term").agg(
-            F.sum("df_run").alias("df"),
-            F.sum("cf_run").alias("cf"),
-            F.first("bucket").alias("bucket"),
-        )
-        write_relation(
-            term_stats.repartition(
-                max(1, cfg.n_buckets) * stat_slices,
-                "bucket",
-                F.pmod(F.xxhash64("term"), F.lit(stat_slices)),
-            ).sortWithinPartitions("bucket", "term"),
-            os.path.join(out_dir, "term_stats"), "bucket", mode="overwrite",
-        )
-        t_ts = time.time()
-        c_ts = _step_cpu()
-
         # per-(term, repo) document frequency — the reference's per-site
-        # lemma.frequency semantics (LemmaRepository.java:25-30)
+        # lemma.frequency semantics (LemmaRepository.java:25-30).  Written
+        # bucket-partitioned (hive `bucket=` dirs) and term-sorted within
+        # files: maintenance (index/maintain.py) then swaps ONLY the
+        # partition dirs a mutation touches instead of rewriting the
+        # whole vocabulary (VERDICT r4 #3a), and the sorted files keep
+        # tight term row-group statistics for the driver-side point
+        # lookups (term_repo_df).  `slices` spreads each bucket over
+        # several tasks so head-bucket mass never funnels through one;
+        # task count stays ~n_enc (the measured per-task fixed cost on
+        # small corpora makes task-count inflation expensive).
+        stat_slices = stats_slices(n_enc, cfg.n_buckets)
         trs = postings.groupBy("term", "repo").agg(
             F.count("*").alias("df"), F.first("bucket").alias("bucket")
         )
@@ -567,18 +525,20 @@ def _build_index_staged(
         c_trs = _step_cpu()
 
         # lineage: aggregates the encoder-emitted n_bytes column —
-        # narrow scan, the compressed streams are never re-read
-        lineage = runs_back.groupBy("bucket").agg(
+        # narrow scan, the compressed streams are never re-read.  A
+        # term's runs all sit in its bucket, so the per-bucket distinct
+        # terms sum to the vocabulary size
+        lineage = spark.read.parquet(runs_path).groupBy("bucket").agg(
             F.count("*").alias("runs"),
             F.sum("n_blocks").alias("blocks_merged"),
             F.sum("n_bytes").alias("bytes_compressed"),
             F.sum("df_run").alias("postings"),
+            F.countDistinct("term").alias("terms"),
         ).collect()
-        n_terms = sum(_footer_rowcounts(os.path.join(out_dir, "term_stats")).values())
         m2 = {
             "fingerprint": fingerprint,
             "stage": "stage2",
-            "n_terms": int(n_terms),
+            "n_terms": int(sum(r["terms"] for r in lineage)),
             "runs_encoded": int(sum(r["runs"] for r in lineage)),
             "blocks_merged": int(sum(r["blocks_merged"] for r in lineage)),
             "bytes_compressed": int(sum(r["bytes_compressed"] for r in lineage)),
@@ -594,16 +554,14 @@ def _build_index_staged(
             "wall_sec": round(time.time() - t0, 3),
             "steps_sec": {
                 "encode_write": round(t_enc - t0, 3),
-                "term_stats_write": round(t_ts - t_enc, 3),
-                "term_repo_stats_write": round(t_trs - t_ts, 3),
+                "term_repo_stats_write": round(t_trs - t_enc, 3),
                 "lineage_collects": round(time.time() - t_trs, 3),
             },
         }
         if STEP_CLOCK is not None:
             m2["steps_cpu"] = {
                 "encode_write": round(c_enc - c0, 1),
-                "term_stats_write": round(c_ts - c_enc, 1),
-                "term_repo_stats_write": round(c_trs - c_ts, 1),
+                "term_repo_stats_write": round(c_trs - c_enc, 1),
                 "lineage_collects": round(_step_cpu() - c_trs, 1),
             }
         _write_manifest(out_dir, "stage2", m2)

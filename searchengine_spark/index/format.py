@@ -8,10 +8,11 @@ parquet, every relation written by :func:`write_relation`:
   (term, salt) holding delta+varint doc-id blocks with skip/block-max
   metadata.  The one inverted postings relation (role of the ``index``
   table rows, ``model/Index.java:12-23``): the query engine reads it
-  for top-k and count alike, and maintenance edits it in place.
-- ``term_stats/``  — (term, df, cf)           (role of ``lemma`` table)
-- ``term_repo_stats/`` — (term, repo, df)     (per-site df semantics,
-  ``Repositories/LemmaRepository.java:25-30``)
+  for top-k and count alike, and maintenance edits it in place.  It is
+  also the global term dictionary: a term's df and cf are its runs'
+  ``df_run`` and ``cf_run`` summed (:func:`term_totals`).
+- ``term_repo_stats/`` — (term, repo, df)     (role of the per-site
+  ``lemma`` table, ``Repositories/LemmaRepository.java:25-30``)
 - ``doc_stats/ds_part=<p>/`` — one row per document (role of ``page``
   metadata): ``DOC_STATS_SCHEMA`` plus ``content`` on a
   ``store_content`` index.  ``terms``/``tfs`` are the doc's forward
@@ -19,8 +20,8 @@ parquet, every relation written by :func:`write_relation`:
   vectors): the stage-1 build checkpoint that stage 2 explodes into
   postings, and the old-terms source for a single-doc re-index.  The
   search path never reads them.
-- ``meta.json``    — corpus N, sum_dl, avgdl, max_doc_id, IndexConfig,
-  source path, ``format`` (:data:`INDEX_FORMAT`)
+- ``meta.json``    — corpus N, sum_dl, avgdl, max_doc_id, n_terms,
+  IndexConfig, source path, ``format`` (:data:`INDEX_FORMAT`)
 - ``_checkpoints/``— per-stage manifests + per-partition metrics
 
 Block layout inside a run: postings sorted by doc_id, cut into blocks of
@@ -42,6 +43,7 @@ from searchengine_spark.functions.codec import (
     varint_decode,
     varint_encode,
 )
+from searchengine_spark.functions.xxhash import bucket_of
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -60,8 +62,13 @@ DOC_STATS_SCHEMA = (
 )
 
 #: ``meta.json`` ``format`` of the layout above; maintenance refuses any
-#: other (a v1 index has no forward index in doc_stats to maintain)
+#: other (a v1 index has no forward index in doc_stats to maintain).
+#: An older v2 index may still hold the per-term stats dir earlier
+#: builds wrote; nothing reads it.
 INDEX_FORMAT = "searchengine_spark/v2"
+
+#: the run columns a term-dictionary read projects (:func:`term_totals`)
+TERM_TOTALS_COLUMNS = ["term", "df_run", "cf_run"]
 
 #: parquet codec of every index relation.  Each file's footer names its
 #: codec and pyarrow and Spark read any of them, so an index whose files
@@ -81,6 +88,29 @@ def write_relation(
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
+
+
+def term_filter(terms, n_buckets: int):
+    """pyarrow filter selecting ``terms``' rows in a bucket-partitioned
+    relation (``postings/``, ``term_repo_stats/``): hive partition
+    pruning on their bucket dirs, then term row-group pushdown (the
+    files are term-sorted)."""
+    import pyarrow.dataset as pads
+
+    terms = sorted(terms)
+    buckets = sorted({bucket_of(t, n_buckets) for t in terms})
+    return pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
+
+
+def term_totals(tbl) -> dict[str, tuple[int, int]]:
+    """{term: (df, cf)} from a :data:`TERM_TOTALS_COLUMNS` read of the
+    runs: each term's ``df_run`` and ``cf_run`` summed over its salts.
+    A term with no run is absent."""
+    out: dict[str, tuple[int, int]] = {}
+    for t, df, cf in zip(*(tbl[c].to_pylist() for c in TERM_TOTALS_COLUMNS)):
+        d, c = out.get(t, (0, 0))
+        out[t] = (d + df, c + cf)
+    return out
 
 
 def encode_blocks(

@@ -39,9 +39,10 @@ Scale shape (the 100x contract — VERDICT r4 #3/#4):
   reference analog is an indexed cascade delete, not a table rewrite.
 - ``compact()`` applies the recorded tombstones physically: one
   metadata-pruned keep-or-reencode pass over the encoded runs
-  (untouched runs are forwarded without decoding), then a term_stats
-  recompute and a meta refresh from doc_stats.  term_repo_stats needs
-  nothing: delete_repo already purged the repo's rows.
+  (untouched runs are forwarded without decoding), then a meta refresh:
+  corpus scalars from doc_stats, n_terms as the distinct terms left in
+  the runs.  term_repo_stats needs nothing: delete_repo already purged
+  the repo's rows.
   ``delete_repo(mode="eager")`` is tombstone+compact in one call; the
   two routes produce content-identical indexes (tested).
 - ``reindex_doc``: the doc's old terms come from its doc_stats row
@@ -49,13 +50,14 @@ Scale shape (the 100x contract — VERDICT r4 #3/#4):
   doc's ``(term, salt = doc_id % S)`` runs of old ∪ new terms are
   decoded, spliced and re-encoded with the builder's encoder; every
   other run of the touched term buckets is forwarded as-is in the
-  bucket-dir swap.  term_stats is recomputed from the runs of the
-  touched buckets; term_repo_stats takes an exact ±1 df delta for the
-  doc's repo (terms gained / lost).  One doc_stats partition is
-  swapped, and the corpus scalars (n_docs/sum_dl/avgdl) update
-  incrementally in meta.json from the replaced row.  Total write
-  volume is O(touched buckets + one doc_stats partition), independent
-  of corpus size (tests assert the changed-file set).
+  bucket-dir swap.  term_repo_stats takes an exact ±1 df delta for
+  the doc's repo (terms gained / lost), and meta's n_terms an exact
+  ±delta from the touched terms' summed ``df_run`` read before the
+  swap.  One doc_stats partition is swapped, and the corpus scalars
+  (n_docs/sum_dl/avgdl) update incrementally in meta.json from the
+  replaced row.  Total write volume is O(touched buckets + one
+  doc_stats partition), independent of corpus size (tests assert the
+  changed-file set).
 
 Every entry point requires a ``searchengine_spark/v2`` index
 (:data:`~searchengine_spark.index.format.INDEX_FORMAT`) and raises
@@ -83,7 +85,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.functions.xxhash import bucket_of
 from searchengine_spark.index.builder import (
-    _footer_rowcounts,
     analyze_doc_batch,
     shuffle_partitions,
     stats_slices,
@@ -91,9 +92,12 @@ from searchengine_spark.index.builder import (
 from searchengine_spark.index.format import (
     INDEX_FORMAT,
     POSTING_RUN_SCHEMA,
+    TERM_TOTALS_COLUMNS,
     decode_run,
     encode_blocks,
     encode_sorted_table,
+    term_filter,
+    term_totals,
     write_relation,
 )
 from searchengine_spark.operators.wand import ExcludeSet
@@ -107,6 +111,16 @@ def _read_runs(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.schema(POSTING_RUN_SCHEMA).parquet(
         os.path.join(index_dir, "postings")
     )
+
+
+def _runs_table(index_dir: str, **kw):
+    """A driver-side pyarrow read of the runs (``to_table`` keywords:
+    filter, columns) — no Spark job."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(
+        os.path.join(index_dir, "postings"), format="parquet", partitioning="hive"
+    ).to_table(**kw)
 
 
 def _load_meta(index_dir: str) -> tuple[dict, IndexConfig]:
@@ -208,84 +222,52 @@ def _write_stats_rel(
     path: str,
     sort_cols: list[str],
     cfg: IndexConfig,
-    buckets: list[int] | None,
+    buckets: list[int],
 ) -> None:
-    """Write a stats relation bucket-partitioned and term-sorted, then
-    swap it in: whole-dir when ``buckets`` is None, affected subdirs
-    only otherwise.  The (bucket, term-hash-slice) repartition spreads
-    each bucket over several tasks (no single-key funnel at head-bucket
-    mass) and the explicit sort both satisfies the dynamic-partition
-    writer's required ordering and pins term-sorted files (tight term
-    row-group statistics for the driver-side point lookups)."""
+    """Write the ``buckets`` of a stats relation bucket-partitioned and
+    term-sorted, then swap those subdirs in.  The (bucket,
+    term-hash-slice) repartition spreads each bucket over several tasks
+    (no single-key funnel at head-bucket mass) and the explicit sort
+    both satisfies the dynamic-partition writer's required ordering and
+    pins term-sorted files (tight term row-group statistics for the
+    driver-side point lookups)."""
     slices = stats_slices(shuffle_partitions(spark), cfg.n_buckets)
-    n_parts = max(1, (len(buckets) if buckets is not None else cfg.n_buckets)) * slices
     tmp = path + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     write_relation(
-        df.repartition(n_parts, "bucket", F.pmod(F.xxhash64("term"), F.lit(slices)))
-        .sortWithinPartitions(*sort_cols),
+        df.repartition(
+            max(1, len(buckets)) * slices,
+            "bucket", F.pmod(F.xxhash64("term"), F.lit(slices)),
+        ).sortWithinPartitions(*sort_cols),
         tmp, "bucket",
     )
-    if buckets is None:
-        _ensure_schema_file(df, tmp)
-        _swap_dir(tmp, path)
-    else:
-        _swap_subdirs(tmp, path, [f"bucket={b}" for b in buckets])
+    _swap_subdirs(tmp, path, [f"bucket={b}" for b in buckets])
 
 
-def _rewrite_term_stats(
-    spark: SparkSession,
-    index_dir: str,
-    cfg: IndexConfig,
-    buckets: list[int] | None = None,
+def _write_corpus_scalars(
+    index_dir: str, meta: dict, n_docs: int, sum_dl: int, n_terms: int
 ) -> None:
-    """Recompute term_stats from the runs.
-
-    ``buckets=None`` -> full recompute (eager delete / compact).
-    Otherwise only the named buckets are recomputed from
-    PARTITION-PRUNED reads and swapped in as partition dirs — no read
-    or rewrite of the untouched vocabulary (VERDICT r4 #3a; the
-    incremental analog of the reference's per-lemma frequency
-    decrement, ``LemmaRepository.java:40-42``, done set-at-a-time).
-    The runs are read unfiltered: global df/cf stay Lucene-style stale
-    under tombstones until compact().
-    """
-    runs = _read_runs(spark, index_dir)
-    if buckets is not None:
-        runs = runs.where(F.col("bucket").isin(buckets))
-    new_ts = runs.groupBy("term").agg(
-        F.sum("df_run").alias("df"),
-        F.sum("cf_run").alias("cf"),
-        F.first("bucket").alias("bucket"),
-    )
-    _write_stats_rel(
-        spark, new_ts, os.path.join(index_dir, "term_stats"), ["bucket", "term"],
-        cfg, buckets,
-    )
-
-
-def _write_corpus_scalars(index_dir: str, meta: dict, n_docs: int, sum_dl: int) -> None:
-    """Persist n_docs/sum_dl/avgdl, with n_terms from the term_stats
-    parquet footers (driver-side metadata walk, no job)."""
-    meta["n_docs"], meta["sum_dl"] = n_docs, sum_dl
+    """Persist n_docs/sum_dl/avgdl and the vocabulary size n_terms."""
+    meta["n_docs"], meta["sum_dl"], meta["n_terms"] = n_docs, sum_dl, n_terms
     meta["avgdl"] = sum_dl / n_docs if n_docs else 0.0
-    meta["n_terms"] = sum(
-        _footer_rowcounts(os.path.join(index_dir, "term_stats")).values()
-    )
     _write_meta(index_dir, meta)
 
 
 def _refresh_meta(spark: SparkSession, index_dir: str, meta: dict) -> None:
-    """Recompute the corpus scalars from doc_stats — the FULL recompute
-    used after corpus-shaped mutations (eager delete, compact), when
-    doc_stats holds exactly the live docs.  Single-doc reindex updates
+    """Recompute the corpus scalars from doc_stats and n_terms as the
+    distinct terms of the runs — the FULL recompute used after
+    corpus-shaped mutations (eager delete, compact), when doc_stats and
+    the runs hold exactly the live docs.  Single-doc reindex updates
     them incrementally instead."""
     totals = (
         spark.read.parquet(os.path.join(index_dir, "doc_stats"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s"))
         .collect()[0]
     )
-    _write_corpus_scalars(index_dir, meta, int(totals["n"] or 0), int(totals["s"] or 0))
+    n_terms = _read_runs(spark, index_dir).agg(F.countDistinct("term")).collect()[0][0]
+    _write_corpus_scalars(
+        index_dir, meta, int(totals["n"] or 0), int(totals["s"] or 0), int(n_terms)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -459,12 +441,11 @@ def delete_repo(
         _record_mutation(index_dir, rec)
         return rec
 
-    # eager: physical purge + full stats recompute + meta refresh.
-    # Any PRIOR tombstones are compacted along the way — an eager
-    # delete must never silently drop an unapplied deletion vector.
+    # eager: physical purge + meta refresh.  Any PRIOR tombstones are
+    # compacted along the way — an eager delete must never silently
+    # drop an unapplied deletion vector.
     _purge_postings(spark, index_dir, cfg, tombstones(meta) + [tomb])
     meta.pop("tombstones", None)
-    _rewrite_term_stats(spark, index_dir, cfg)
     _refresh_meta(spark, index_dir, meta)
     rec = {
         "op": "delete_repo",
@@ -481,9 +462,10 @@ def delete_repo(
 
 def compact(spark: SparkSession, index_dir: str) -> dict:
     """Apply every recorded tombstone physically: purge the encoded runs
-    (one block-metadata-pruned pass), recompute term_stats, refresh the
-    corpus scalars from doc_stats, and clear the deletion vector.  The result is content-identical to
-    having run ``delete_repo(mode="eager")`` for each repo (tested)."""
+    (one block-metadata-pruned pass), refresh the corpus scalars and
+    n_terms, and clear the deletion vector.  The result is
+    content-identical to having run ``delete_repo(mode="eager")`` for
+    each repo (tested)."""
     t0 = time.time()
     meta, cfg = _load_meta(index_dir)
     tombs = tombstones(meta)
@@ -491,7 +473,6 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         return {"op": "compact", "tombstones_applied": 0}
     _purge_postings(spark, index_dir, cfg, tombs)
     meta.pop("tombstones", None)
-    _rewrite_term_stats(spark, index_dir, cfg)
     _refresh_meta(spark, index_dir, meta)
     rec = {
         "op": "compact",
@@ -547,12 +528,9 @@ def _spliced_runs(
     import pyarrow.dataset as pads
 
     salt = doc_id % cfg.n_salts
-    old = pads.dataset(
-        os.path.join(index_dir, "postings"), format="parquet", partitioning="hive"
-    ).to_table(
-        filter=pads.field("bucket").isin(sorted({bucket_of(t, cfg.n_buckets) for t in terms}))
-        & pads.field("term").isin(terms)
-        & (pads.field("salt") == salt)
+    old = _runs_table(
+        index_dir,
+        filter=term_filter(terms, cfg.n_buckets) & (pads.field("salt") == salt),
     )
     # (term, doc ids, tfs, dls) per run: the doc's new postings, then
     # every old run without the doc's old posting
@@ -627,10 +605,10 @@ def reindex_doc(
     """Re-index one document in place (add it if new).
 
     Every write is scoped to what the doc touches: the term buckets
-    its old+new terms hash into (encoded runs and term_stats), the
-    buckets of the terms it gained or lost (term_repo_stats), one
-    doc_stats partition, and meta.json — O(touched), independent of
-    corpus size (VERDICT r4 #3).
+    its old+new terms hash into (encoded runs), the buckets of the
+    terms it gained or lost (term_repo_stats), one doc_stats partition,
+    and meta.json — O(touched), independent of corpus size (VERDICT r4
+    #3).
     """
     import pyarrow as pa
 
@@ -673,6 +651,20 @@ def reindex_doc(
     new_tfs = dict(zip(new_stat["terms"], new_stat["tfs"]))
     touched = sorted(old_terms | set(new_tfs))
     affected = sorted({bucket_of(t, cfg.n_buckets) for t in touched})
+    gained, lost = set(new_tfs) - old_terms, old_terms - set(new_tfs)
+
+    # n_terms delta from the touched terms' global df, read before the
+    # swap: a gained term new to the runs adds one, a lost term whose
+    # only posting was this doc's removes one
+    n_terms = int(meta["n_terms"])
+    if touched:
+        before = term_totals(_runs_table(
+            index_dir, filter=term_filter(touched, cfg.n_buckets),
+            columns=TERM_TOTALS_COLUMNS,
+        ))
+        n_terms += sum(t not in before for t in gained) - sum(
+            before[t][0] == 1 for t in lost
+        )
 
     # 1. encoded runs: splice the doc's (term, salt) runs, forward every
     #    other run of the affected buckets, and swap those bucket dirs.
@@ -701,13 +693,8 @@ def reindex_doc(
         )
         _swap_subdirs(tmp, runs_path, [f"bucket={b}" for b in affected])
 
-        # 2. stats: term_stats recomputed for the affected buckets from
-        #    the runs, term_repo_stats by the doc's ±1 df delta
-        _rewrite_term_stats(spark, index_dir, cfg, buckets=affected)
-        _apply_repo_df_delta(
-            spark, index_dir, cfg, repo, set(new_tfs) - old_terms,
-            old_terms - set(new_tfs),
-        )
+        # 2. term_repo_stats by the doc's ±1 df delta
+        _apply_repo_df_delta(spark, index_dir, cfg, repo, gained, lost)
 
     # 3. doc_stats row upsert, partition-scoped: only the pmod(doc_id,
     #    P) partition is re-read (partition pruning) and swapped — the
@@ -735,7 +722,8 @@ def reindex_doc(
     #    (VERDICT r4 #3c).  Tombstoned docs keep counting until
     #    compact(), as the global df/cf do
     _write_corpus_scalars(
-        index_dir, meta, int(meta["n_docs"]) + is_new, int(meta["sum_dl"]) + dl - old_dl
+        index_dir, meta, int(meta["n_docs"]) + is_new,
+        int(meta["sum_dl"]) + dl - old_dl, n_terms,
     )
     rec = {
         "op": "reindex_doc",

@@ -52,13 +52,13 @@ def analyze_query(query: str) -> list[str]:
 
 def plan_query(
     query: str,
-    term_info: dict[str, tuple[int, int]],
+    term_counts: dict[str, tuple[int, int]],
     n_docs: int,
     search_filter_pct: int = 100,
 ) -> PlannedQuery:
-    """Plan a query given ``term_info`` = {term: (df, cf)} lookups.
+    """Plan a query given ``term_counts`` = {term: (df, cf)} lookups.
 
-    ``term_info`` may omit terms (missing from dictionary).  The high-df
+    ``term_counts`` may omit terms (missing from dictionary).  The high-df
     rule uses floor integer division to match the reference exactly
     (boundary unit-tested in tests/test_planner.py).
     """
@@ -66,7 +66,7 @@ def plan_query(
     plan = PlannedQuery(terms=terms)
     survivors: list[tuple[str, int, int]] = []
     for t in terms:
-        info = term_info.get(t)
+        info = term_counts.get(t)
         if info is None:
             plan.missing.append(t)
             continue

@@ -25,10 +25,11 @@ and the top-k and the count of a request follow the same answer.
   a final tiny sort or sum.  The scale path: a head term's runs never
   land on the driver.
 
-The rest of a request is driver-side too: the term dictionary, repo
-scopes and the page's doc rows are pruned pyarrow reads of the index,
-and on a ``store_content=False`` index the snippet content is fetched
-from a parquet ``meta["source"]`` the same way.  So a ``search()``
+The rest of a request is driver-side too: the term dictionary (the
+query terms' ``df_run``/``cf_run`` in ``postings/``, no blob column),
+repo scopes and the page's doc rows are pruned pyarrow reads of the
+index, and on a ``store_content=False`` index the snippet content is
+fetched from a parquet ``meta["source"]`` the same way.  So a ``search()``
 under the cap runs no Spark job, unless its source is a catalog
 (Iceberg) table name.
 
@@ -54,9 +55,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.functions.xxhash import bucket_of
+from searchengine_spark.index.format import TERM_TOTALS_COLUMNS, term_filter, term_totals
 from searchengine_spark.index.maintain import tombstone_exclude
 from searchengine_spark.operators.wand import ExcludeSet, TermRuns, score_salt_group
-from searchengine_spark.plans.planner import PlannedQuery, bm25_idf, plan_query
+from searchengine_spark.plans.planner import (
+    PlannedQuery,
+    analyze_query,
+    bm25_idf,
+    plan_query,
+)
 from searchengine_spark.query.snippets import build_snippet
 from searchengine_spark.sources.corpus import is_path_source, load_corpus
 
@@ -77,12 +84,12 @@ def _empty_result(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([(0, 0.0, 0)], RESULT_SCHEMA).limit(0)
 
 
-def _runs_on_driver(plan: PlannedQuery, info3: dict) -> bool:
+def _runs_on_driver(plan: PlannedQuery, stats: dict) -> bool:
     """Whether a query's per-salt kernels run on the driver: its terms'
-    summed global df (``info3`` of :meth:`SearchEngine.plan`, so a
+    summed global df (``stats`` of :meth:`SearchEngine.plan`, so a
     repo-scoped query is judged by the runs it reads) is within
     :data:`LOCAL_MAX_DF`."""
-    return sum(info3[t][0] for t, _, _ in plan.ordered if t in info3) <= LOCAL_MAX_DF
+    return sum(stats[t][0] for t, _, _ in plan.ordered if t in stats) <= LOCAL_MAX_DF
 
 
 def _runs_by_salt(columns: dict) -> dict[int, dict[str, list[dict]]]:
@@ -239,36 +246,6 @@ class SearchEngine:
     # ------------------------------------------------------------------
     # planning
     # ------------------------------------------------------------------
-    def term_info(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
-        """{term: (df, cf, bucket)} — the term dictionary point-lookup (J1).
-
-        Driver-side pyarrow pruned read (predicate pushdown skips row
-        groups whose term dictionary misses the query terms): Q terms
-        cost one filtered parquet read, no Spark job — the p50 path.
-        At 10^12 scale term_stats is still ~vocab-sized (millions of
-        rows), well within a pushdown-pruned driver read.
-        """
-        import pyarrow.dataset as pads
-
-        if not terms:
-            return {}
-        # term_stats is bucket-partitioned (bucket is the dir key,
-        # exposed by hive discovery)
-        tbl = self._read_table(
-            self._rel("term_stats"),
-            filter=pads.field("term").isin(terms),
-            columns=["term", "df", "cf", "bucket"],
-        )
-        return {
-            t: (int(df), int(cf), int(b))
-            for t, df, cf, b in zip(
-                tbl["term"].to_pylist(),
-                tbl["df"].to_pylist(),
-                tbl["cf"].to_pylist(),
-                tbl["bucket"].to_pylist(),
-            )
-        }
-
     def repo_scope(self, repo: str) -> tuple[int, float, int, int]:
         """(n_pages, avgdl, doc_id_lo, doc_id_hi) of one repo — driver
         pyarrow pruned read of doc_stats, cached.  A freshly built
@@ -313,13 +290,7 @@ class SearchEngine:
 
         if not terms:
             return {}
-        # prune to the query terms' bucket dirs before the term/repo
-        # row-group filters
-        filt = (
-            pads.field("bucket").isin(sorted({self._bucket_of(t) for t in terms}))
-            & pads.field("term").isin(terms)
-            & (pads.field("repo") == repo)
-        )
+        filt = term_filter(terms, self.cfg.n_buckets) & (pads.field("repo") == repo)
         tbl = self._read_table(
             self._rel("term_repo_stats"), filter=filt, columns=["term", "df"]
         )
@@ -327,29 +298,31 @@ class SearchEngine:
 
     def plan(
         self, query: str, repo: str | None = None
-    ) -> tuple[PlannedQuery, dict[str, tuple[int, int, int]], tuple[int, float]]:
+    ) -> tuple[PlannedQuery, dict[str, tuple[int, int]], tuple[int, float]]:
         """Plan a (possibly repo-scoped) query.
 
-        Returns (plan, global term info3 for bucket routing, scoring
-        scope = (N, avgdl)).  Scoped planning follows the reference's
-        per-site loop (SearchServiceImpl.java:74-114): the all-terms
-        guard, the ``100*df//N`` threshold, the rarest-first order, AND
-        the scoring statistics all use the repo's own df and page count
-        — a term present globally but absent in this repo short-circuits
-        the scoped AND query.
-        """
-        from searchengine_spark.plans.planner import analyze_query
+        Returns (plan, global term stats {term: (df, cf)}, scoring scope
+        = (N, avgdl)).  The global stats are one pruned pyarrow read of
+        the query terms' runs that projects only
+        :data:`~searchengine_spark.index.format.TERM_TOTALS_COLUMNS`, so
+        :func:`_runs_on_driver` decides before any blob column is read.
 
+        Scoped planning follows the reference's per-site loop
+        (SearchServiceImpl.java:74-114): the all-terms guard, the
+        ``100*df//N`` threshold, the rarest-first order, AND the scoring
+        statistics all use the repo's own df and page count — a term
+        present globally but absent in this repo short-circuits the
+        scoped AND query.
+        """
         terms = analyze_query(query)
-        info3 = self.term_info(terms)
+        stats = term_totals(self._read_table(
+            self._runs_path,
+            filter=term_filter(terms, self.cfg.n_buckets),
+            columns=TERM_TOTALS_COLUMNS,
+        )) if terms else {}
         if repo is None:
-            plan = plan_query(
-                query,
-                {t: (df, cf) for t, (df, cf, _) in info3.items()},
-                self.n_docs,
-                self.cfg.search_filter_pct,
-            )
-            return plan, info3, (self.n_docs, self.avgdl)
+            plan = plan_query(query, stats, self.n_docs, self.cfg.search_filter_pct)
+            return plan, stats, (self.n_docs, self.avgdl)
         n_repo, avgdl_repo, _, _ = self.repo_scope(repo)
         rdf = self.term_repo_df(terms, repo)
         plan = plan_query(
@@ -358,7 +331,7 @@ class SearchEngine:
             n_repo,
             self.cfg.search_filter_pct,
         )
-        return plan, info3, (n_repo, avgdl_repo or 1.0)
+        return plan, stats, (n_repo, avgdl_repo or 1.0)
 
     # ------------------------------------------------------------------
     # executors of the per-salt kernels
@@ -377,7 +350,7 @@ class SearchEngine:
         above it (module docstring).  ``planned`` lets callers reuse an
         already-computed ``plan()`` result (one term-dictionary read per
         request, not one per phase — the p50 path)."""
-        plan, info3, (n_docs, avgdl) = (
+        plan, stats, (n_docs, avgdl) = (
             planned if planned is not None else self.plan(query, repo)
         )
         if not plan.ordered or (mode == "and" and plan.empty):
@@ -391,7 +364,7 @@ class SearchEngine:
             b=self.cfg.bm25_b,
             avgdl=avgdl,
         )
-        if not _runs_on_driver(plan, info3):
+        if not _runs_on_driver(plan, stats):
             per_salt = self._spark_salts(plan, repo, kernel, RESULT_SCHEMA)
             return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
         outs = [o for o in self._local_salts(plan, repo, kernel) if o["doc_id"].size]
@@ -431,13 +404,11 @@ class SearchEngine:
         """Driver executor: one pruned pyarrow read of the query terms'
         runs (reused while the term set repeats), then ``kernel`` per
         salt group — no Spark job."""
-        import pyarrow.dataset as pads
-
         terms = frozenset(t for t, _, _ in plan.ordered)
         if self._last_runs[0] != terms:
-            buckets = sorted({self._bucket_of(t) for t in terms})
-            filt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
-            tbl = self._read_table(self._runs_path, filter=filt)
+            tbl = self._read_table(
+                self._runs_path, filter=term_filter(terms, self.cfg.n_buckets)
+            )
             self._last_runs = (terms, _runs_by_salt(
                 {c: tbl[c].to_numpy(zero_copy_only=False) for c in tbl.column_names}
             ))
@@ -520,7 +491,7 @@ class SearchEngine:
         if offset < 0 or limit <= 0:
             return {"result": False, "error": "offset must be >= 0 and limit > 0"}
         planned = self.plan(query, repo)
-        plan, info3, _ = planned
+        plan, stats, _ = planned
         if mode == "and" and plan.empty:
             return {"result": True, "count": 0, "data": []}
         k = offset + limit
@@ -534,7 +505,7 @@ class SearchEngine:
         # normalizes by the max over the k collected rows instead — a
         # documented deviation bounded to that path.
         if with_count:
-            total, max_tf = self._match_stats(plan, info3, mode, repo)
+            total, max_tf = self._match_stats(plan, stats, mode, repo)
         else:
             total = -1
             max_tf = max((int(r.tf_sum) for r in rows), default=0)
@@ -580,13 +551,13 @@ class SearchEngine:
         driver (no Spark job) while the query terms' summed global df is
         within ``LOCAL_MAX_DF`` and distributed above it, so a head
         term's postings are never decoded on the driver."""
-        plan, info3, _ = planned if planned is not None else self.plan(query, repo)
-        return self._match_stats(plan, info3, mode, repo)[0]
+        plan, stats, _ = planned if planned is not None else self.plan(query, repo)
+        return self._match_stats(plan, stats, mode, repo)[0]
 
     def _match_stats(
         self,
         plan: PlannedQuery,
-        info3: dict,
+        stats: dict,
         mode: str,
         repo: str | None,
     ) -> tuple[int, int]:
@@ -604,7 +575,7 @@ class SearchEngine:
         if not plan.ordered or (mode == "and" and plan.empty):
             return 0, 0
         kernel = partial(_count_salt, n_terms=len(plan.ordered), mode_and=mode == "and")
-        if _runs_on_driver(plan, info3):
+        if _runs_on_driver(plan, stats):
             outs = self._local_salts(plan, repo, kernel)
             return (
                 sum(o["total"][0] for o in outs),

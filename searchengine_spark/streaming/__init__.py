@@ -1,6 +1,5 @@
 from searchengine_spark.streaming.incremental import (  # noqa: F401
-    sessionize_events,
+    apply_staged_updates,
     stage_corpus_stream,
     stream_corpus,
-    windowed_event_counts,
 )

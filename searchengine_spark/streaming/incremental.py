@@ -12,43 +12,19 @@ equivalents:
   maintenance stays a batch rebuild of affected term partitions — the
   design SURVEY.md §3.3 pins — because deterministic dense doc ids
   (rank-identity contract) cannot be assigned online.
-- :func:`windowed_event_counts` — watermarked sliding-window
-  aggregation over an event stream; late rows beyond the watermark are
-  dropped by Spark's state store.  The same plan works in batch (tests
-  compare stream vs batch output).
-- :func:`sessionize_events` — custom stateful operator via
-  ``applyInPandasWithState``: gap-based sessionization with per-user
-  state and processing-time timeout.
+- :func:`apply_staged_updates` — drains a small staging area into a
+  live index, one single-doc re-index per staged row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    StringType,
-    TimestampType,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType, StringType
 
 from searchengine_spark.sources.corpus import CORPUS_COLUMNS
 
 CORPUS_SCHEMA = StructType(
     [StructField(c, StringType()) for c in CORPUS_COLUMNS]
-)
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
 )
 
 
@@ -129,130 +105,3 @@ def apply_staged_updates(
             )
         )
     return {"applied": len(records), "records": records}
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked (sliding-)window counts + sums per event_type.
-
-    Works on both a stream (late data beyond ``watermark`` dropped by
-    the state store) and a batch frame (watermark is a no-op there —
-    which is what lets tests compare stream vs batch results exactly).
-    """
-    # event-time ops require TIMESTAMP (the test tables carry NTZ);
-    # the cast is applied in batch mode too so window boundaries match
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if events.isStreaming:
-        events = events.withWatermark("ts", watermark)
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        events.groupBy(win.alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-SESSION_SCHEMA = "user_id long, session_start timestamp, session_end timestamp, n_events long, closed boolean"
-_STATE_SCHEMA = "start long, last long, n long"
-
-
-def _make_session_fn(use_timeout: bool):
-    """Kernel factory for the stateful sessionizer.
-
-    State = (session_start_ms, last_event_ms, n_events).  An event more
-    than ``gap`` after the previous one closes the session and starts a
-    new one; every batch also emits an open-session snapshot row
-    (``closed=False``), so a bounded replay yields complete sessions
-    without needing timeouts.  With ``use_timeout`` the open session is
-    additionally flushed by a processing-time timeout when the stream
-    goes quiet — continuous-mode behavior; do NOT combine with
-    ``availableNow`` (Spark keeps scheduling no-data batches until the
-    timeout fires, so the query never terminates).  Timestamps are
-    carried as epoch-ms longs (GroupState holds tuples).
-    """
-
-    def session_fn(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        gap_ms = 30 * 60 * 1000
-        (user_id,) = key
-        if use_timeout and state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="ms")],
-                    "session_end": [pd.Timestamp(last, unit="ms")],
-                    "n_events": [n],
-                    "closed": [True],
-                }
-            )
-            return
-
-        ts_all = []
-        for pdf in pdf_iter:
-            ts_all.append(pdf["ts"])
-        ts = pd.concat(ts_all).sort_values()
-        ms = (ts.astype("int64") // 1_000_000).to_numpy()
-
-        out_rows = []
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = int(ms[0]), int(ms[0]), 0
-        for t in ms:
-            t = int(t)
-            if t - last > gap_ms:
-                out_rows.append((start, last, n, True))
-                start, n = t, 0
-            last = max(last, t)
-            n += 1
-        state.update((start, last, n))
-        if use_timeout:
-            state.setTimeoutDuration(gap_ms)
-        out_rows.append((start, last, n, False))  # open session snapshot
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "session_start": [pd.Timestamp(s, unit="ms") for s, _, _, _ in out_rows],
-                "session_end": [pd.Timestamp(l, unit="ms") for _, l, _, _ in out_rows],
-                "n_events": [n_ for _, _, n_, _ in out_rows],
-                "closed": [c for _, _, _, c in out_rows],
-            }
-        )
-
-    return session_fn
-
-
-def sessionize_events(events_stream: DataFrame, use_timeout: bool = False) -> DataFrame:
-    """Custom stateful streaming operator: per-user gap sessionization.
-
-    ``applyInPandasWithState`` — Arrow-batched, one state row per user
-    (the piece a watermarked window cannot express: variable-length,
-    data-dependent windows).  ``use_timeout=True`` adds processing-time
-    timeouts for continuous streams; leave False for bounded
-    ``availableNow`` replays (see :func:`_make_session_fn`).
-    """
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        _make_session_fn(use_timeout),
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_timeout
-            else GroupStateTimeout.NoTimeout
-        ),
-    )

@@ -7,6 +7,7 @@ treat it read-only.
 from __future__ import annotations
 
 import itertools
+import os
 import sys
 from contextlib import contextmanager, nullcontext
 from pathlib import Path
@@ -38,6 +39,31 @@ def with_jobs(spark, fn, *args, **kwargs):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def run_term_totals(spark, index_dir) -> dict:
+    """{term: (df, cf)} of an index: its runs' ``df_run`` and ``cf_run``
+    summed per term, by Spark (independent of the engine's reads)."""
+    from pyspark.sql import functions as F
+
+    runs = spark.read.parquet(os.path.join(index_dir, "postings"))
+    totals = runs.groupBy("term").agg(
+        F.sum("df_run").alias("df"), F.sum("cf_run").alias("cf")
+    )
+    return {r["term"]: (r["df"], r["cf"]) for r in totals.collect()}
+
+
+def encoded_runs(spark, index_dir) -> dict:
+    """{(term, salt): (df_run, cf_run, doc_bytes, tf_bytes, dl_bytes)}
+    of an index's runs: equal dicts mean byte-identical postings."""
+    runs = spark.read.parquet(os.path.join(index_dir, "postings")).collect()
+    return {
+        (r["term"], r["salt"]): (
+            r["df_run"], r["cf_run"],
+            bytes(r["doc_bytes"]), bytes(r["tf_bytes"]), bytes(r["dl_bytes"]),
+        )
+        for r in runs
+    }
 
 
 @contextmanager

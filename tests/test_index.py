@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.index.builder import assign_doc_ids, build_index
-from tests.conftest import CFG
+from tests.conftest import CFG, encoded_runs, run_term_totals
 
 
 def _flat(spark, index_dir):
@@ -75,13 +75,15 @@ def test_doclen_is_tf_sum(spark, index_dir, oracle_index):
         assert sum(r["tfs"]) == r["doclen"], r["doc_id"]
 
 
-def test_term_stats_match_oracle(spark, index_dir, oracle_index):
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
-    got = {r["term"]: (r["df"], r["cf"]) for r in ts.collect()}
+def test_run_term_totals_match_oracle(spark, index_dir, oracle_index):
+    """The runs are the term dictionary: Σ df_run / Σ cf_run per term
+    are the oracle's df / cf, and meta.n_terms is its vocabulary size."""
     want = {
         t: (len(p), sum(p.values())) for t, p in oracle_index.postings.items()
     }
-    assert got == want
+    assert run_term_totals(spark, index_dir) == want
+    meta = json.load(open(os.path.join(index_dir, "meta.json")))
+    assert meta["n_terms"] == len(want)
 
 
 def test_term_repo_stats_match_oracle(spark, index_dir, oracle_index):
@@ -126,8 +128,8 @@ def test_encoded_postings_match_flat(spark, index_dir):
 def test_bucket_routing(spark, index_dir):
     from searchengine_spark.functions.xxhash import bucket_of
 
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats")).collect()
-    for r in ts:
+    runs = spark.read.parquet(os.path.join(index_dir, "postings"))
+    for r in runs.select("term", "bucket").collect():
         assert bucket_of(r["term"], CFG.n_buckets) == r["bucket"]
 
 
@@ -207,7 +209,8 @@ def test_meta_contents(index_dir, oracle_index):
 def test_meta_is_v2_with_sum_dl_and_hwm(spark, index_dir, oracle_index):
     """A fresh build writes the v2 format: meta carries sum_dl (= Σ
     doclen over doc_stats) and the max_doc_id high-water mark, and the
-    index holds one postings relation — no flat stage1_postings."""
+    index holds one postings relation — no flat stage1_postings — and
+    no global term-stats copy of it."""
     meta = json.load(open(os.path.join(index_dir, "meta.json")))
     assert meta["format"] == "searchengine_spark/v2"
     ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
@@ -215,12 +218,13 @@ def test_meta_is_v2_with_sum_dl_and_hwm(spark, index_dir, oracle_index):
     assert meta["sum_dl"] == sum(oracle_index.doclen.values())
     assert meta["max_doc_id"] == oracle_index.n_docs - 1
     assert not os.path.exists(os.path.join(index_dir, "stage1_postings"))
+    assert not os.path.exists(os.path.join(index_dir, "term_stats"))
 
 
 def test_resume_skips_completed_stages(spark, corpus_rows, tmp_path):
     """Second build over same (source, config) must be a no-op resume;
     deleting only the stage2 manifest re-runs only stage2 and produces
-    an identical posting store (north_rule resumability)."""
+    a byte-identical posting store (north_rule resumability)."""
     out = str(tmp_path / "idx")
     docs = spark.createDataFrame(corpus_rows[:30], ["repo", "path", "commit", "lang", "content"])
     m1 = build_index(spark, docs, out, CFG, source="resume-test")
@@ -230,19 +234,25 @@ def test_resume_skips_completed_stages(spark, corpus_rows, tmp_path):
     assert m2["stage1"]["wall_sec"] == first_wall
     assert m2["stage2"] == m1["stage2"]
 
-    ts_before = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(os.path.join(out, "term_stats")).collect()
-    }
-    os.remove(os.path.join(out, "_checkpoints", "stage2.json"))
+    def postings_files():
+        return {f for fs in _parquet_files(out, "postings").values() for f in fs}
+
+    runs_before, files_before = encoded_runs(spark, out), postings_files()
+    manifest = os.path.join(out, "_checkpoints", "stage2.json")
+    os.remove(manifest)
     m3 = build_index(spark, docs, out, CFG, source="resume-test")
     assert m3["stage1"]["wall_sec"] == first_wall  # stage1 still skipped
-    assert m3["stage2"]["wall_sec"] != m1["stage2"]["wall_sec"] or True
-    ts_after = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(os.path.join(out, "term_stats")).collect()
-    }
-    assert ts_before == ts_after
+    # stage 2 really re-ran: its manifest is back and every postings
+    # file is a new one (each write job names its files uniquely)
+    assert os.path.exists(manifest)
+    files_after = postings_files()
+    assert files_after and not files_after & files_before
+    assert encoded_runs(spark, out) == runs_before
+
+    def untimed(m):
+        return {k: v for k, v in m.items() if k not in ("wall_sec", "steps_sec")}
+
+    assert untimed(m3["stage2"]) == untimed(m1["stage2"])
 
 
 def test_cancel_midbuild_then_resume(spark, corpus_rows, tmp_path):
@@ -286,15 +296,7 @@ def test_cancel_midbuild_then_resume(spark, corpus_rows, tmp_path):
     assert m["stage1"]["fingerprint"]["source"] == "cancel-test"
     fresh = str(tmp_path / "fresh")
     build_index(spark, docs, fresh, CFG, source="cancel-test")
-    ts_resumed = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(os.path.join(out, "term_stats")).collect()
-    }
-    ts_fresh = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(os.path.join(fresh, "term_stats")).collect()
-    }
-    assert ts_resumed == ts_fresh
+    assert run_term_totals(spark, out) == run_term_totals(spark, fresh)
 
 
 def test_config_change_invalidates_checkpoint(spark, corpus_rows, tmp_path):
@@ -334,17 +336,7 @@ def test_index_invariant_across_shuffle_partition_counts(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
 
-    def canon(path):
-        runs = spark.read.parquet(os.path.join(path, "postings"))
-        return {
-            (r["term"], r["salt"]): (
-                r["df_run"], r["cf_run"], bytes(r["doc_bytes"]),
-                bytes(r["tf_bytes"]), bytes(r["dl_bytes"]),
-            )
-            for r in runs.collect()
-        }
-
-    assert canon(outs["3"]) == canon(outs["13"])
+    assert encoded_runs(spark, outs["3"]) == encoded_runs(spark, outs["13"])
     r3 = SearchEngine(spark, outs["3"]).search("index search", limit=5)
     r13 = SearchEngine(spark, outs["13"]).search("index search", limit=5)
     assert r3 == r13
@@ -384,7 +376,7 @@ def _parquet_files(index_dir, rel):
 def _assert_zstd(index_dir):
     import pyarrow.parquet as pq
 
-    for rel in ("postings", "term_stats", "term_repo_stats", "doc_stats"):
+    for rel in ("postings", "term_repo_stats", "doc_stats"):
         files = [f for fs in _parquet_files(index_dir, rel).values() for f in fs]
         assert files, rel
         for f in files:

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.index.maintain import delete_repo, reindex_doc
 from searchengine_spark.query.engine import SearchEngine
-from tests.conftest import CFG, EXECUTORS
+from tests.conftest import CFG, EXECUTORS, encoded_runs, run_term_totals
 from tests.oracle import build_oracle_index, oracle_search
 
 
@@ -65,22 +65,6 @@ def _analyzed(content):
     return build_oracle_index([("r", "p", "", "", content)]).doc_tfs[0]
 
 
-def _term_stats(spark, index_dir):
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
-    return {r["term"]: (r["df"], r["cf"]) for r in ts.collect()}
-
-
-def _encoded_runs(spark, index_dir):
-    """{(term, salt): (df_run, doc_bytes, tf_bytes, dl_bytes)}"""
-    runs = spark.read.parquet(os.path.join(index_dir, "postings")).collect()
-    return {
-        (r["term"], r["salt"]): (
-            r["df_run"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]), bytes(r["dl_bytes"])
-        )
-        for r in runs
-    }
-
-
 def test_reindex_doc_edit_matches_fresh_build_byte_for_byte(
     spark, corpus_rows, tmp_path
 ):
@@ -101,9 +85,9 @@ def test_reindex_doc_edit_matches_fresh_build_byte_for_byte(
 
     fresh = _build(spark, edited, tmp_path / "fresh")
     assert _postings_by_doc(spark, live) == _postings_by_doc(spark, fresh)
-    assert _term_stats(spark, live) == _term_stats(spark, fresh)
+    assert run_term_totals(spark, live) == run_term_totals(spark, fresh)
     assert _term_repo_stats(spark, live) == _term_repo_stats(spark, fresh)
-    assert _encoded_runs(spark, live) == _encoded_runs(spark, fresh)
+    assert encoded_runs(spark, live) == encoded_runs(spark, fresh)
     assert _forward_index_row(spark, live, target[0], target[1]) == _analyzed(target[4])
 
     import json
@@ -118,6 +102,44 @@ def test_reindex_doc_edit_matches_fresh_build_byte_for_byte(
     eng = SearchEngine(spark, live)
     hits = eng.search("reindex marker", limit=5)
     assert hits["count"] == 1 and hits["data"][0]["uri"] == target[1]
+
+
+def test_reindex_doc_keeps_n_terms_exact(spark, corpus_rows, tmp_path):
+    """A reindex_doc that drops the last posting of the doc's corpus-
+    unique terms and adds a term new to the corpus moves meta.n_terms
+    by exactly that (-k + 1), to a fresh build's value — and the
+    statistics surface reports the same lemma count."""
+    import json
+
+    rows = [list(r) for r in corpus_rows[:40]]
+    oracle = build_oracle_index(rows)
+    # a doc holding the only posting of some terms
+    doc_id, unique = next(
+        (d, [t for t in tfs if len(oracle.postings[t]) == 1])
+        for d, tfs in sorted(oracle.doc_tfs.items())
+        if any(len(oracle.postings[t]) == 1 for t in tfs)
+    )
+    content = "zqxfreshlemma"
+    [new_term] = _analyzed(content)
+    assert new_term not in oracle.postings
+    repo, path = oracle.docs[doc_id][:2]
+
+    live = _build(spark, rows, tmp_path / "live")
+    before = json.load(open(os.path.join(live, "meta.json")))["n_terms"]
+    assert before == len(oracle.postings)
+    reindex_doc(spark, live, repo=repo, path=path, content=content)
+
+    edited = [r[:4] + [content] if tuple(r[:2]) == (repo, path) else r for r in rows]
+    fresh = _build(spark, edited, tmp_path / "fresh")
+    m_live = json.load(open(os.path.join(live, "meta.json")))
+    m_fresh = json.load(open(os.path.join(fresh, "meta.json")))
+    assert m_live["n_terms"] == m_fresh["n_terms"] == before - len(unique) + 1
+    assert run_term_totals(spark, live) == run_term_totals(spark, fresh)
+    lemmas = [
+        SearchEngine(spark, d).statistics()["statistics"]["total"]["lemmas"]
+        for d in (live, fresh)
+    ]
+    assert lemmas == [m_fresh["n_terms"]] * 2
 
 
 def test_reindex_doc_adds_new_document(spark, corpus_rows, tmp_path):
@@ -168,7 +190,7 @@ def test_delete_repo_matches_fresh_build_by_identity(spark, corpus_rows, tmp_pat
     fresh = _build(spark, remaining, tmp_path / "fresh")
 
     assert _postings_by_doc(spark, live) == _postings_by_doc(spark, fresh)
-    assert _term_stats(spark, live) == _term_stats(spark, fresh)
+    assert run_term_totals(spark, live) == run_term_totals(spark, fresh)
 
     # per-repo stats agree too (the repo's rows purged, never recomputed)
     assert _term_repo_stats(spark, live) == _term_repo_stats(spark, fresh)
@@ -233,7 +255,7 @@ def test_delete_last_repo_empties_index(spark, corpus_rows, tmp_path):
     live = _build(spark, rows, tmp_path / "live")
     rec = delete_repo(spark, live, rows[0][0], mode="eager")
     assert rec["deleted_docs"] == len(rows)
-    assert _term_stats(spark, live) == {}
+    assert run_term_totals(spark, live) == {}
     import json
 
     meta = json.load(open(os.path.join(live, "meta.json")))
@@ -242,10 +264,10 @@ def test_delete_last_repo_empties_index(spark, corpus_rows, tmp_path):
 
 def test_delete_missing_repo_is_noop(spark, corpus_rows, tmp_path):
     live = _build(spark, corpus_rows[:15], tmp_path / "live")
-    before = _term_stats(spark, live)
+    before = run_term_totals(spark, live)
     rec = delete_repo(spark, live, "no-such-repo")
     assert rec["deleted_docs"] == 0
-    assert _term_stats(spark, live) == before
+    assert run_term_totals(spark, live) == before
 
 
 def _multi_repo_subset(corpus_rows):
@@ -347,7 +369,7 @@ def test_delete_repo_noncontiguous_matches_fresh_build(
     remaining = [r for r in rows if r[0] != first_repo]
     fresh = _build(spark, remaining, tmp_path / "fresh")
     assert _postings_by_doc(spark, live) == _postings_by_doc(spark, fresh)
-    assert _term_stats(spark, live) == _term_stats(spark, fresh)
+    assert run_term_totals(spark, live) == run_term_totals(spark, fresh)
 
 
 def test_reindex_doc_rewrites_single_doc_stats_partition(
@@ -411,7 +433,7 @@ def test_mutation_invalidates_resume_checkpoints(spark, corpus_rows, tmp_path):
     docs = spark.createDataFrame(rows, schema=["repo", "path", "commit", "lang", "content"])
     build_index(spark, docs, live, CFG, source="maintain-test", store_content=True)
     fresh = _build(spark, rows, tmp_path / "fresh")
-    assert _term_stats(spark, live) == _term_stats(spark, fresh)
+    assert run_term_totals(spark, live) == run_term_totals(spark, fresh)
 
 
 def test_reindex_lookups_are_metadata_cheap(spark, corpus_rows, tmp_path):
@@ -477,7 +499,7 @@ def test_maintenance_rejects_v1_index(spark, corpus_rows, tmp_path):
         meta.pop(key)
     with open(mp, "w") as f:
         json.dump(meta, f)
-    before = _file_snapshot(live, ["postings", "doc_stats", "term_stats", "term_repo_stats"])
+    before = _file_snapshot(live, ["postings", "doc_stats", "term_repo_stats"])
     calls = [
         lambda: reindex_doc(spark, live, rows[0][0], "src/v1.py", "v1token"),
         lambda: delete_repo(spark, live, rows[0][0]),
@@ -486,9 +508,7 @@ def test_maintenance_rejects_v1_index(spark, corpus_rows, tmp_path):
     for call in calls:
         with pytest.raises(ValueError, match="searchengine_spark/v2"):
             call()
-    assert _file_snapshot(
-        live, ["postings", "doc_stats", "term_stats", "term_repo_stats"]
-    ) == before
+    assert _file_snapshot(live, ["postings", "doc_stats", "term_repo_stats"]) == before
 
 
 def test_live_engine_survives_mutation_via_retry_and_refresh(
@@ -502,7 +522,7 @@ def test_live_engine_survives_mutation_via_retry_and_refresh(
     rows = corpus_rows[:30]
     live = _build(spark, rows, tmp_path / "live")
     eng = SearchEngine(spark, live)
-    # warm every memoized dataset (term_stats, postings, doc_stats, ...)
+    # warm every memoized dataset (postings, doc_stats, ...)
     before = eng.search("index", limit=5)
     assert before["result"]
 
@@ -581,17 +601,17 @@ def _result_keys(eng, query, k=50):
 def test_delete_repo_tombstone_is_metadata_cheap_and_excludes(
     spark, corpus_rows, tmp_path
 ):
-    """Default-mode delete: the postings relations and term_stats are
-    bit-untouched on disk (the deletion is a meta.json vector + per-doc/
-    per-repo stats purge), yet every query path excludes the repo's
-    docs immediately — Lucene deleted-docs semantics."""
+    """Default-mode delete: the postings are bit-untouched on disk (the
+    deletion is a meta.json vector + per-doc/per-repo stats purge), yet
+    every query path excludes the repo's docs immediately — Lucene
+    deleted-docs semantics."""
     import json
 
     rows = _multi_repo_subset(corpus_rows)
     repos = sorted({r[0] for r in rows})
     victim = repos[0]
     live = _build(spark, rows, tmp_path / "live")
-    heavy = ["postings", "term_stats"]
+    heavy = ["postings"]
     before = _file_snapshot(live, heavy)
     rec = delete_repo(spark, live, victim)
     assert rec["mode"] == "tombstone"
@@ -640,17 +660,19 @@ def test_tombstone_compact_equals_eager_delete(spark, corpus_rows, tmp_path):
 
     delete_repo(spark, b, repos[0], mode="eager")
     delete_repo(spark, b, repos[1], mode="eager")
+    fresh = _build(spark, [r for r in rows if r[0] not in repos[:2]], tmp_path / "fresh")
 
-    assert _encoded_runs(spark, a) == _encoded_runs(spark, b)
+    assert encoded_runs(spark, a) == encoded_runs(spark, b)
     assert _postings_by_doc(spark, a) == _postings_by_doc(spark, b)
-    assert _term_stats(spark, a) == _term_stats(spark, b)
+    assert run_term_totals(spark, a) == run_term_totals(spark, b)
     assert _term_repo_stats(spark, a) == _term_repo_stats(spark, b)
     ma = json.load(open(os.path.join(a, "meta.json")))
     mb = json.load(open(os.path.join(b, "meta.json")))
     assert "tombstones" not in ma
     assert ma["n_docs"] == mb["n_docs"]
     assert ma["avgdl"] == pytest.approx(mb["avgdl"])
-    assert ma["n_terms"] == mb["n_terms"]
+    mf = json.load(open(os.path.join(fresh, "meta.json")))
+    assert ma["n_terms"] == mb["n_terms"] == mf["n_terms"]
     # compact on a vector-free index is a no-op
     assert compact(spark, a)["tombstones_applied"] == 0
 
@@ -728,12 +750,12 @@ def test_reindex_writes_bounded_by_touched_partitions(
     spark, corpus_rows, tmp_path
 ):
     """The file set rewritten by ONE reindex_doc is bounded by the
-    affected term buckets (encoded runs, term_stats, term_repo_stats —
-    all partition-dir swaps) and one doc_stats partition — never a
+    affected term buckets (encoded runs, term_repo_stats — both
+    partition-dir swaps) and one doc_stats partition — never a
     full-relation rewrite, independent of corpus size."""
     rows = corpus_rows[:40]
     live = _build(spark, rows, tmp_path / "live")
-    rels = ["postings", "term_stats", "term_repo_stats", "doc_stats"]
+    rels = ["postings", "term_repo_stats", "doc_stats"]
     before = _file_snapshot(live, rels)
     target = rows[7]
     rec = reindex_doc(
@@ -748,7 +770,7 @@ def test_reindex_writes_bounded_by_touched_partitions(
     for f in sorted(changed):
         rel, _, rest = f.partition(os.sep)
         sub = rest.split(os.sep, 1)[0] if rest else ""
-        if rel in ("postings", "term_stats", "term_repo_stats"):
+        if rel in ("postings", "term_repo_stats"):
             assert sub in allowed_buckets, f"unexpected rewrite outside touched buckets: {f}"
         elif rel == "doc_stats":
             assert sub == f"ds_part={rec['doc_id'] % CFG.doc_stats_parts}", f
@@ -833,7 +855,7 @@ def test_reindex_stats_writes_keep_builder_file_count(spark, corpus_rows, tmp_pa
         d = os.path.join(live, rel, f"bucket={b}")
         return sum(f.endswith(".parquet") for f in os.listdir(d))
 
-    rels = ("postings", "term_stats", "term_repo_stats")
+    rels = ("postings", "term_repo_stats")
     built = {(r, b): n_files(r, b) for r in rels for b in range(CFG.n_buckets)}
     target = corpus_rows[7]
     rec = reindex_doc(spark, live, target[0], target[1], "slice count probe tokens")

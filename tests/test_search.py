@@ -81,7 +81,7 @@ def test_blockmax_pruned_equals_exhaustive(engine, oracle_index):
     from searchengine_spark.operators import wand as W
 
     for query in ["index search query", "build merge split", "def return index"]:
-        plan, info3, _ = engine.plan(query)
+        plan, _, _ = engine.plan(query)
         if not plan.ordered:
             continue
         import os
@@ -187,7 +187,7 @@ def test_high_df_pruning_via_config(spark, index_dir, oracle_index):
 
     eng = SearchEngine(spark, index_dir)
     # pick a threshold between 'index' df% and 'commonterm' df% (~97%)
-    info = eng.term_info(["commonterm", "index"])
+    _, info, _ = eng.plan("commonterm index")
     pct_common = (100 * info["commonterm"][0]) // eng.n_docs
     pct_index = (100 * info["index"][0]) // eng.n_docs
     assert pct_common > pct_index, "fixture assumption"
@@ -272,25 +272,80 @@ def test_search_without_count_skips_second_scan(engine):
     assert r["result"] is True and r["count"] == -1 and r["data"]
 
 
+def _record_reads(eng, monkeypatch) -> list:
+    """The engine's driver-side reads from now on, as (relation dir
+    name, to_table keywords) pairs."""
+    reads = []
+    read_table = eng._read_table  # noqa: SLF001
+
+    def recording(path, **kw):
+        reads.append((os.path.basename(path), kw))
+        return read_table(path, **kw)
+
+    monkeypatch.setattr(eng, "_read_table", recording)
+    return reads
+
+
+def _runs_reads(reads) -> int:
+    """How many of ``reads`` read the runs' blob columns."""
+    return sum(rel == "postings" and kw.get("columns") is None for rel, kw in reads)
+
+
 def test_search_reads_runs_once_for_topk_and_count(spark, index_dir, monkeypatch):
     """search() runs the top-k and the count over the same runs: the
     count reuses the top-k's driver-side read, and refresh() drops it."""
     from searchengine_spark.query.engine import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
-    reads = []
-    read_table = eng._read_table  # noqa: SLF001
-
-    def counting(path, *a, **kw):
-        reads.append(os.path.basename(path))
-        return read_table(path, *a, **kw)
-
-    monkeypatch.setattr(eng, "_read_table", counting)
+    reads = _record_reads(eng, monkeypatch)
     first = eng.search("index search", limit=3)
-    assert first["count"] > 0 and reads.count("postings") == 1
+    assert first["count"] > 0 and _runs_reads(reads) == 1
     eng.refresh()
     assert eng.search("index search", limit=3) == first
-    assert reads.count("postings") == 2
+    assert _runs_reads(reads) == 2
+
+
+@pytest.mark.parametrize("repo", [None, "scoped"])
+def test_plan_reads_only_run_term_totals(engine, oracle_index, monkeypatch, repo):
+    """plan() takes the global df/cf from one read of postings/, pruned
+    by bucket partition and term and projected to (term, df_run,
+    cf_run): no blob column and no other relation feeds the global
+    statistics (a scoped plan adds its own repo reads)."""
+    from searchengine_spark.index.format import TERM_TOTALS_COLUMNS
+
+    if repo is not None:
+        repo = sorted({d[0] for d in oracle_index.docs})[0]
+    reads = _record_reads(engine, monkeypatch)
+    plan, stats, _ = engine.plan("index search", repo=repo)
+    assert plan.ordered and set(stats) == {"index", "search"}
+    postings = [kw for rel, kw in reads if rel == "postings"]
+    assert len(postings) == 1
+    [kw] = postings
+    assert set(kw["columns"]) <= set(TERM_TOTALS_COLUMNS)
+    filt = str(kw["filter"])
+    assert "bucket" in filt and "term" in filt, filt
+    if repo is None:
+        assert [rel for rel, _ in reads] == ["postings"]
+    want = {t: (len(p), sum(p.values())) for t, p in oracle_index.postings.items()}
+    assert stats == {t: want[t] for t in stats}
+
+
+def test_distributed_head_term_reads_no_blob_on_driver(spark, engine, monkeypatch):
+    """On the distributed executor a head term's runs stay off the
+    driver: search() reads postings/ only through the planner's
+    (term, df_run, cf_run) projection, and the top-k and count run as
+    Spark jobs."""
+    from searchengine_spark.index.format import TERM_TOTALS_COLUMNS
+
+    reads = _record_reads(engine, monkeypatch)
+    with distributed():
+        res, jobs = with_jobs(spark, engine.search, "commonterm", limit=5)
+    assert res["count"] > 0 and res["data"] and jobs > 0
+    postings = [kw for rel, kw in reads if rel == "postings"]
+    assert postings
+    for kw in postings:
+        assert kw.get("columns") is not None
+        assert set(kw["columns"]) <= set(TERM_TOTALS_COLUMNS), kw
 
 
 def test_executor_follows_summed_df(spark, engine, monkeypatch):
@@ -302,8 +357,8 @@ def test_executor_follows_summed_df(spark, engine, monkeypatch):
     import searchengine_spark.query.engine as engine_mod
 
     query = "index search"
-    plan, info3, _ = engine.plan(query)
-    summed = sum(info3[t][0] for t, _, _ in plan.ordered)
+    plan, stats, _ = engine.plan(query)
+    summed = sum(stats[t][0] for t, _, _ in plan.ordered)
     assert len(plan.ordered) == 2 and summed <= engine_mod.LOCAL_MAX_DF
     for mode in ("and", "or"):
         local, jobs = with_jobs(spark, engine.search, query, mode=mode)
@@ -421,9 +476,8 @@ def test_match_stats_scan_is_row_group_pruned(engine):
     import pyarrow.dataset as pads
 
     terms = ["getmanager"]  # rare term: prunes hard
-    info = engine.term_info(terms)
-    assert terms[0] in info
-    buckets = sorted({info[t][2] for t in terms})
+    assert terms[0] in engine.plan("getManager")[1]
+    buckets = sorted({engine._bucket_of(t) for t in terms})  # noqa: SLF001
     ds = engine._dataset(engine._rel("postings"))  # noqa: SLF001
 
     all_frags = list(ds.get_fragments())

@@ -8,26 +8,16 @@ smoke-only).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from pyspark.sql import functions as F
 
 from searchengine_spark.sources.corpus import generate_corpus
 from searchengine_spark.streaming.incremental import (
-    sessionize_events,
     stage_corpus_stream,
     stream_corpus,
-    windowed_event_counts,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.read.parquet(f"{SF_DIR}/events.parquet")
+from tests.conftest import run_term_totals
 
 
 def _await(query, timeout=120):
@@ -63,8 +53,8 @@ class TestCorpusIngest:
 
     def test_staged_updates_apply_via_single_doc_reindex(self, spark, tmp_path):
         """Stream -> staging -> S9 per-doc apply: the live index ends
-        byte-equal (postings/term_stats) to a fresh build over the
-        updated corpus (streaming + maintenance integration)."""
+        with the same per-term (df, cf) over its runs as a fresh build
+        over the updated corpus (streaming + maintenance integration)."""
         from searchengine_spark import IndexConfig
         from searchengine_spark.index.builder import build_index
         from searchengine_spark.streaming.incremental import apply_staged_updates
@@ -95,29 +85,16 @@ class TestCorpusIngest:
         out = apply_staged_updates(spark, live, staging)
         assert out["applied"] == 2
 
-        import os
-
-        from pyspark.sql import functions as F
-
-        ts = {
-            r["term"]: (r["df"], r["cf"])
-            for r in spark.read.parquet(os.path.join(live, "term_stats")).collect()
-        }
+        ts = run_term_totals(spark, live)
         # fresh build over the updated corpus, compared by (repo, path)
         merged = docs.where(
             ~((F.col("repo") == base["repo"]) & (F.col("path") == base["path"]))
         ).unionByName(updates)
         fresh = str(tmp_path / "fresh")
         build_index(spark, merged, fresh, cfg, source="stream-fresh", store_content=True)
-        ts_fresh = {
-            r["term"]: (r["df"], r["cf"])
-            for r in spark.read.parquet(os.path.join(fresh, "term_stats")).collect()
-        }
-        assert ts == ts_fresh
+        assert ts == run_term_totals(spark, fresh)
 
         # bulk loads must refuse the per-doc path
-        import pytest
-
         with pytest.raises(ValueError):
             apply_staged_updates(spark, live, staging, full_rebuild_threshold=1)
 
@@ -131,87 +108,3 @@ class TestCorpusIngest:
             _await(q)
         assert spark.read.parquet(staging).count() == \
             spark.read.parquet(src).count()
-
-
-class TestWindowedCounts:
-    def test_stream_equals_batch(self, spark, events, tmp_path):
-        src = str(tmp_path / "ev")
-        events.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        q = (
-            windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        got = spark.read.parquet(out)
-        expect = windowed_event_counts(events, window="1 hour")
-        # append mode emits only watermark-closed windows; every emitted
-        # row must match the batch aggregate exactly
-        assert got.count() > 0
-        joined = got.alias("g").join(
-            expect.alias("e"),
-            ["window_start", "window_end", "event_type"],
-            "inner",
-        )
-        assert joined.count() == got.count()
-        mism = joined.where(
-            (F.col("g.n_events") != F.col("e.n_events"))
-            | (F.abs(F.col("g.total_value") - F.col("e.total_value")) > 1e-6)
-        )
-        assert mism.count() == 0
-
-    def test_sliding_windows_batch(self, spark, events):
-        slid = windowed_event_counts(events, window="2 hours", slide="1 hour")
-        tumb = windowed_event_counts(events, window="1 hour")
-        # every event lands in exactly 2 sliding windows vs 1 tumbling
-        assert (
-            slid.agg(F.sum("n_events")).collect()[0][0]
-            == 2 * tumb.agg(F.sum("n_events")).collect()[0][0]
-        )
-
-
-class TestSessionize:
-    def test_stateful_sessions(self, spark, events, tmp_path):
-        src = str(tmp_path / "ev")
-        # single file => single micro-batch => deterministic output
-        events.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema).parquet(src)
-        )
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        q = (
-            sessionize_events(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        got = spark.read.parquet(out)
-        # one open-session snapshot (closed=False) per user at minimum;
-        # closed sessions respect the 30-minute gap rule
-        users = {r["user_id"] for r in events.select("user_id").distinct().collect()}
-        assert {r["user_id"] for r in got.select("user_id").distinct().collect()} == users
-        bad = got.where(F.col("session_end") < F.col("session_start"))
-        assert bad.count() == 0
-        # total events across a user's sessions == user's event count
-        per_user = got.groupBy("user_id").agg(F.sum("n_events").alias("n"))
-        expect = events.groupBy("user_id").agg(F.count("*").alias("n"))
-        diff = per_user.join(expect, "user_id").where(
-            per_user["n"] != expect["n"]
-        )
-        assert diff.count() == 0

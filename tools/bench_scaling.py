@@ -42,6 +42,15 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def corpus_path(n_files: int, avg_tokens: int = 240) -> str:
+    """Where :func:`make_corpus` writes the bench corpus: shared by the
+    generator and every measurement child of one parent run, which
+    removes it when it exits."""
+    import tempfile
+
+    return os.path.join(tempfile.gettempdir(), f"scaling_corpus_{n_files}_{avg_tokens}")
+
+
 def make_corpus(spark, n_files: int, avg_tokens: int = 240) -> str:
     """Write the deterministic bench corpus to parquet; returns its path.
 
@@ -51,7 +60,7 @@ def make_corpus(spark, n_files: int, avg_tokens: int = 240) -> str:
     """
     from searchengine_spark.sources.corpus import generate_corpus_distributed
 
-    path = f"/tmp/scaling_corpus_{n_files}_{avg_tokens}"
+    path = corpus_path(n_files, avg_tokens)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         generate_corpus_distributed(spark, n_files, avg_tokens=avg_tokens).write.mode(
             "overwrite"
@@ -570,8 +579,11 @@ def main() -> None:
     elif args.child is not None:
         run_child(args.child, args.files, args.shuffle_partitions)
     else:
-        run_parent(args.files, args.out, args.repeats, args.lo, args.hi,
-                   args.min_probe_ratio, args.shuffle_partitions)
+        try:
+            run_parent(args.files, args.out, args.repeats, args.lo, args.hi,
+                       args.min_probe_ratio, args.shuffle_partitions)
+        finally:
+            shutil.rmtree(corpus_path(args.files), ignore_errors=True)
 
 
 if __name__ == "__main__":
