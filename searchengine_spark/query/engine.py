@@ -18,12 +18,15 @@ compares the query terms' summed global df with :data:`LOCAL_MAX_DF`,
 and the top-k and the count of a request follow the same answer.
 
 - At or under the cap — a driver loop over a pruned pyarrow read
-  (:meth:`SearchEngine._local_salts`).  No Spark job: the p50-latency
-  path for interactive queries (SURVEY.md §7.2 "Latency").
+  (:meth:`SearchEngine._local_salts`), per-salt top-k columns merged by
+  one ``np.lexsort``.  ``search_df`` returns them as a
+  :class:`DriverTopK`, whose ``collect`` and ``columns`` make no JVM
+  call: no Spark job and no Spark frame, the p50-latency path for
+  interactive queries (SURVEY.md §7.2 "Latency").
 - Above it — ``groupBy("salt").applyInPandas`` over the same pruned
   scan (:meth:`SearchEngine._spark_salts`), per-salt results merged by
-  a final tiny sort or sum.  The scale path: a head term's runs never
-  land on the driver.
+  a final tiny sort or sum; ``search_df`` returns that Spark plan.  The
+  scale path: a head term's runs never land on the driver.
 
 The rest of a request is driver-side too: the term dictionary (the
 query terms' ``df_run``/``cf_run`` in ``postings/``, no blob column),
@@ -51,7 +54,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.errors import AnalysisException, ParseException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from searchengine_spark.config import IndexConfig
 from searchengine_spark.functions.xxhash import bucket_of
@@ -67,8 +71,14 @@ from searchengine_spark.plans.planner import (
 from searchengine_spark.query.snippets import build_snippet
 from searchengine_spark.sources.corpus import is_path_source, load_corpus
 
-RESULT_SCHEMA = "doc_id long, bm25 double, tf_sum long"
+RESULT_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("bm25", DoubleType()),
+    StructField("tf_sum", LongType()),
+])
 COUNT_SCHEMA = "total long, max_tf long"
+#: one collected top-k row, shaped like a row of the Spark result frame
+_ResultRow = Row(*RESULT_SCHEMA.fieldNames())
 
 #: the largest summed global df of a query's terms whose runs are read
 #: and decoded on the driver; above it the top-k and the count run
@@ -77,11 +87,62 @@ COUNT_SCHEMA = "total long, max_tf long"
 LOCAL_MAX_DF = 5_000_000
 
 
-def _empty_result(spark: SparkSession) -> DataFrame:
-    """A zero-row ``RESULT_SCHEMA`` frame whose ``collect`` runs no
-    Spark job: a limit-0 local relation (``createDataFrame([])`` and a
-    zero-row pandas frame each launch one job)."""
-    return spark.createDataFrame([(0, 0.0, 0)], RESULT_SCHEMA).limit(0)
+class DriverTopK:
+    """A top-k computed on the driver: the ``RESULT_SCHEMA`` columns as
+    numpy arrays, already merged across salts and ordered (bm25 desc,
+    doc_id asc).
+
+    ``columns`` and :meth:`collect` answer from the arrays with no JVM
+    call — wrapping k rows into a Spark frame only to collect them back
+    into the process that computed them costs more than the whole
+    driver top-k.  Any other DataFrame attribute builds the Spark frame
+    once (an Arrow local relation, no Spark job) and delegates to it,
+    so callers keep the whole DataFrame surface."""
+
+    def __init__(self, spark: SparkSession, doc_id, bm25, tf_sum):
+        self._spark = spark
+        self._cols = (doc_id, bm25, tf_sum)
+        self._df: DataFrame | None = None
+
+    @property
+    def columns(self) -> list[str]:
+        return RESULT_SCHEMA.fieldNames()
+
+    def collect(self) -> list[Row]:
+        """The rows as ``Row(doc_id, bm25, tf_sum)`` of Python ints and
+        floats, as a Spark frame's ``collect`` gives them."""
+        return [_ResultRow(*r) for r in zip(*(c.tolist() for c in self._cols))]
+
+    def _frame(self) -> DataFrame:
+        if self._df is None:
+            import pyarrow as pa
+
+            self._df = self._spark.createDataFrame(
+                pa.table(dict(zip(self.columns, self._cols))), RESULT_SCHEMA
+            )
+        return self._df
+
+    def __getattr__(self, name):
+        # reached only for names the instance lacks: its own fields
+        # before __init__ ran (copy, unpickle) and dunder probes must not
+        # build a frame, or recurse into _frame()
+        if name in ("_spark", "_cols", "_df") or name.startswith("__"):
+            raise AttributeError(name)
+        return getattr(self._frame(), name)
+
+    def __getitem__(self, item):
+        return self._frame()[item]
+
+
+def _merge_topk(spark: SparkSession, outs: list[dict], k: int) -> DriverTopK:
+    """The top ``k`` of the per-salt top-k columns ``outs``: bm25 desc,
+    then doc_id asc (a doc id lives in one salt, so no tie is left)."""
+    doc_id, bm25, tf_sum = (
+        np.concatenate([o[c] for o in outs] or [np.empty(0, t)])
+        for c, t in (("doc_id", np.int64), ("bm25", np.float64), ("tf_sum", np.int64))
+    )
+    top = np.lexsort((doc_id, -bm25))[:k]
+    return DriverTopK(spark, doc_id[top], bm25[top], tf_sum[top])
 
 
 def _runs_on_driver(plan: PlannedQuery, stats: dict) -> bool:
@@ -256,7 +317,6 @@ class SearchEngine:
         cached instead and the scorer filters by exact membership
         (repo-sized, bounded by the repo's own doc count)."""
         if repo not in self._repo_scope_cache:
-            import numpy as np
             import pyarrow.compute as pc
             import pyarrow.dataset as pads
 
@@ -343,18 +403,22 @@ class SearchEngine:
         mode: str = "and",
         repo: str | None = None,
         planned: tuple | None = None,
-    ) -> DataFrame:
-        """Top-k as a DataFrame (doc_id, bm25, tf_sum), deterministic
-        order (bm25 desc, doc_id asc).  It runs on the driver while the
-        query terms' summed df is within ``LOCAL_MAX_DF`` and distributed
-        above it (module docstring).  ``planned`` lets callers reuse an
+    ) -> DataFrame | DriverTopK:
+        """Top-k (doc_id, bm25, tf_sum), deterministic order (bm25 desc,
+        doc_id asc).  It runs on the driver while the query terms' summed
+        df is within ``LOCAL_MAX_DF`` and returns a :class:`DriverTopK`,
+        whose ``collect`` and ``columns`` make no JVM call; above the cap
+        it runs distributed and returns the Spark plan (module
+        docstring).  A query that matches nothing by its plan alone gives
+        an empty :class:`DriverTopK` on either executor.  Both support
+        every DataFrame method.  ``planned`` lets callers reuse an
         already-computed ``plan()`` result (one term-dictionary read per
         request, not one per phase — the p50 path)."""
         plan, stats, (n_docs, avgdl) = (
             planned if planned is not None else self.plan(query, repo)
         )
         if not plan.ordered or (mode == "and" and plan.empty):
-            return _empty_result(self.spark)
+            return _merge_topk(self.spark, [], k)
         kernel = partial(
             _score_salt,
             idfs=self._idf_map(plan, n_docs),
@@ -367,13 +431,7 @@ class SearchEngine:
         if not _runs_on_driver(plan, stats):
             per_salt = self._spark_salts(plan, repo, kernel, RESULT_SCHEMA)
             return per_salt.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
-        outs = [o for o in self._local_salts(plan, repo, kernel) if o["doc_id"].size]
-        if not outs:
-            return _empty_result(self.spark)
-        top = pd.DataFrame(
-            {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
-        ).sort_values(["bm25", "doc_id"], ascending=[False, True], kind="mergesort")
-        return self.spark.createDataFrame(top.head(k), RESULT_SCHEMA)
+        return _merge_topk(self.spark, self._local_salts(plan, repo, kernel), k)
 
     def _idf_map(self, plan: PlannedQuery, n_docs: int) -> dict[str, float]:
         return {t: bm25_idf(df, n_docs) for t, df, _ in plan.ordered}
@@ -496,7 +554,8 @@ class SearchEngine:
             return {"result": True, "count": 0, "data": []}
         k = offset + limit
         df = self.search_df(query, k=k, mode=mode, repo=repo, planned=planned)
-        rows = df.collect() if isinstance(df, DataFrame) else list(df.itertuples())
+        # perfbench's traced search_df hands back its collected rows as pandas
+        rows = list(df.itertuples()) if isinstance(df, pd.DataFrame) else df.collect()
         # count AND the relevance normalizer come from ONE matched-set
         # scan: the reference computes maxRank over ALL matched docs
         # BEFORE pagination (SearchServiceImpl.java:149-151), so a doc's

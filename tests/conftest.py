@@ -41,6 +41,18 @@ def with_jobs(spark, fn, *args, **kwargs):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def disjoint_rare_terms(oracle_index) -> str:
+    """Two df-1 terms in different docs: each is in the dictionary, so
+    the AND query reaches the top-k kernel, which finds no doc."""
+    rare = sorted(
+        (t, next(iter(p))) for t, p in oracle_index.postings.items()
+        if len(p) == 1 and t.startswith("sym")
+    )
+    a, doc_a = rare[0]
+    b = next(t for t, doc in rare if doc != doc_a)
+    return f"{a} {b}"
+
+
 def run_term_totals(spark, index_dir) -> dict:
     """{term: (df, cf)} of an index: its runs' ``df_run`` and ``cf_run``
     summed per term, by Spark (independent of the engine's reads)."""

@@ -21,7 +21,7 @@ from pyspark.errors import AnalysisException
 
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.query.engine import SearchEngine
-from tests.conftest import CFG, with_jobs
+from tests.conftest import CFG, disjoint_rare_terms, with_jobs
 
 COLUMNS = ["repo", "path", "commit", "lang", "content"]
 QUERIES = [
@@ -189,20 +189,8 @@ def test_table_source_without_content_column_raises(
 # empty top-k
 # ---------------------------------------------------------------------------
 
-def _disjoint_rare_terms(oracle_index) -> str:
-    """Two df-1 terms in different docs: each is in the dictionary, so
-    the AND query reaches the top-k kernel, which finds no doc."""
-    rare = sorted(
-        (t, next(iter(p))) for t, p in oracle_index.postings.items()
-        if len(p) == 1 and t.startswith("sym")
-    )
-    a, doc_a = rare[0]
-    b = next(t for t, doc in rare if doc != doc_a)
-    return f"{a} {b}"
-
-
 def test_empty_topk_collects_without_spark_job(spark, engine, oracle_index):
-    disjoint = _disjoint_rare_terms(oracle_index)
+    disjoint = disjoint_rare_terms(oracle_index)
     plan = engine.plan(disjoint)[0]
     assert len(plan.ordered) == 2 and not plan.empty
     for q in ("ghostterm9999", disjoint):

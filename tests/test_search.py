@@ -2,7 +2,8 @@
 tolerance 1e-6 (order exact with doc_id tie-break), Σtf reference
 relevance, executor equivalence (driver == distributed, pruned ==
 unpruned), pre-pagination counts on both executors, the executor choice
-by the query terms' summed df, pagination, guards (SURVEY.md §5.4/5.6)."""
+by the query terms' summed df, a driver top-k that builds no Spark
+frame, pagination, guards (SURVEY.md §5.4/5.6)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import os
 
 import pytest
 
-from tests.conftest import CFG, EXECUTORS, distributed, with_jobs
+from tests.conftest import CFG, EXECUTORS, disjoint_rare_terms, distributed, with_jobs
 from tests.oracle import oracle_search, oracle_tf_relevance
 
 # Query set (FIXTURES.md §2 composition): rare terms, identifiers,
@@ -375,6 +376,89 @@ def test_executor_follows_summed_df(spark, engine, monkeypatch):
         )
         assert forced == page and jobs > 0, mode
         monkeypatch.undo()
+
+
+def test_search_goes_through_shadowed_search_df(spark, index_dir, engine):
+    """perfbench's traced engine (``perfbench/workloads.py::open_engine``)
+    shadows ``search_df`` on the instance, collects its result and hands
+    the rows back as a pandas frame: ``search()`` must call that shadow
+    whenever its plan reaches the top-k and answer exactly as an
+    unshadowed engine, on both executors."""
+    import pandas as pd
+
+    from searchengine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_dir)
+    search_df, calls = eng.search_df, []
+
+    def shadow(*a, **kw):
+        calls.append(a)
+        df = search_df(*a, **kw)
+        return pd.DataFrame([r.asDict() for r in df.collect()], columns=df.columns)
+
+    eng.search_df = shadow
+    for on_executor in EXECUTORS:
+        with on_executor():
+            for query in QUERIES:
+                for mode in ("and", "or"):
+                    reaches_topk = not (mode == "and" and engine.plan(query)[0].empty)
+                    for with_count in (True, False):
+                        n = len(calls)
+                        got = eng.search(query, limit=5, mode=mode, with_count=with_count)
+                        want = engine.search(query, limit=5, mode=mode, with_count=with_count)
+                        assert got == want, (query, mode, with_count, on_executor)
+                        assert len(calls) == n + reaches_topk, (query, mode)
+
+
+def test_driver_topk_builds_no_jvm_frame(spark, engine, oracle_index, monkeypatch):
+    """Under the cap the top-k never becomes a Spark frame: with
+    ``createDataFrame`` refused, ``search()`` (count and snippets on and
+    off, repo-scoped, OR, empty top-k) and ``search_df``'s ``collect`` and
+    ``columns`` run no Spark job.  Any other DataFrame method builds the
+    frame lazily and equals the distributed executor's frame."""
+    from searchengine_spark.query.engine import DriverTopK
+
+    repo = sorted({d[0] for d in oracle_index.docs})[0]
+    empty = disjoint_rare_terms(oracle_index)
+
+    def refuse(*a, **kw):
+        raise AssertionError("the driver top-k built a Spark frame")
+
+    monkeypatch.setattr(spark, "createDataFrame", refuse)
+    requests = [
+        ("index search", {}),
+        ("index search", {"with_count": False, "with_snippets": False}),
+        ("index search", {"with_count": False}),
+        ("index search", {"with_snippets": False}),
+        ("index", {"repo": repo}),
+        ("index search", {"mode": "or"}),
+        (empty, {}),
+    ]
+    for query, kw in requests:
+        res, jobs = with_jobs(spark, engine.search, query, **kw)
+        assert res["result"] is True and jobs == 0, (query, kw)
+        assert bool(res["data"]) == (query != empty), (query, kw)
+    for query in ("index search", "ghostterm9999", empty):
+        df = engine.search_df(query, k=10)
+        rows, jobs = with_jobs(spark, df.collect)
+        assert jobs == 0 and bool(rows) == (query == "index search"), query
+        assert df.columns == ["doc_id", "bm25", "tf_sum"]
+        assert all(type(r["doc_id"]) is int and type(r["bm25"]) is float
+                   and type(r["tf_sum"]) is int for r in rows)
+    monkeypatch.undo()
+
+    for query, mode in (("index search", "or"), ("def return", "and"), (empty, "and")):
+        local = engine.search_df(query, k=10, mode=mode)
+        assert isinstance(local, DriverTopK)
+        with distributed():
+            spread = engine.search_df(query, k=10, mode=mode)
+        assert local.where("tf_sum > 1").count() == spread.where("tf_sum > 1").count()
+        got, want = (
+            [(r["doc_id"], r["tf_sum"], r["bm25"]) for r in df.orderBy("doc_id").collect()]
+            for df in (local, spread)
+        )
+        assert [g[:2] for g in got] == [w[:2] for w in want], (query, mode)
+        assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-9)
 
 
 # ---------------------------------------------------------------------------
